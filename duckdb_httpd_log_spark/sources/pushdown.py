@@ -13,7 +13,7 @@ col("status") == 500)`` — so the optimization needs no user opt-in:
    longer expose ``expr()`` in Spark 4) and extracts substring needles
    that are SOUND: `typed-predicate holds ⇒ raw line contains needle`;
 3. on success the scan is re-issued with the needles pushed below the
-   parse (reader._read_fast applies them to the raw ``value`` column),
+   parse (reader._parse_lines applies them to the raw ``value`` column),
    and the original typed predicate still runs on top — so false
    positives of the byte scan are removed and the result is
    value-identical to the un-pushed plan, only cheaper: lines failing

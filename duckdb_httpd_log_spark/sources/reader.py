@@ -11,7 +11,9 @@ which whole-stage-codegen compiles into a single JVM loop. Parallelism is
 per file split (plain text additionally splits by byte range — strictly
 more parallel than the reference's one-thread-per-file model,
 `src/httpd_log_multi_file_info.cpp:236-249`; gzip stays one-partition-
-per-file, identical granularity).
+per-file, identical granularity). The Catalyst expressions of that parse
+(the parse program) are built once per format and mode per process
+(``_program``); later binds and every pushdown re-plan reuse them.
 
 Raw mode (`raw=True`) needs deterministic per-file `line_number`s that
 count empty and unparseable lines (`src/httpd_log_file_reader.cpp:377-392`).
@@ -29,9 +31,10 @@ import gzip as _gzip
 import hashlib as _hashlib
 import io
 import os
-from typing import Optional, Sequence, Union
+import threading
+from typing import NamedTuple, Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import exprs as X
@@ -49,6 +52,7 @@ from .logformat import (
     generate_schema,
     parse_format_string,
 )
+from .pushdown import LineFilterableFrame, apply_cnf
 
 PathLike = Union[str, Sequence[str]]
 
@@ -323,6 +327,104 @@ def _projection(parsed: ParsedFormat, ok, parts) -> tuple[list, list]:
     return pre, cols
 
 
+class _Program(NamedTuple):
+    """The parse program: unresolved Catalyst expressions that turn a
+    line frame into the schema's columns. ``head`` projects the line
+    frame (fast path: the barrier-wrapped match ``__m`` next to
+    ``__f``), ``keep`` drops unparsed rows (fast path only), ``pre``
+    holds the %r token columns (see _projection) and ``cols`` the output
+    columns in schema order."""
+
+    head: list
+    keep: Optional[Column]
+    pre: list
+    cols: list
+
+
+def _compile_program(parsed: ParsedFormat, raw: bool) -> _Program:
+    """Fast path (raw=False) over (value, __f): the match result is
+    materialized once behind a barrier so the drop-unparsed Filter and
+    the typed Projection share ONE regex execution per line (without
+    it, predicate pushdown inlines the regexp into both operators —
+    measured ~15% slower). Raw mode over (log_file, line_number, line)
+    keeps every row and flags the unparsed ones."""
+    if raw:
+        ok, parts = (
+            X.mark_and_split(F.col("line"), parsed.regex_pattern, parsed.num_capture_groups)
+            if parsed.fields
+            else (F.lit(False), None)
+        )
+        pre, cols = _projection(parsed, ok, parts)
+        cols += [
+            F.col("log_file"),
+            F.col("line_number"),
+            (~ok).alias("parse_error"),
+            F.col("line").alias("raw_line"),
+        ]
+        return _Program([], None, pre, cols)
+    if not parsed.fields:
+        return _Program([], F.lit(False), [], [F.col("__f").alias("log_file")])
+    marked = X.materialization_barrier(
+        X.marked_expr(F.col("value"), parsed.regex_pattern, parsed.num_capture_groups)
+    )
+    ok, parts = X.ok_and_parts(F.col("__m"), parsed.num_capture_groups)
+    pre, cols = _projection(parsed, ok, parts)
+    cols.append(F.col("__f").alias("log_file"))
+    return _Program([marked.alias("__m"), F.col("__f")], ok, pre, cols)
+
+
+# Compiled programs, least recently used first. Building one costs about
+# a thousand py4j round trips, which dominated every interactive query's
+# bind and pushdown re-plan. Entries are unresolved expressions only (no
+# data, no plan, no Spark cache entry), valid in any session of the JVM
+# that built them.
+_PROGRAMS: dict = {}
+_PROGRAMS_MAX = 32
+_PROGRAMS_LOCK = threading.Lock()
+
+
+def _program(parsed: ParsedFormat, raw: bool) -> _Program:
+    """The compiled program for ``parsed`` in the given mode. The key is
+    the WHOLE format — its dataclass repr carries every modifier,
+    strftime layout and column name, which the regex alone does not
+    (%T and %{ms}T share one) — plus the live py4j gateway, so a
+    relaunched JVM never sees another JVM's expressions."""
+    from pyspark import SparkContext
+
+    key = (repr(parsed), raw, SparkContext._gateway)
+    with _PROGRAMS_LOCK:
+        prog = _PROGRAMS.pop(key, None) or _compile_program(parsed, raw)
+        _PROGRAMS[key] = prog  # (re)inserted as the most recently used
+        if len(_PROGRAMS) > _PROGRAMS_MAX:
+            del _PROGRAMS[next(iter(_PROGRAMS))]
+    return prog
+
+
+def _apply_program(df: DataFrame, prog: _Program) -> DataFrame:
+    head, keep, pre, cols = prog
+    if head:
+        df = df.select(*head)
+    if keep is not None:
+        df = df.filter(keep)
+    if pre:
+        df = df.select("*", *pre)
+    return df.select(*cols)
+
+
+def _parse_lines(
+    lines: DataFrame, prog: _Program, line_filter: Optional[str] = None, cnf=None
+) -> DataFrame:
+    """Typed rows of a (value, __f) line frame: empty lines and lines
+    failing the raw-line needles (``line_filter``, the pushdown's CNF)
+    are dropped BEFORE the parse regex runs."""
+    df = lines.filter(F.length("value") > 0)
+    if line_filter:
+        df = df.filter(F.col("value").contains(line_filter))
+    if cnf:
+        df = apply_cnf(df, cnf)
+    return _apply_program(df, prog)
+
+
 def _attach_hive_cols(df: DataFrame, keys: list[str]) -> DataFrame:
     """Attach hive `key=value` directory segments of ``log_file`` as
     string columns. Shared by the scan projection AND the tiny
@@ -383,7 +485,6 @@ def read_httpd_log(
     raw: bool = False,
     hive_partitioning: bool = False,
     line_filter: Optional[str] = None,
-    _pre_cnf=None,
 ) -> DataFrame:
     """Parse Apache httpd access logs into a typed DataFrame.
 
@@ -414,62 +515,43 @@ def read_httpd_log(
     col("status") == 500)`` derives a sound Contains needle from the
     typed predicate, re-issues the scan with it below the parse regex,
     and re-applies the exact predicate on top — value-identical, but
-    non-matching lines never reach the regex. ``_pre_cnf`` is that
-    machinery's internal re-entry argument (AND of OR-needle groups)."""
+    non-matching lines never reach the regex. The parse program is
+    compiled once per format and mode per process, and those re-plans
+    reuse this bind's program and text scan."""
     files = expand_paths(path, spark)
     parsed, _ftype, raw_mode = resolve_format(files, format_type, format_str, conf, raw, spark)
     if not files:
         raise ValueError("No files found for httpd log reading")
     schema = generate_schema(parsed, raw_mode)
+    hive_keys = _hive_partition_keys(files) if hive_partitioning else []
+    names = {name for name, _t in schema}
+    for key in hive_keys:
+        if key in names:
+            raise ValueError(
+                f"hive_partitioning=True but partition key '{key}' collides "
+                "with a log schema column"
+            )
+    prog = _program(parsed, raw_mode)
 
     if raw_mode:
-        df = _read_raw(spark, files, parsed)
-    else:
-        df = _read_fast(spark, files, parsed, line_filter=line_filter, pre_cnf=_pre_cnf)
-
-    # pin exact column order from the schema contract
-    df = df.select(*[name for name, _t in schema])
-
-    hive_keys: list[str] = []
-    if hive_partitioning:
-        hive_keys = _hive_partition_keys(files)
-        schema_cols = set(df.columns)
-        for key in hive_keys:
-            if key in schema_cols:
-                raise ValueError(
-                    f"hive_partitioning=True but partition key '{key}' collides "
-                    "with a log schema column"
-                )
-        df = _attach_hive_cols(df, hive_keys)
-
-    if raw_mode or _pre_cnf is not None:
-        return df
+        return _attach_hive_cols(_read_raw(spark, files, prog), hive_keys)
 
     # fast mode: wrap so a typed filter directly on the result can be
     # turned into a raw-line Contains pre-filter (sources/pushdown.py).
     # Verbatim columns = regex captures emitted unchanged: strings
     # except %X's remapped values; int/bigint digit tokens. Timestamps,
     # intervals, booleans, log_file, and hive keys are excluded.
-    from .pushdown import LineFilterableFrame
+    lines = _fast_lines_df(spark, files)
 
-    def _rebuild(cnf, subset=None):
-        # re-plan over the BIND-TIME file list (optionally a PRUNED
-        # subset of it, when log_file-only conjuncts ruled whole files
-        # out), not the original pattern: a re-expanded glob could pick
-        # up files created since the read, silently making the pushed
-        # plan see MORE data than the naive plan it must be
+    def _rebuild(cnf=None, subset=None):
+        # re-plan over the BIND-TIME text scan (or a scan of a PRUNED
+        # subset of its files, when file-level conjuncts ruled whole
+        # files out), not the original pattern: a re-expanded glob
+        # could pick up files created since the read, silently making
+        # the pushed plan see MORE data than the naive plan it must be
         # value-identical to
-        return read_httpd_log(
-            spark,
-            files if subset is None else subset,
-            format_type=format_type,
-            format_str=format_str,
-            conf=conf,
-            raw=raw,
-            hive_partitioning=hive_partitioning,
-            line_filter=line_filter,
-            _pre_cnf=cnf if cnf else [],
-        )
+        scan = lines if subset is None else _fast_lines_df(spark, subset)
+        return _attach_hive_cols(_parse_lines(scan, prog, line_filter, cnf), hive_keys)
 
     _mt_cache: list = []  # [(max_mtime_or_None, wall_time_of_stat)]
     _mt_stale: list = []  # non-empty once a refresh fired: stat fresh from then on
@@ -572,7 +654,7 @@ def read_httpd_log(
         return _per_file_mt_cache[0]
 
     return LineFilterableFrame(
-        df,
+        _rebuild(),
         _rebuild,
         pushdown_context(
             parsed, schema, hi_us_fn=_mtime_hi_us, epoch_min_fields=epoch_min_fields
@@ -733,14 +815,6 @@ def pushdown_context(
     )
 
 
-def _parse_columns(parsed: ParsedFormat, value):
-    if parsed.fields:
-        ok, parts = X.mark_and_split(value, parsed.regex_pattern, parsed.num_capture_groups)
-    else:
-        ok, parts = F.lit(False), F.array().cast("array<string>")
-    return ok, parts
-
-
 def _fast_lines_df(spark: SparkSession, files: list[str]) -> DataFrame:
     """DataFrame[(value, __f)] of raw lines: the splittable text scan for
     extension-routed files, unioned with a streamed-decompress branch
@@ -777,44 +851,6 @@ def _fast_lines_df(spark: SparkSession, files: list[str]) -> DataFrame:
     for d in dfs[1:]:
         df = df.unionByName(d)
     return df
-
-
-def _read_fast(
-    spark: SparkSession,
-    files: list[str],
-    parsed: ParsedFormat,
-    line_filter: Optional[str] = None,
-    pre_cnf=None,
-) -> DataFrame:
-    """Splittable fast path (raw=False): drops unparseable/empty lines.
-
-    The match result is materialized once behind a barrier so the
-    drop-unparsed Filter and the typed Projection share ONE regex
-    execution per line (without it, predicate pushdown inlines the
-    regexp into both operators — measured ~15% slower)."""
-    df = _fast_lines_df(spark, files)
-    df = df.filter(F.length("value") > 0)
-    if line_filter:
-        # byte-scan pre-filter BEFORE the parse regex (see read_httpd_log)
-        df = df.filter(F.col("value").contains(line_filter))
-    if pre_cnf:
-        # derived needles from the automatic pushdown (sources/pushdown.py)
-        from .pushdown import apply_cnf
-
-        df = apply_cnf(df, pre_cnf)
-    if not parsed.fields:
-        return df.filter(F.lit(False)).select(F.col("__f").alias("log_file"))
-    marked = X.materialization_barrier(
-        X.marked_expr(F.col("value"), parsed.regex_pattern, parsed.num_capture_groups)
-    )
-    df = df.select(marked.alias("__m"), "__f")
-    ok, parts = X.ok_and_parts(F.col("__m"), parsed.num_capture_groups)
-    pre, cols = _projection(parsed, ok, parts)
-    cols.append(F.col("__f").alias("log_file"))
-    out = df.filter(ok)
-    if pre:
-        out = out.select("__m", "__f", *pre)
-    return out.select(*cols)
 
 
 _RAW_BATCH_ROWS = 8192
@@ -940,7 +976,7 @@ def _raw_lines_df_jvm(spark: SparkSession, files: list[str]) -> DataFrame:
     )
 
 
-def _read_raw(spark: SparkSession, files: list[str], parsed: ParsedFormat) -> DataFrame:
+def _read_raw(spark: SparkSession, files: list[str], prog: _Program) -> DataFrame:
     """Raw mode: per-file line numbers (empty + error lines advance the
     counter; empty lines emit no row; error rows keep parse_error=true and
     the raw text).
@@ -963,17 +999,4 @@ def _read_raw(spark: SparkSession, files: list[str], parsed: ParsedFormat) -> Da
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-
-    ok, parts = _parse_columns(parsed, F.col("line"))
-    pre, cols = _projection(parsed, ok, parts)
-    cols.extend(
-        [
-            F.col("log_file"),
-            F.col("line_number"),
-            (~ok).alias("parse_error"),
-            F.col("line").alias("raw_line"),
-        ]
-    )
-    if pre:
-        df = df.select("*", *pre)
-    return df.select(*cols)
+    return _apply_program(df, prog)

@@ -24,9 +24,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import fround
-from ..sources import exprs as X
-from ..sources.logformat import COMBINED_FORMAT, COMMON_FORMAT, parse_format_string
-from ..sources.reader import _normalize_file_uri, _projection
+from ..sources.logformat import (
+    COMBINED_FORMAT,
+    COMMON_FORMAT,
+    generate_schema,
+    parse_format_string,
+)
+from ..sources.pushdown import LineFilterableFrame, stream_glob_for
+from ..sources.reader import _normalize_file_uri, _parse_lines, _program, pushdown_context
 
 
 def read_httpd_log_stream(
@@ -35,7 +40,6 @@ def read_httpd_log_stream(
     format_type: Optional[str] = None,
     format_str: Optional[str] = None,
     line_filter: Optional[str] = None,
-    _pre_cnf=None,
     **options: str,
 ) -> DataFrame:
     """Streaming httpd log source. `path` is a directory watched for new
@@ -52,8 +56,9 @@ def read_httpd_log_stream(
     The result additionally performs the AUTOMATIC pushdown (exactly
     like the batch fast path): a typed ``.filter(...)`` placed directly
     on it derives sound raw-line needles (sources/pushdown.py) and
-    re-plans the stream with them below the regex; ``_pre_cnf`` is that
-    machinery's internal re-entry argument."""
+    re-plans the stream with them below the regex. The parse is the
+    batch fast path's compiled program, shared with batch reads of the
+    same format."""
     if format_str is None:
         if format_type == "combined":
             format_str = COMBINED_FORMAT
@@ -62,35 +67,9 @@ def read_httpd_log_stream(
         else:
             raise ValueError(f"Invalid format_type '{format_type}' for streaming read")
     parsed = parse_format_string(format_str)
+    prog = _program(parsed, False)
 
-    df = spark.readStream.options(**options).text(path)
-    df = df.filter(F.length("value") > 0)
-    if line_filter:
-        df = df.filter(F.col("value").contains(line_filter))
-    if _pre_cnf:
-        from ..sources.pushdown import apply_cnf
-
-        df = apply_cnf(df, _pre_cnf)
-    # same single-regex-execution shape as the batch fast path
-    marked = X.materialization_barrier(
-        X.marked_expr(F.col("value"), parsed.regex_pattern, parsed.num_capture_groups)
-    )
-    df = df.select(marked.alias("__m"), _normalize_file_uri(F.input_file_name()).alias("__f"))
-    ok, parts = X.ok_and_parts(F.col("__m"), parsed.num_capture_groups)
-    pre, cols = _projection(parsed, ok, parts)
-    cols.append(F.col("__f").alias("log_file"))
-    out = df.filter(ok)
-    if pre:
-        out = out.select("__m", "__f", *pre)
-    out = out.select(*cols)
-    if _pre_cnf is not None:
-        return out
-
-    from ..sources.logformat import generate_schema
-    from ..sources.pushdown import LineFilterableFrame
-    from ..sources.reader import pushdown_context
-
-    def _rebuild(cnf, glob=None):
+    def _scan(cnf=None, glob=None):
         opts = dict(options)
         if glob is not None:
             # per-trigger listing prune (r12 verdict item 5): the file
@@ -100,15 +79,10 @@ def read_httpd_log_stream(
             # path is a per-file constant (unlike time bounds, which
             # stay batch-only: future files arrive with later mtimes).
             opts["pathGlobFilter"] = glob
-        return read_httpd_log_stream(
-            spark,
-            path,
-            format_type=format_type,
-            format_str=format_str,
-            line_filter=line_filter,
-            _pre_cnf=cnf,
-            **opts,
+        lines = spark.readStream.options(**opts).text(path).select(
+            "value", _normalize_file_uri(F.input_file_name()).alias("__f")
         )
+        return _parse_lines(lines, prog, line_filter, cnf)
 
     # same epoch cost gate as the batch reader; no hi_us_fn (a stream's
     # future files arrive with later mtimes — no sound bind-time bound)
@@ -117,8 +91,6 @@ def read_httpd_log_stream(
     epoch_min_fields = int(
         spark.conf.get("spark.graft.pushdown.epochMinFields", "6")
     )
-    from ..sources.pushdown import stream_glob_for
-
     # a user-supplied pathGlobFilter must not be overwritten (glob
     # intersection isn't expressible as one glob), and recursive lookup
     # puts subdirectory text between the watch dir and the filename
@@ -130,8 +102,8 @@ def read_httpd_log_stream(
         else (lambda cond: stream_glob_for(cond, path))
     )
     return LineFilterableFrame(
-        out,
-        _rebuild,
+        _scan(),
+        _scan,
         pushdown_context(
             parsed, generate_schema(parsed, False), epoch_min_fields=epoch_min_fields
         ),
