@@ -8,6 +8,12 @@ reference's converters treat junk as NULL, never error).
 Tuned for scale: AQE on (runtime re-planning, skew-join splitting,
 partition coalescing), broadcast threshold sized for dimension tables,
 Arrow for any pandas boundary.
+
+Tuned for query-build latency: PySpark's DataFrame debugging is off.
+When on (its default) every Column function ships its Python call site
+to the JVM, a few extra py4j round trips per expression (and an IPython
+import on the first); an interactive log query builds hundreds. It
+applies only to a session this process creates.
 """
 
 from __future__ import annotations
@@ -46,6 +52,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

@@ -70,7 +70,7 @@ def _eval_filter(f, v) -> bool:
 
 
 def _schema_ddl(schema: list[tuple[str, str]]) -> str:
-    return ", ".join(f"{name} {_SPARK_TYPES[t]}" for name, t in schema)
+    return ", ".join(f"{name} {_SPARK_TYPES[t].simpleString()}" for name, t in schema)
 
 
 def _parse_bool(v) -> bool:

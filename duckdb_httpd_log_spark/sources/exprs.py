@@ -57,32 +57,25 @@ def micros_to_interval(us: Column) -> Column:
     return us * F.expr(_MICROSECOND)
 
 
-def mark_and_split(value: Column, pattern: str, num_groups: int) -> tuple[Column, Column]:
-    """Run the line regex once; return (ok, parts).
-
-    ``ok`` is true when the line fully matched; ``parts`` is the array of
-    capture-group strings (1-based group i at parts[i-1]).
-    """
-    marked = marked_expr(value, pattern, num_groups)
-    return ok_and_parts(marked, num_groups)
-
-
-def marked_expr(value: Column, pattern: str, num_groups: int) -> Column:
-    """The single-pass match: rewrite a matching line to
-    ``\\x02<g1>\\x01<g2>…``; a non-matching line passes through unchanged."""
+def match_tokens(value: Column, pattern: str, num_groups: int) -> Column:
+    """The single-pass match, split once: a matching line is rewritten to
+    ``\\x02<g1>\\x01<g2>…`` and split on ``\\x01``; a non-matching line
+    passes through the replace unchanged. Group 1 keeps the sentinel
+    prefix (see group_value)."""
     repl = SENTINEL + SEP.join(f"${i}" for i in range(1, num_groups + 1))
     anchored = pattern + "$" if pattern.startswith("^") else "^" + pattern + "$"
-    return F.regexp_replace(value, anchored, repl)
+    return F.split(F.regexp_replace(value, anchored, repl), SEP, -1)
 
 
-def ok_and_parts(marked: Column, num_groups: int) -> tuple[Column, Column]:
-    parts = F.split(F.substring(marked, 2, 2147483646), SEP, -1)
-    # The part-count guard rejects lines whose captured text contains a
-    # literal \x01 (which would shift every later column) and lines that
-    # didn't match but happen to start with \x02 — both degrade to
-    # parse_error/dropped instead of silently mis-typed columns.
-    ok = (F.substring(marked, 1, 1) == F.lit(SENTINEL)) & (F.size(parts) == F.lit(num_groups))
-    return ok, parts
+def match_ok(parts: Column, num_groups: int) -> Column:
+    """True when the line fully matched. The part-count guard rejects
+    lines whose captured text contains a literal \\x01 (which would
+    shift every later column) and lines that didn't match but happen to
+    start with \\x02 — both degrade to parse_error/dropped instead of
+    silently mis-typed columns."""
+    return (F.substring(F.element_at(parts, 1), 1, 1) == F.lit(SENTINEL)) & (
+        F.size(parts) == F.lit(num_groups)
+    )
 
 
 def materialization_barrier(col: Column) -> Column:
@@ -123,6 +116,10 @@ def materialization_barrier(col: Column) -> Column:
 
 
 def group_value(parts: Column, capture_index: int) -> Column:
+    """Capture group ``capture_index`` (1-based) of match_tokens' array;
+    group 1 drops the sentinel its token carries."""
+    if capture_index == 1:
+        return F.substring(F.element_at(parts, 1), 2, 2147483646)
     return F.element_at(parts, capture_index)
 
 

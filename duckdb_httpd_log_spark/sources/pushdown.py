@@ -13,7 +13,7 @@ col("status") == 500)`` — so the optimization needs no user opt-in:
    longer expose ``expr()`` in Spark 4) and extracts substring needles
    that are SOUND: `typed-predicate holds ⇒ raw line contains needle`;
 3. on success the scan is re-issued with the needles pushed below the
-   parse (reader._parse_lines applies them to the raw ``value`` column),
+   parse (reader._line_keep applies them to the raw ``value`` column),
    and the original typed predicate still runs on top — so false
    positives of the byte scan are removed and the result is
    value-identical to the un-pushed plan, only cheaper: lines failing
@@ -81,8 +81,10 @@ from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable, List, Optional, Tuple, Union
 
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame
 
@@ -830,8 +832,8 @@ def derive_needles(e, ctx: PushdownContext) -> Optional[Needles]:
     return None
 
 
-def apply_cnf(df: DataFrame, cnf: Needles) -> DataFrame:
-    """AND of OR-of-needles over the raw ``value`` column.
+def cnf_predicate(cnf: Needles, value: Column) -> Column:
+    """AND of OR-of-needles over the raw line column ``value``.
 
     Plain needles are case-sensitive Contains; a group's ("ci", s)
     needles fold into ONE case-insensitive RLike alternation of
@@ -839,20 +841,14 @@ def apply_cnf(df: DataFrame, cnf: Needles) -> DataFrame:
     (avoids the per-line lowered copy) and per-case-variant contains."""
     import re as _re
 
-    for group in cnf:
-        pred = None
-        for n in group:
-            if isinstance(n, str):
-                c = F.col("value").contains(n)
-                pred = c if pred is None else (pred | c)
+    def any_of(group) -> Column:
+        preds = [value.contains(n) for n in group if isinstance(n, str)]
         ci = [n[1] for n in group if not isinstance(n, str)]
         if ci:
-            c = F.col("value").rlike(
-                "(?i)" + "|".join(_re.escape(s) for s in ci)
-            )
-            pred = c if pred is None else (pred | c)
-        df = df.filter(pred)
-    return df
+            preds.append(value.rlike("(?i)" + "|".join(_re.escape(s) for s in ci)))
+        return reduce(lambda a, b: a | b, preds)
+
+    return reduce(lambda a, b: a & b, map(any_of, cnf))
 
 
 # Catalyst nodes whose value can differ between the scan query and the
@@ -1094,7 +1090,9 @@ class LineFilterableFrame(DataFrame):
     skipped) and the raw-line Contains pushdown (non-matching lines
     never reach the parse regex). Every derived transformation returns
     a plain DataFrame, so the pushdown applies exactly where it is
-    sound: predicates placed directly on the scan result."""
+    sound: predicates placed directly on the scan result. Its own plan
+    (``rebuild()``) is built on first use of ``_jdf``; ``filter``
+    resolves predicates against a schema-only stand-in instead."""
 
     def __new__(cls, *args, **kwargs):
         # the classic DataFrame.__new__ hard-codes the (jdf, sql_ctx)
@@ -1103,7 +1101,8 @@ class LineFilterableFrame(DataFrame):
 
     def __init__(
         self,
-        df: DataFrame,
+        spark: SparkSession,
+        schema_json: str,
         rebuild: Callable[..., DataFrame],
         ctx: PushdownContext,
         file_pairs: Optional[list] = None,
@@ -1113,7 +1112,9 @@ class LineFilterableFrame(DataFrame):
         stream_glob_fn: Optional[Callable] = None,
         colstats_fp: Optional[str] = None,
     ):
-        super().__init__(df._jdf, df.sparkSession)
+        super().__init__(None, spark)  # no plan yet: see _jdf
+        self._lf_schema = schema_json
+        self._lf_stand_in: Optional[DataFrame] = None
         self._lf_rebuild = rebuild
         # streaming twin of the listing prune: cond -> pathGlobFilter
         # glob (or None); set only by the stream source, whose rebuild
@@ -1138,6 +1139,25 @@ class LineFilterableFrame(DataFrame):
         # (format regex + line_filter — see colstats.py); None disables
         # the colstats tier (e.g. streams)
         self._lf_colstats_fp = colstats_fp
+
+    @property
+    def _jdf(self):
+        if self._lf_jdf is None:
+            self._lf_jdf = self._lf_rebuild()._jdf
+        return self._lf_jdf
+
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:
+        self._lf_jdf = jdf
+
+    def _resolve(self, condition):
+        """``condition``'s analyzed Filter over an empty LocalRelation of
+        ``schema_json``, built on the first filter (three py4j calls)."""
+        if self._lf_stand_in is None:
+            jss = self.sparkSession._jsparkSession
+            jdf = jss.createDataFrame([], jss.parseDataType(self._lf_schema))
+            self._lf_stand_in = DataFrame(jdf, self.sparkSession)
+        return self._lf_stand_in.filter(condition)._jdf.queryExecution().analyzed()
 
     # skew slack for FILE-LEVEL mtime pruning: same 2-day contract the
     # mtime-closed open-above bound documents (README "+2-day margin")
@@ -1270,11 +1290,18 @@ class LineFilterableFrame(DataFrame):
         return [b for b, v in self._lf_files if v in keep]
 
     def filter(self, condition):  # type: ignore[override]
-        plain = super().filter(condition)
         try:
-            jplan = plain._jdf.queryExecution().analyzed()
+            jplan = self._resolve(condition)
+        except Exception:
+            jplan = None
+        if jplan is None:
+            # the stand-in cannot resolve it (a column handle of the
+            # built frame, a metadata column, or a user error): resolve
+            # on the real plan, which raises what a plain frame would
+            jplan = super().filter(condition)._jdf.queryExecution().analyzed()
+        try:
             if _simple(jplan) != "Filter":
-                return plain
+                return super().filter(condition)
             cond = jplan.condition()
             ctx = self._lf_ctx
             # margin is a session-zone property, so read it at filter
@@ -1298,7 +1325,7 @@ class LineFilterableFrame(DataFrame):
                 # no file can produce a passing row: empty result,
                 # Catalyst folds the always-false filter to an empty
                 # LocalRelation — nothing is listed, opened, or parsed
-                return plain.filter(F.lit(False))
+                return super().filter(F.lit(False))
             cnf = derive_needles(cond, ctx)
             glob = None
             if subset is None and self._lf_stream_glob_fn is not None:
@@ -1307,7 +1334,7 @@ class LineFilterableFrame(DataFrame):
                 # by the file stream source at EVERY trigger's listing
                 glob = self._lf_stream_glob_fn(cond)
             if not cnf and subset is None and glob is None:
-                return plain
+                return super().filter(condition)
             if subset is not None:
                 rebuilt = self._lf_rebuild(cnf or [], subset)
             elif glob is not None:
@@ -1318,6 +1345,6 @@ class LineFilterableFrame(DataFrame):
         except Exception:
             # introspection is best-effort: any surprise keeps the
             # unmodified (still-correct) plan
-            return plain
+            return super().filter(condition)
 
     where = filter

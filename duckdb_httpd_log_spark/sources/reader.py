@@ -32,10 +32,11 @@ import hashlib as _hashlib
 import io
 import os
 import threading
-from typing import NamedTuple, Optional, Sequence, Union
+from typing import Any, NamedTuple, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import exprs as X
 from . import fs as FS
@@ -52,7 +53,7 @@ from .logformat import (
     generate_schema,
     parse_format_string,
 )
-from .pushdown import LineFilterableFrame, apply_cnf
+from .pushdown import LineFilterableFrame, cnf_predicate
 
 PathLike = Union[str, Sequence[str]]
 
@@ -241,13 +242,21 @@ def resolve_format(
 # Execution plan assembly
 # ---------------------------------------------------------------------------
 _SPARK_TYPES = {
-    "string": "string",
-    "int": "int",
-    "bigint": "bigint",
-    "timestamp": "timestamp",
-    "interval": "interval day to second",
-    "boolean": "boolean",
+    "string": T.StringType(),
+    "int": T.IntegerType(),
+    "bigint": T.LongType(),
+    "timestamp": T.TimestampType(),
+    "interval": T.DayTimeIntervalType(T.DayTimeIntervalType.DAY, T.DayTimeIntervalType.SECOND),
+    "boolean": T.BooleanType(),
 }
+
+
+def _schema_json(schema: list, hive_keys: Sequence[str] = ()) -> str:
+    """JSON of the StructType a scan of ``schema`` (name, type) pairs
+    emits, plus the hive partition key columns."""
+    fields = [T.StructField(n, _SPARK_TYPES[t]) for n, t in schema]
+    fields += [T.StructField(k, T.StringType()) for k in hive_keys]
+    return T.StructType(fields).json()
 
 
 def _normalize_file_uri(col):
@@ -328,49 +337,64 @@ def _projection(parsed: ParsedFormat, ok, parts) -> tuple[list, list]:
 
 
 class _Program(NamedTuple):
-    """The parse program: unresolved Catalyst expressions that turn a
-    line frame into the schema's columns. ``head`` projects the line
-    frame (fast path: the barrier-wrapped match ``__m`` next to
-    ``__f``), ``keep`` drops unparsed rows (fast path only), ``pre``
-    holds the %r token columns (see _projection) and ``cols`` the output
-    columns in schema order."""
+    """The parse program: Catalyst expressions that turn a line frame
+    into the schema's columns, the lists held as JVM ``Seq[Column]`` so
+    each operator costs one py4j call. Fast path only: ``lines`` projects
+    a text scan to (value, __f), ``paths`` splits a path list (see
+    _fast_lines_df), ``head`` projects the barrier-wrapped match tokens
+    ``__m`` next to ``__f``, ``keep`` drops unparsed rows. ``pre`` adds
+    the %r token columns (see _projection), ``cols`` selects the output
+    columns in schema order; None marks a step that is skipped."""
 
-    head: list
+    lines: Any
+    paths: Any
+    head: Any
     keep: Optional[Column]
-    pre: list
-    cols: list
+    pre: Any
+    cols: Any
+
+
+def _seq(cols: list) -> Any:
+    from pyspark import SparkContext
+
+    return SparkContext._jvm.PythonUtils.toSeq([c._jc for c in cols])
 
 
 def _compile_program(parsed: ParsedFormat, raw: bool) -> _Program:
-    """Fast path (raw=False) over (value, __f): the match result is
-    materialized once behind a barrier so the drop-unparsed Filter and
-    the typed Projection share ONE regex execution per line (without
-    it, predicate pushdown inlines the regexp into both operators —
-    measured ~15% slower). Raw mode over (log_file, line_number, line)
-    keeps every row and flags the unparsed ones."""
+    """Fast path (raw=False) over (value, __f): the split match tokens
+    are materialized once behind a barrier so the drop-unparsed Filter
+    and the typed Projection share ONE regex execution and ONE split
+    per line (without it, predicate pushdown inlines them into both
+    operators — measured ~15% slower). Raw mode over (log_file,
+    line_number, line) keeps every row and flags the unparsed ones."""
+    from pyspark import SparkContext
+
+    n = parsed.num_capture_groups
+    line = F.col("line" if raw else "value")
+    tokens = X.match_tokens(line, parsed.regex_pattern, n)
+    parts = tokens if raw else F.col("__m")
+    ok = X.match_ok(parts, n) if parsed.fields else F.lit(False)
+    pre, cols = _projection(parsed, ok, parts)
+    pre = _seq([F.col("*"), *pre]) if pre else None
     if raw:
-        ok, parts = (
-            X.mark_and_split(F.col("line"), parsed.regex_pattern, parsed.num_capture_groups)
-            if parsed.fields
-            else (F.lit(False), None)
-        )
-        pre, cols = _projection(parsed, ok, parts)
         cols += [
             F.col("log_file"),
             F.col("line_number"),
             (~ok).alias("parse_error"),
-            F.col("line").alias("raw_line"),
+            line.alias("raw_line"),
         ]
-        return _Program([], None, pre, cols)
-    if not parsed.fields:
-        return _Program([], F.lit(False), [], [F.col("__f").alias("log_file")])
-    marked = X.materialization_barrier(
-        X.marked_expr(F.col("value"), parsed.regex_pattern, parsed.num_capture_groups)
-    )
-    ok, parts = X.ok_and_parts(F.col("__m"), parsed.num_capture_groups)
-    pre, cols = _projection(parsed, ok, parts)
+        return _Program(None, None, None, None, pre, _seq(cols))
     cols.append(F.col("__f").alias("log_file"))
-    return _Program([marked.alias("__m"), F.col("__f")], ok, pre, cols)
+    return _Program(
+        _seq([line, _normalize_file_uri(F.input_file_name()).alias("__f")]),
+        SparkContext._jvm.java.util.regex.Pattern.compile("\x00"),
+        _seq([X.materialization_barrier(tokens).alias("__m"), F.col("__f")])
+        if parsed.fields
+        else None,
+        ok,
+        pre,
+        _seq(cols),
+    )
 
 
 # Compiled programs, least recently used first. Building one costs about
@@ -401,28 +425,29 @@ def _program(parsed: ParsedFormat, raw: bool) -> _Program:
 
 
 def _apply_program(df: DataFrame, prog: _Program) -> DataFrame:
-    head, keep, pre, cols = prog
-    if head:
-        df = df.select(*head)
-    if keep is not None:
-        df = df.filter(keep)
-    if pre:
-        df = df.select("*", *pre)
-    return df.select(*cols)
+    jdf = df._jdf
+    if prog.head is not None:
+        jdf = jdf.select(prog.head)
+    if prog.keep is not None:
+        jdf = jdf.filter(prog.keep._jc)
+    if prog.pre is not None:
+        jdf = jdf.select(prog.pre)
+    return DataFrame(jdf.select(prog.cols), df.sparkSession)
 
 
-def _parse_lines(
-    lines: DataFrame, prog: _Program, line_filter: Optional[str] = None, cnf=None
-) -> DataFrame:
-    """Typed rows of a (value, __f) line frame: empty lines and lines
-    failing the raw-line needles (``line_filter``, the pushdown's CNF)
-    are dropped BEFORE the parse regex runs."""
-    df = lines.filter(F.length("value") > 0)
+def _line_keep(line_filter: Optional[str] = None, cnf=None) -> Column:
+    """The ONE line Filter: drops empty lines and lines failing the
+    raw-line needles (``line_filter``, the pushdown's CNF) before the
+    parse regex runs. It goes BELOW the (value, __f) projection: Catalyst
+    neither pushes a filter under nor defers nondeterministic
+    input_file_name(), so __f would be decoded for every dropped line."""
+    value = F.col("value")
+    keep = F.length(value) > 0
     if line_filter:
-        df = df.filter(F.col("value").contains(line_filter))
+        keep = keep & value.contains(line_filter)
     if cnf:
-        df = apply_cnf(df, cnf)
-    return _apply_program(df, prog)
+        keep = keep & cnf_predicate(cnf, value)
+    return keep
 
 
 def _attach_hive_cols(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -516,8 +541,11 @@ def read_httpd_log(
     typed predicate, re-issues the scan with it below the parse regex,
     and re-applies the exact predicate on top — value-identical, but
     non-matching lines never reach the regex. The parse program is
-    compiled once per format and mode per process, and those re-plans
-    reuse this bind's program and text scan."""
+    compiled once per format and mode per process.
+
+    The fast-mode plan is built on first use, not here (a pushed-down
+    filter builds only its re-planned scan), so a text-scan error
+    surfaces then."""
     files = expand_paths(path, spark)
     parsed, _ftype, raw_mode = resolve_format(files, format_type, format_str, conf, raw, spark)
     if not files:
@@ -541,17 +569,16 @@ def read_httpd_log(
     # Verbatim columns = regex captures emitted unchanged: strings
     # except %X's remapped values; int/bigint digit tokens. Timestamps,
     # intervals, booleans, log_file, and hive keys are excluded.
-    lines = _fast_lines_df(spark, files)
-
     def _rebuild(cnf=None, subset=None):
-        # re-plan over the BIND-TIME text scan (or a scan of a PRUNED
-        # subset of its files, when file-level conjuncts ruled whole
-        # files out), not the original pattern: a re-expanded glob
-        # could pick up files created since the read, silently making
-        # the pushed plan see MORE data than the naive plan it must be
-        # value-identical to
-        scan = lines if subset is None else _fast_lines_df(spark, subset)
-        return _attach_hive_cols(_parse_lines(scan, prog, line_filter, cnf), hive_keys)
+        # re-plan over the BIND-TIME file list (or a PRUNED subset of
+        # it, when file-level conjuncts ruled whole files out), not the
+        # original pattern: a re-expanded glob could pick up files
+        # created since the read, silently making the pushed plan see
+        # MORE data than the naive plan it must be value-identical to
+        scan = _fast_lines_df(
+            spark, files if subset is None else subset, prog, _line_keep(line_filter, cnf)
+        )
+        return _attach_hive_cols(_apply_program(scan, prog), hive_keys)
 
     _mt_cache: list = []  # [(max_mtime_or_None, wall_time_of_stat)]
     _mt_stale: list = []  # non-empty once a refresh fired: stat fresh from then on
@@ -654,7 +681,8 @@ def read_httpd_log(
         return _per_file_mt_cache[0]
 
     return LineFilterableFrame(
-        _rebuild(),
+        spark,
+        _schema_json(schema, hive_keys),
         _rebuild,
         pushdown_context(
             parsed, schema, hi_us_fn=_mtime_hi_us, epoch_min_fields=epoch_min_fields
@@ -815,12 +843,17 @@ def pushdown_context(
     )
 
 
-def _fast_lines_df(spark: SparkSession, files: list[str]) -> DataFrame:
-    """DataFrame[(value, __f)] of raw lines: the splittable text scan for
-    extension-routed files, unioned with a streamed-decompress branch
+def _fast_lines_df(
+    spark: SparkSession, files: list[str], prog: _Program, keep: Column
+) -> DataFrame:
+    """DataFrame[(value, __f)] of the raw lines passing ``keep`` (see
+    _line_keep): the splittable text scan for extension-routed files,
+    unioned with a streamed-decompress branch
     for content-detected gzip files lacking a codec extension (the
     per-file streaming reader inflates through a 2 MiB buffer — no
-    whole-file value row, same memory contract as the raw path)."""
+    whole-file value row, same memory contract as the raw path). The
+    path list crosses py4j as one NUL-joined string (NUL cannot occur
+    in a path), split in the JVM by the program's ``paths``."""
     plain, misnamed = _split_misnamed_gzip(files, spark)
     dfs = []
     if plain:
@@ -836,16 +869,13 @@ def _fast_lines_df(spark: SparkSession, files: list[str]) -> DataFrame:
         import os.path
 
         qualified = [p if has_scheme(p) else f"file://{os.path.abspath(p)}" for p in plain]
-        dfs.append(
-            spark.read.text(qualified).select(
-                "value", _normalize_file_uri(F.input_file_name()).alias("__f")
-            )
-        )
+        jdf = spark._jsparkSession.read().text(prog.paths.split("\x00".join(qualified)))
+        dfs.append(DataFrame(jdf.filter(keep._jc).select(prog.lines), spark))
     if misnamed:
         dfs.append(
             _raw_lines_df(spark, misnamed).select(
                 F.col("line").alias("value"), F.col("log_file").alias("__f")
-            )
+            ).filter(keep)
         )
     df = dfs[0]
     for d in dfs[1:]:

@@ -31,7 +31,7 @@ from ..sources.logformat import (
     parse_format_string,
 )
 from ..sources.pushdown import LineFilterableFrame, stream_glob_for
-from ..sources.reader import _normalize_file_uri, _parse_lines, _program, pushdown_context
+from ..sources.reader import _apply_program, _line_keep, _program, _schema_json, pushdown_context
 
 
 def read_httpd_log_stream(
@@ -79,10 +79,9 @@ def read_httpd_log_stream(
             # path is a per-file constant (unlike time bounds, which
             # stay batch-only: future files arrive with later mtimes).
             opts["pathGlobFilter"] = glob
-        lines = spark.readStream.options(**opts).text(path).select(
-            "value", _normalize_file_uri(F.input_file_name()).alias("__f")
-        )
-        return _parse_lines(lines, prog, line_filter, cnf)
+        scan = spark.readStream.options(**opts).text(path)._jdf
+        lines = scan.filter(_line_keep(line_filter, cnf)._jc).select(prog.lines)
+        return _apply_program(DataFrame(lines, spark), prog)
 
     # same epoch cost gate as the batch reader; no hi_us_fn (a stream's
     # future files arrive with later mtimes — no sound bind-time bound)
@@ -101,12 +100,12 @@ def read_httpd_log_stream(
         if ("pathGlobFilter" in options or _recursive)
         else (lambda cond: stream_glob_for(cond, path))
     )
+    schema = generate_schema(parsed, False)
     return LineFilterableFrame(
-        _scan(),
+        spark,
+        _schema_json(schema),
         _scan,
-        pushdown_context(
-            parsed, generate_schema(parsed, False), epoch_min_fields=epoch_min_fields
-        ),
+        pushdown_context(parsed, schema, epoch_min_fields=epoch_min_fields),
         stream_glob_fn=glob_fn,
     )
 

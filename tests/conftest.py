@@ -1,4 +1,5 @@
 import os
+import time
 
 import pytest
 
@@ -20,3 +21,35 @@ def spark():
 
 def data(*parts: str) -> str:
     return os.path.join(DATA, *parts)
+
+
+@pytest.fixture()
+def fleet(tmp_path):
+    """Monthly rotated files (mtime just past their content); 5xx rows
+    only in October."""
+    d = tmp_path / "fleet"
+    d.mkdir()
+    months = {7: "Jul", 8: "Aug", 9: "Sep", 10: "Oct"}
+    for month, mon in months.items():
+        p = d / f"2024-{month:02d}.log"
+        p.write_text("".join(
+            f'10.0.{month}.{i} - u [{10 + i}/{mon}/2024:12:00:00 +0000] '
+            f'"GET /m{month} HTTP/1.1" {503 if month == 10 else 200} {i} "-" "ua"\n'
+            for i in range(3)
+        ))
+        mt = time.mktime((2024, month, 28, 0, 0, 0, 0, 0, 0))
+        os.utime(p, (mt, mt))
+    return str(d)
+
+
+def dashboard_shapes() -> dict:
+    """The dashboard benchmark's filter shapes, over the ``fleet``."""
+    from pyspark.sql import functions as F
+
+    return {
+        "needle": F.col("path") == "/m8",
+        "day": F.to_date("timestamp") == "2024-09-11",
+        "since": F.col("timestamp") >= "2024-10-01 00:00:00",
+        "listing": F.col("log_file").like("%/2024-08.log"),
+        "status5xx": F.col("status") >= 500,
+    }

@@ -58,6 +58,26 @@ def test_log_reader_fast_path_is_narrow(spark):
     # other regexp_replace in the plan is the file-URI normalizer.)
     assert plan.count("regexp_replace(value#") == 1
 
+    # a pushed-down filter: the barrier wraps the SPLIT match, so the
+    # drop-unparsed Filter and the Project share one split per line, and
+    # one line Filter under the barrier carries the empty-line check and
+    # the needles
+    from pyspark.sql import functions as F
+
+    pushed = read_httpd_log(spark, data("common", "sample.log")).filter(
+        F.col("path") == "/index.html")
+    opt = pushed._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    text = "\n".join(opt)
+    assert text.count("split(regexp_replace(value#") == 1
+    assert text.count("regexp_replace(value#") == 1
+    barrier = [i for i, ln in enumerate(opt) if "length(input_file_name()) >= 0" in ln]
+    line_filters = [i for i, ln in enumerate(opt) if "Filter" in ln and "value#" in ln]
+    assert len(barrier) == 1 and "split(regexp_replace(value#" in opt[barrier[0]]
+    assert len(line_filters) == 1 and line_filters[0] > barrier[0]
+    assert "length(value#" in opt[line_filters[0]]
+    assert "Contains(value#" in opt[line_filters[0]]
+    assert pushed.count() == 1
+
 
 def test_exact_dedup_has_partial_agg(spark):
     plan = _plan(REGISTRY["dedup_exact"].spark_fn(spark, SF_DIR))

@@ -18,7 +18,6 @@ import os
 import subprocess
 import sys
 import textwrap
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,6 +25,8 @@ from pyspark.sql import functions as F
 from duckdb_httpd_log_spark import read_httpd_log
 from duckdb_httpd_log_spark.sources import reader
 from duckdb_httpd_log_spark.sources.pushdown import LineFilterableFrame
+
+from .conftest import dashboard_shapes
 
 
 def _write(tmp_path, name, lines):
@@ -81,40 +82,14 @@ def test_connection_status_remap_never_shared(spark, tmp_path):
 
 
 # --- 2. one compile; pushdown still fires ---------------------------------------
-@pytest.fixture()
-def fleet(tmp_path):
-    """Monthly rotated files (mtime just past their content); 5xx rows
-    only in October."""
-    d = tmp_path / "fleet"
-    d.mkdir()
-    months = {7: "Jul", 8: "Aug", 9: "Sep", 10: "Oct"}
-    for month, mon in months.items():
-        p = d / f"2024-{month:02d}.log"
-        p.write_text("".join(
-            f'10.0.{month}.{i} - u [{10 + i}/{mon}/2024:12:00:00 +0000] '
-            f'"GET /m{month} HTTP/1.1" {503 if month == 10 else 200} {i} "-" "ua"\n'
-            for i in range(3)
-        ))
-        mt = time.mktime((2024, month, 28, 0, 0, 0, 0, 0, 0))
-        os.utime(p, (mt, mt))
-    return str(d)
-
-
 def test_program_compiles_once_and_pushdown_fires(spark, fleet, monkeypatch):
     calls = []
     real = reader._projection
     monkeypatch.setattr(reader, "_PROGRAMS", {})
     monkeypatch.setattr(
         reader, "_projection", lambda *a: calls.append(1) or real(*a))
-    shapes = {  # the dashboard benchmark's filter shapes
-        "needle": F.col("path") == "/m8",
-        "day": F.to_date("timestamp") == "2024-09-11",
-        "since": F.col("timestamp") >= "2024-10-01 00:00:00",
-        "listing": F.col("log_file").like("%/2024-08.log"),
-        "status5xx": F.col("status") >= 500,
-    }
     for rep in range(2):
-        for name, pred in shapes.items():
+        for name, pred in dashboard_shapes().items():
             df = read_httpd_log(spark, fleet + "/*.log", format_type="combined")
             assert len(df.inputFiles()) == 4
             out = df.filter(pred)

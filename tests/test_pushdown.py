@@ -564,7 +564,7 @@ def test_strftime_dmy_month_name_layout_pushes_ci_dates(spark, tmp_path):
     )
     assert n == 1
     plan = _optimized(out)
-    # ci needles fold into one (?i) RLike alternation (see apply_cnf)
+    # ci needles fold into one (?i) RLike alternation (see cnf_predicate)
     assert "15/mar/2024" in plan and "(?i)" in plan
 
 
