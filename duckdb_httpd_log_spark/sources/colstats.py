@@ -15,24 +15,23 @@ Soundness bar (identical to the mtime bound's):
 - Stats are keyed on a fresh ``(mtime, size)`` stat taken BEFORE the
   gathering scan. If the file grows between stat and scan, the stats
   describe MORE data than the key claims — a superset interval is
-  still sound to prune with. Append-only rewrite races inside the
-  stat's 1 s mtime resolution are outside the contract, same as the
+  still sound to prune with. Rewrite races inside the stat's mtime
+  resolution that keep the size are outside the contract, same as the
   documented mtime bound.
-- At prune time every file's CURRENT ``(mtime, size)`` is re-statted
-  — one os.stat for local listings, one Hadoop listStatus per parent
-  directory for scheme-qualified listings (s3a/hdfs/viewfs/...; see
-  fs.file_sigs — batched so a 1000-file rotated dir costs one LIST
-  RPC, not 1000 HEADs); a stale key means the stats are never
-  consulted for that file.
+- Every ``.filter()`` takes ONE fresh stat of the bind-time listing
+  (fs.file_sigs — one os.stat per local file, one Hadoop listStatus
+  per parent directory for s3a/hdfs/viewfs/...), shared by the mtime
+  and column-stats parts of the per-file range test (pushdown.py); a
+  cached entry whose key differs from it is never consulted.
 - The prune decision is taken at ``.filter()`` time against that
-  fresh stat; like every listing-prune tier, the decision is BAKED
-  into the returned plan. A pruned DataFrame re-EXECUTED much later,
-  after a file was appended with newly-qualifying rows, still
-  excludes that file — the mtime tier absorbs its analogous gap with
-  a 2-day slack, but a value range has no slack dimension. Contract:
-  derivation-to-action gaps are covered (the stat is fresh at filter
-  time); filter-to-re-execution gaps are not — re-apply the filter
-  (any dashboard refresh does) to re-validate against current keys.
+  fresh stat and is BAKED into the returned plan. A pruned DataFrame
+  re-EXECUTED much later, after a file was appended with
+  newly-qualifying rows, still excludes that file — the mtime range
+  absorbs its analogous gap with a 2-day slack, but a value range has
+  no slack dimension. Contract: derivation-to-action gaps are covered
+  (the stat is fresh at filter time); filter-to-re-execution gaps are
+  not — re-apply the filter (any dashboard refresh does) to
+  re-validate against current keys.
 - Only top-level CONJUNCTS of shape ``col <cmp> int-literal`` / ``col
   IN (...)`` prune, and NULL rows can never satisfy such a conjunct,
   so min/max over non-null values decides. A file with no qualifying
@@ -75,28 +74,10 @@ from pyspark.sql import functions as F
 # different format/line_filter from reusing stats computed over a
 # narrower row view (r13 ADVICE high).
 _COLSTATS: dict[tuple, tuple] = {}
-# second-touch counters for the auto policy; insert-capped like
-# fs._MTIME_HINTS (entries for rotated files persist, bounded memory)
+# second-touch counters for the auto policy; insert-capped at _CAP
+# (entries for rotated files persist, bounded memory)
 _TOUCH: dict[tuple, int] = {}
 _CAP = 1_000_000
-
-_INT_CMP = {
-    "GreaterThan",
-    "GreaterThanOrEqual",
-    "LessThan",
-    "LessThanOrEqual",
-    "EqualTo",
-    "EqualNullSafe",
-}
-_FLIP = {
-    "GreaterThan": "LessThan",
-    "GreaterThanOrEqual": "LessThanOrEqual",
-    "LessThan": "GreaterThan",
-    "LessThanOrEqual": "GreaterThanOrEqual",
-    "EqualTo": "EqualTo",
-    "EqualNullSafe": "EqualNullSafe",
-}
-
 
 # --- persistent sidecar (streaming colstats, r14) ---------------------------
 # A stream only ever reads NEW files, so an in-process cache can never
@@ -147,76 +128,29 @@ def persist(dirpath: str, fp: str, path: str, sig: tuple, stats: dict) -> None:
         pass  # persistence is an optimization — never fail the read
 
 
-def cond_int_intervals(cond, int_cols: set) -> dict[str, tuple]:
-    """Intersected required interval per verbatim-int column from the
-    top-level conjuncts of ``cond``: {col: (lo, hi)} with None = open.
-    Over-approximates (IN becomes its hull); unrecognized conjuncts are
-    simply ignored — both directions are sound for pruning."""
-    from .pushdown import _INT_TYPES, _attr_name, _children, _flatten_and, _literal, _simple
-
-    req: dict[str, tuple] = {}
-
-    def merge(name: str, lo, hi) -> None:
-        lo0, hi0 = req.get(name, (None, None))
-        if lo is not None:
-            lo0 = lo if lo0 is None else max(lo0, lo)
-        if hi is not None:
-            hi0 = hi if hi0 is None else min(hi0, hi)
-        req[name] = (lo0, hi0)
-
-    for c in _flatten_and(cond):
-        s = _simple(c)
-        if s in _INT_CMP:
-            l, r = _children(c)
-            for a, b, flipped in ((l, r, False), (r, l, True)):
-                name = _attr_name(a)
-                if name is None or name not in int_cols:
-                    continue
-                val, dt = _literal(b)
-                if val is None or dt not in _INT_TYPES:
-                    continue
-                v = int(str(val))
-                op = _FLIP[s] if flipped else s
-                if op == "GreaterThan":
-                    merge(name, v + 1, None)
-                elif op == "GreaterThanOrEqual":
-                    merge(name, v, None)
-                elif op == "LessThan":
-                    merge(name, None, v - 1)
-                elif op == "LessThanOrEqual":
-                    merge(name, None, v)
-                else:  # EqualTo / EqualNullSafe
-                    merge(name, v, v)
-                break
-        elif s == "In":
-            kids = _children(c)
-            name = _attr_name(kids[0])
-            if name is None or name not in int_cols:
-                continue
-            vals = []
-            ok = True
-            for k in kids[1:]:
-                val, dt = _literal(k)
-                if val is None or dt not in _INT_TYPES:
-                    ok = False
-                    break
-                vals.append(int(str(val)))
-            if ok and vals:
-                merge(name, min(vals), max(vals))
-    return req
+def narrow(req: dict, col: str, lo, hi) -> None:
+    """Intersect closed interval [lo, hi] (None = open) into ``req[col]``."""
+    lo0, hi0 = req.get(col, (None, None))
+    req[col] = (
+        lo0 if lo is None else (lo if lo0 is None else max(lo0, lo)),
+        hi0 if hi is None else (hi if hi0 is None else min(hi0, hi)),
+    )
 
 
-def _disjoint(stats: dict, req: dict) -> bool:
-    """True when some required interval cannot be met by the file."""
+def _disjoint(rng: dict, req: dict) -> bool:
+    """True when some required interval of ``req`` ({col: (lo, hi)},
+    None = open) misses the file's range ``rng`` ({col: (lo, hi)}, None
+    = open; (None, None) = no non-NULL value, which meets no interval).
+    Columns missing from ``rng`` never prune."""
     for col, (rlo, rhi) in req.items():
-        if col not in stats:
+        if col not in rng:
             continue
-        slo, shi = stats[col]
-        if slo is None:  # no non-NULL value in the file for this column
+        slo, shi = rng[col]
+        if slo is None and shi is None:
             return True
-        if rlo is not None and shi < rlo:
+        if rlo is not None and shi is not None and shi < rlo:
             return True
-        if rhi is not None and slo > rhi:
+        if rhi is not None and slo is not None and slo > rhi:
             return True
     return False
 
@@ -244,17 +178,14 @@ def _gather(rebuild, fp: str, missing: list, cols: set) -> dict:
 
 
 def stats_for(
-    spark, rebuild, fp: str, pairs: list, cols: set, policy: str
+    spark, rebuild, fp: str, pairs: list, sigs: list, cols: set, policy: str
 ) -> dict:
     """Fresh-keyed stats for the listing: {bind_path: {col: (lo, hi)}}.
-    Every returned entry was validated against a (mtime, size) signature
-    taken NOW (fs.file_sigs — os.stat locally, batched Hadoop listStatus
-    for scheme paths); files without fresh stats are simply absent
-    (never pruned). ``fp`` is the reader-config fingerprint the cache is
-    scoped by. May run the gathering scan per the policy."""
-    from .fs import file_sigs
-
-    sigs = file_sigs(spark, [b for b, _v in pairs])
+    ``sigs`` is the filter's own fresh stat of ``pairs`` (fs.file_sigs,
+    aligned); every returned entry's key equals it, and files without
+    fresh stats are simply absent (never pruned). ``fp`` is the
+    reader-config fingerprint the cache is scoped by. May run the
+    gathering scan per the policy."""
     fresh: dict = {}
     missing: list = []
     for (b, v), sig in zip(pairs, sigs):

@@ -124,15 +124,11 @@ def parse_value_filter(expr: str, int_cols: set) -> list[tuple]:
 def _vf_required_intervals(conjuncts: list[tuple]) -> dict:
     """{col: (lo, hi)} hull the colstats prune consults (IN becomes its
     hull — over-approximation is sound for pruning)."""
+    from .colstats import narrow
+
     req: dict = {}
     for col, kind, payload in conjuncts:
-        lo, hi = payload if kind == "iv" else (min(payload), max(payload))
-        lo0, hi0 = req.get(col, (None, None))
-        if lo is not None:
-            lo0 = lo if lo0 is None else max(lo0, lo)
-        if hi is not None:
-            hi0 = hi if hi0 is None else min(hi0, hi)
-        req[col] = (lo0, hi0)
+        narrow(req, col, *(payload if kind == "iv" else (min(payload), max(payload))))
     return req
 
 
@@ -422,13 +418,11 @@ class HttpdLogStreamReader(SimpleDataSourceStreamReader):
         ).hexdigest()
 
     def _stat_sig(self, fname: str):
-        import os
+        # the batch reader's signature (shared _COLSTATS entries);
+        # remote/pyarrow paths: never pruned, never gathered
+        from .fs import file_sigs, has_scheme
 
-        try:
-            st = os.stat(fname)
-            return (st.st_mtime, st.st_size)
-        except OSError:
-            return None  # remote/pyarrow paths: never pruned, never gathered
+        return None if has_scheme(fname) else file_sigs(None, [fname])[0]
 
     def _prunable(self, fname: str) -> bool:
         """True when fresh cached stats prove no row of ``fname`` can

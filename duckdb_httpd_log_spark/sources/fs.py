@@ -210,42 +210,11 @@ def _fs_for(spark: SparkSession, path: str):
     return jvm, fs, jpath
 
 
-# Modification times captured as a side effect of listing: Hadoop's
-# LocatedFileStatus already carries them, so max_mtime can answer from
-# the SAME listing the scan binds to instead of paying one
-# getFileStatus RPC per file (100k files = 100k avoided round trips).
-# Bounded: _hint_mtime stops INSERTING new paths at _MTIME_HINT_CAP
-# (existing paths keep refreshing; nothing is evicted — entries for
-# rotated/deleted files persist for the process lifetime, a bounded
-# ~100 MB worst case). Staleness guard: every listing REFRESHES the
-# hints for the paths it returns, so a bind's max_mtime always reflects
-# that bind's own listing; only a hypothetical caller consulting
-# max_mtime for paths it never listed could read a stale hint.
-_MTIME_HINTS: dict[str, float] = {}
-_MTIME_HINT_CAP = 1_000_000
-
-
-def _hint_mtime(path: str, epoch_sec: float) -> None:
-    # stop INSERTING at the cap (never clear): a single listing larger
-    # than the cap must not evict its own earlier entries — max_mtime
-    # falls back to per-file stats only for the uncached tail
-    if len(_MTIME_HINTS) < _MTIME_HINT_CAP or path in _MTIME_HINTS:
-        _MTIME_HINTS[path] = epoch_sec
-
-
-def _note_status(st, files: list) -> None:
-    """Append a Hadoop FileStatus's URI to ``files``, capturing its
-    modification time as a listing side effect (see _MTIME_HINTS)."""
-    uri = st.getPath().toString()
-    _hint_mtime(uri, st.getModificationTime() / 1000.0)
-    files.append(uri)
-
-
 def _list_files_recursive(fs, jpath) -> list[str]:
     out: list[str] = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
-        _note_status(it.next(), out)
+        out.append(it.next().getPath().toString())
     return out
 
 
@@ -289,14 +258,14 @@ def expand_remote(spark: Optional[SparkSession], pattern: str) -> list[str]:
                 if st.isDirectory():
                     files.extend(_list_files_recursive(fs, st.getPath()))
                 else:
-                    _note_status(st, files)
+                    files.append(st.getPath().toString())
     else:
         if fs.exists(jpath):
             st = fs.getFileStatus(jpath)
             if st.isDirectory():
                 files.extend(_list_files_recursive(fs, jpath))
             else:
-                _note_status(st, files)
+                files.append(st.getPath().toString())
     return files
 
 
@@ -367,117 +336,48 @@ def read_all(spark: Optional[SparkSession], path: str) -> bytes:
     finally:
         stream.close()
 
-def max_mtime(spark: Optional[SparkSession], files: list[str]) -> Optional[float]:
-    """Largest modification time (epoch seconds, UTC) over ``files``,
-    or None when any file's mtime is unavailable. Local paths stat
-    directly (no JVM); scheme-qualified paths go through Hadoop's
-    FileSystem (getModificationTime is epoch millis). Used by the
-    time-range pushdown to close an open-above interval: a log line's
-    %t instant cannot be later than its file's last modification
-    (+clock-skew margin), so max mtime is a sound upper bound for any
-    timestamp in a FIXED file set (batch only — a stream's future
-    files would arrive with later mtimes)."""
-    mts = file_mtimes(spark, files)
-    if any(t is None for t in mts):
-        return None
-    return max(mts) if mts else None
-
-
-def file_mtimes(
-    spark: Optional[SparkSession], files: list[str], fresh: bool = False
-) -> list[Optional[float]]:
-    """Per-file modification times (epoch seconds, UTC) aligned with
-    ``files``; always returns a list — an unavailable ENTRY is None
-    (callers must treat a None entry as 'unknown — never prune').
-    Answers from the listing's own mtime hints when present (see
-    _MTIME_HINTS), falling back to one stat per file. Used by
-    max_mtime (the open-above bound) and by the file-level mtime
-    pruning in sources/pushdown.py.
-
-    ``fresh=True`` bypasses the hints and stats NOW — used by the
-    file-level prune to re-check only the files it is about to drop
-    (a file appended between the bind-time listing and the action can
-    hold rows newer than the recorded mtime; one fresh stat per
-    dropped file is far cheaper than wrongly skipping it)."""
-    return _stat_files(spark, files, fresh=fresh, sizes=False)
-
 
 def file_sigs(
     spark: Optional[SparkSession], files: list[str]
 ) -> list[Optional[tuple]]:
-    """Per-file ``(mtime, size)`` freshness signatures aligned with
-    ``files``, statted NOW (hints are never consulted — a signature's
-    whole job is to detect that a cached derivation went stale). An
+    """Per-file ``(mtime, size)`` aligned with ``files``, statted NOW,
+    with mtime in epoch milliseconds (UTC) for every scheme — the one
+    source of file mtimes for pruning (sources/pushdown.py) and the
+    freshness key of the column stats (sources/colstats.py). An
     unavailable entry is None (callers must treat it as 'unknown —
     never prune'). Local paths are one os.stat each; scheme-qualified
     paths (s3a/hdfs/viewfs/...) are batched ONE Hadoop listStatus per
     parent directory — a rotated-log dir of 1000 files costs one LIST
     RPC instead of 1000 per-file HEADs — with a per-file getFileStatus
-    fallback for anything the parent listing missed. Units differ by
-    backend (float epoch-seconds locally, int epoch-millis via Hadoop)
-    but each path is always statted the same way, so signatures stay
-    comparable across calls, which is all a freshness key needs.
-    Used by the column-stats listing prune (sources/colstats.py)."""
-    return _stat_files(spark, files, fresh=True, sizes=True)
-
-
-def _stat_files(
-    spark: Optional[SparkSession],
-    files: list[str],
-    fresh: bool,
-    sizes: bool,
-) -> list:
-    """Shared engine of file_mtimes/file_sigs; ``sizes`` selects
-    (mtime, size) tuples over bare mtimes, and batches remote stats by
-    parent directory (sizes callers always stat fresh)."""
+    fallback for anything the parent listing missed."""
+    remote = {f for f in files if has_scheme(f) and scheme_of(f) != "file"}
+    s = _session_or_none(spark) if remote else None
     remote_sigs: dict[str, tuple] = {}
-    if sizes:
-        by_parent: dict[str, list[str]] = {}
-        for f in files:
-            if has_scheme(f) and scheme_of(f) != "file":
-                by_parent.setdefault(f.rsplit("/", 1)[0], []).append(f)
-        s = _session_or_none(spark)
-        if s is not None:
-            for parent in by_parent:
-                try:
-                    _jvm, hfs, jpath = _fs_for(s, parent)
-                    for st in hfs.listStatus(jpath):
-                        remote_sigs[st.getPath().toString()] = (
-                            st.getModificationTime(),
-                            st.getLen(),
-                        )
-                except Exception:
-                    continue  # per-file fallback below
+    if s is not None:
+        for parent in {f.rsplit("/", 1)[0] for f in remote}:
+            try:
+                _jvm, hfs, jpath = _fs_for(s, parent)
+                for st in hfs.listStatus(jpath):
+                    remote_sigs[st.getPath().toString()] = (
+                        st.getModificationTime(),
+                        st.getLen(),
+                    )
+            except Exception:
+                continue  # per-file fallback below
     out: list = []
     for f in files:
         try:
-            hint = None if fresh else _MTIME_HINTS.get(f)
-            if not sizes and hint is not None:
-                # from the SAME listing the scan bound to — consistent
-                # with what the executors will read, and free
-                out.append(hint)
-            elif has_scheme(f) and scheme_of(f) != "file":
-                if sizes and f in remote_sigs:
-                    out.append(remote_sigs[f])
-                    continue
-                s = _session_or_none(spark)
-                if s is None:
-                    out.append(None)
-                    continue
+            if f not in remote:
+                st = os.stat(_uri_path(f) if has_scheme(f) else f)
+                out.append((st.st_mtime_ns // 1_000_000, st.st_size))
+            elif f in remote_sigs:
+                out.append(remote_sigs[f])
+            elif s is None:
+                out.append(None)
+            else:
                 _jvm, hfs, jpath = _fs_for(s, f)
                 st = hfs.getFileStatus(jpath)
-                out.append(
-                    (st.getModificationTime(), st.getLen())
-                    if sizes
-                    else st.getModificationTime() / 1000.0
-                )
-            else:
-                p = _uri_path(f) if has_scheme(f) else f
-                if sizes:
-                    st = os.stat(p)
-                    out.append((st.st_mtime, st.st_size))
-                else:
-                    out.append(os.path.getmtime(p))
+                out.append((st.getModificationTime(), st.getLen()))
         except Exception:
             out.append(None)
     return out

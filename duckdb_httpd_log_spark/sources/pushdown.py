@@ -46,15 +46,15 @@ Soundness per leaf:
   ``year(ts)`` predicates map to plain ``/yyyy:`` needles (digits
   only — no case issue), +-1-year margin.
 - OPEN-ABOVE ranges (``ts >= lo`` / ``year(ts) >= y`` — the "since X"
-  filter) close their open end at derivation time from the FILE
-  LISTING's max modification time (fs.max_mtime): a log line's %t is
-  the request-arrival instant, written to the file no later than the
-  file's last modification, so max mtime (+the usual margins) bounds
-  every instant in a fixed file set. Batch scans only — a stream's
-  future files arrive with later mtimes, so the streaming source
-  never binds this. Opt out with spark.graft.pushdown.mtimeBound=
-  false for pathological corpora carrying future-dated lines (the
-  one assumption this leans on).
+  filter) close their open end at filter time from the max
+  modification time of a FRESH stat of the bind-time listing
+  (fs.file_sigs): a log line's %t is the request-arrival instant,
+  written to the file no later than the file's last modification, so
+  max mtime (+the usual margins) bounds every instant in a fixed file
+  set. Batch scans only — a stream's future files arrive with later
+  mtimes, so the streaming source takes no stat. Opt out with
+  spark.graft.pushdown.mtimeBound=false for pathological corpora
+  carrying future-dated lines (the one assumption this leans on).
 - bounded ranges too wide for day tokens (and mtime-closed ranges)
   degrade to a coarser ``/yyyy:`` year-needle group instead of
   falling back to parse-everything.
@@ -71,6 +71,15 @@ ranges split across their leaves; disjunctions push only if every
 branch is derivable (as an OR-of-needles group); anything else falls
 back to the unmodified plan. CNF across OR-of-ANDs distributes.
 
+File skipping has two tiers, both decided in ``LineFilterableFrame.
+filter`` from ONE classification pass over the top-level conjuncts
+(``classify``): the listing predicate (file-constant conjuncts on
+log_file / hive keys, evaluated by Spark over the bind-time listing)
+and a per-file range test against one fresh stat of that listing —
+a file's range is (-inf, mtime + 2 d] on every recognized time column
+and its cached column stats on verbatim int columns (colstats.py);
+a file whose range misses a required interval is dropped.
+
 Cited parity anchor: the reference parses every line unconditionally
 (src/httpd_log_file_reader.cpp); this pushdown is beyond-reference,
 motivated by its TODO-free single-pass design — the only way to beat
@@ -80,13 +89,16 @@ motivated by its TODO-free single-pass design — the only way to beat
 from __future__ import annotations
 
 import datetime as _dt
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 from typing import Callable, List, Optional, Tuple, Union
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame
+
+from . import fs as FS
+from .colstats import _disjoint, narrow, stats_for
 
 # CNF: AND over groups, OR within a group. A needle is either a plain
 # string (case-sensitive Contains on the raw line) or ("ci", s) — a
@@ -152,21 +164,14 @@ class PushdownContext:
     ts_date_cols: dict = field(default_factory=dict)
     margin_days: int = 2
     # Closes an OPEN-ABOVE time range (``ts >= lo``, the "since X"
-    # filter) at derivation time: returns an upper-bound epoch-µs for
-    # any %t instant in the scanned FILE SET, or None. Batch scans
-    # bind it to the listing's max modification time (fs.max_mtime) —
-    # a line's request time cannot be later than its file's last
-    # write (+margin_days / +1y of skew slack applied downstream).
-    # Streaming scans leave it None: future files arrive with later
-    # mtimes, so no bind-time bound is sound there.
-    hi_us_fn: Optional[Callable[[], Optional[int]]] = None
-
-    def hi_us(self) -> Optional[int]:
-        # deliberately NOT cached here: the reader's hi_us_fn caches the
-        # (expensive) mtime stat itself but re-reads the
-        # spark.graft.pushdown.mtimeBound conf on every derivation, so
-        # toggling the opt-out between filters on the same frame works
-        return None if self.hi_us_fn is None else self.hi_us_fn()
+    # filter): an upper-bound epoch-µs for any %t instant in the scanned
+    # FILE SET, or None. A batch filter sets it on its own copy of the
+    # context to the max mtime of its fresh stat of the bind-time
+    # listing — a line's request time cannot be later than its file's
+    # last write (+margin_days / +1y of skew slack applied downstream).
+    # Streams leave it None: future files arrive with later mtimes, so
+    # no bound is sound there.
+    hi_us: Optional[int] = None
 
 
 def _simple(e) -> str:
@@ -344,17 +349,17 @@ def _time_literal_interval(e, domain: str) -> Optional[Tuple[int, int]]:
     return None
 
 
-def _year_leaf(e, ctx) -> Optional[Tuple[str, Optional[int], Optional[int]]]:
-    """(col, lo_year|None, hi_year|None) for a comparison on
-    ``year(ts)`` — ``year()`` resolves as Year(Cast(ts AS DATE)), and
-    the raw %t text always carries the 4-digit year before the colon,
-    so a bounded year range maps to an OR group of ``/yyyy:``
-    needles (one per year, +-1 margin for zone/offset boundary
-    shifts)."""
-    op = _CMP_OPS.get(_simple(e))
+def _year_leaf(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Optional[int]]]:
+    """(col, lo_year|None, hi_year|None) for a comparison node of class
+    ``cls`` and children ``kids`` on ``year(ts)`` — ``year()`` resolves
+    as Year(Cast(ts AS DATE)), and the raw %t text always carries the
+    4-digit year before the colon, so a bounded year range maps to an OR
+    group of ``/yyyy:`` needles (one per year, +-1 margin for
+    zone/offset boundary shifts)."""
+    op = _CMP_OPS.get(cls)
     if op is None or not (ctx.ts_day_cols or ctx.ts_year_cols):
         return None
-    l, r = _children(e)
+    l, r = kids
     for a, b, flip in ((l, r, False), (r, l, True)):
         au = a
         while _simple(au) in ("Cast", "AnsiCast", "TryCast"):
@@ -392,13 +397,14 @@ def _year_needles(lo: int, hi: int) -> Optional[List[Needle]]:
     return [f"/{y}:" for y in range(lo - 1, hi + 2)]
 
 
-def _ts_leaf_interval(e, ctx) -> Optional[Tuple[str, Optional[int], Optional[int]]]:
-    """(col, lo_us|None, hi_us|None) for a comparison leaf on a
-    ts_day / ts_year column; open ends are None."""
-    op = _CMP_OPS.get(_simple(e))
+def _ts_leaf_interval(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Optional[int]]]:
+    """(col, lo_us|None, hi_us|None) for a comparison node of class
+    ``cls`` and children ``kids`` on a ts_day / ts_year / ts_epoch
+    column; open ends are None."""
+    op = _CMP_OPS.get(cls)
     if op is None or not (ctx.ts_day_cols or ctx.ts_year_cols or ctx.ts_epoch_cols):
         return None
-    l, r = _children(e)
+    l, r = kids
     for a, b, flip in ((l, r, False), (r, l, True)):
         side = _ts_attr(a, ctx)
         if side is None:
@@ -577,7 +583,7 @@ def _bounded_time_groups(
     is narrow enough and /yyyy: year needles otherwise; strftime-%Y
     columns get bare year-digit needles only (no layout assumed)."""
     if lo_us is not None and hi_us is None:
-        hi_us = ctx.hi_us()
+        hi_us = ctx.hi_us
     if lo_us is None or hi_us is None:
         return None  # open-below (or unclosable) range: no sound needle
     if name in ctx.ts_epoch_cols:
@@ -602,20 +608,21 @@ def _bounded_time_groups(
 def _close_year_hi(ctx: "PushdownContext") -> Optional[int]:
     """Year of the listing's mtime bound, for closing an open-above
     ``year(ts) >= y`` — None when unavailable or out of calendar range."""
-    hi_us = ctx.hi_us()
-    if hi_us is None:
+    if ctx.hi_us is None:
         return None
     try:
-        return (_dt.date(1970, 1, 1) + _dt.timedelta(days=hi_us // _US_PER_DAY)).year
+        return (_dt.date(1970, 1, 1) + _dt.timedelta(days=ctx.hi_us // _US_PER_DAY)).year
     except OverflowError:
         return None
 
 
 def _flatten_and(e) -> list:
-    if _simple(e) == "And":
+    """[(node, class name)] of the top-level conjuncts of ``e``."""
+    cls = _simple(e)
+    if cls == "And":
         l, r = _children(e)
         return _flatten_and(l) + _flatten_and(r)
-    return [e]
+    return [(e, cls)]
 
 
 def _like_segments(pattern: str, escape: str = "\\") -> List[str]:
@@ -643,74 +650,49 @@ def _or_merge(a: Needles, b: Needles) -> Needles:
     return [ga + gb for ga in a for gb in b]
 
 
-def derive_needles(e, ctx: PushdownContext) -> Optional[Needles]:
-    cls = _simple(e)
-    if cls == "And":
-        # flatten the conjunction so BOUNDED time ranges split across
-        # leaves (ts >= a AND ts < b, BETWEEN's rewrite, to_date ==)
-        # intersect into ONE day group; other conjuncts derive as usual
-        groups: Needles = []
-        intervals: dict = {}
-        years: dict = {}
-        for c in _flatten_and(e):
-            iv = _ts_leaf_interval(c, ctx)
-            if iv is not None:
-                name, lo, hi = iv
-                cur = intervals.get(name, (None, None))
-                lo = cur[0] if lo is None else (lo if cur[0] is None else max(cur[0], lo))
-                hi = cur[1] if hi is None else (hi if cur[1] is None else min(cur[1], hi))
-                intervals[name] = (lo, hi)
-                continue
-            yv = _year_leaf(c, ctx)
-            if yv is not None:
-                name, lo, hi = yv
-                cur = years.get(name, (None, None))
-                lo = cur[0] if lo is None else (lo if cur[0] is None else max(cur[0], lo))
-                hi = cur[1] if hi is None else (hi if cur[1] is None else min(cur[1], hi))
-                years[name] = (lo, hi)
-                continue
-            d = derive_needles(c, ctx)
-            if d:
-                groups += d
-        for name, (lo, hi) in intervals.items():
-            g = _bounded_time_groups(name, lo, hi, ctx)
-            if g:
-                groups += g
-        for name, (lo, hi) in years.items():
-            if lo is not None and hi is None:
-                hi = _close_year_hi(ctx)
-            if lo is not None and hi is not None:
-                g = _render_years(name, ctx, lo, hi)
-                if g:
-                    groups.append(g)
-        return groups or None
-    if cls == "Or":
-        l, r = _children(e)
-        dl = derive_needles(l, ctx)
-        dr = derive_needles(r, ctx)
-        if dl and dr:
-            return _or_merge(dl, dr)
+def _int_leaf(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Optional[int]]]:
+    """(col, lo, hi) closed interval a comparison or IN node requires of
+    a verbatim int column, None = open; IN becomes its hull (an
+    over-approximation, sound for pruning)."""
+    if cls == "In":
+        name = _attr_name(kids[0])
+        if name not in ctx.verbatim_int:
+            return None
+        vals = []
+        for k in kids[1:]:
+            val, dt = _literal(k)
+            if val is None or dt not in _INT_TYPES:
+                return None
+            vals.append(int(str(val)))
+        return (name, min(vals), max(vals)) if vals else None
+    op = _CMP_OPS.get(cls)
+    if op is None:
         return None
-    iv = _ts_leaf_interval(e, ctx)
-    if iv is not None:
-        name, lo, hi = iv
-        # open-above closes from the listing's mtime bound; too-wide
-        # bounded ranges degrade to year needles (_bounded_time_groups)
-        return _bounded_time_groups(name, lo, hi, ctx)
-    yv = _year_leaf(e, ctx)
-    if yv is not None:
-        name, lo, hi = yv
-        if lo is not None and hi is None:
-            hi = _close_year_hi(ctx)
-        if lo is not None and hi is not None:
-            g = _render_years(name, ctx, lo, hi)
-            return [g] if g else None
-        return None
+    strict = int(cls in ("GreaterThan", "LessThan"))
+    for a, b, flip in ((kids[0], kids[1], False), (kids[1], kids[0], True)):
+        name = _attr_name(a)
+        if name not in ctx.verbatim_int:
+            continue
+        val, dt = _literal(b)
+        if val is None or dt not in _INT_TYPES:
+            continue
+        v = int(str(val))
+        o = _FLIP[op] if flip else op
+        if o == "==":
+            return name, v, v
+        if o == ">=":
+            return name, v + strict, None
+        return name, None, v - strict
+    return None
+
+
+def _leaf_needles(e, cls, kids, ctx: PushdownContext) -> Optional[Needles]:
+    """Needles of one conjunct ``e`` (class ``cls``, children ``kids``)
+    that is not a time or ``year(ts)`` comparison and not an Or."""
     if cls in ("EqualTo", "EqualNullSafe"):
-        l, r = _children(e)
-        return _eq_needles(l, r, ctx)
+        return _eq_needles(*kids, ctx)
     if cls in ("Contains", "StartsWith", "EndsWith"):
-        l, r = _children(e)
+        l, r = kids
         name = _attr_name(l)
         val, dt = _literal(r)
         if name in ctx.verbatim_str and dt == "string" and val is not None:
@@ -718,7 +700,7 @@ def derive_needles(e, ctx: PushdownContext) -> Optional[Needles]:
             return [[s]] if s else None
         return None
     if cls == "Like":
-        l, r = _children(e)
+        l, r = kids
         name = _attr_name(l)
         val, dt = _literal(r)
         if name in ctx.verbatim_str and dt == "string" and val is not None:
@@ -736,7 +718,6 @@ def derive_needles(e, ctx: PushdownContext) -> Optional[Needles]:
             return [[s] for s in segs] or None
         return None
     if cls == "In":
-        kids = _children(e)
         side = _ts_attr(kids[0], ctx)
         if side is not None:
             # to_date(ts) IN (d1, d2, ...): union each literal's day
@@ -832,6 +813,118 @@ def derive_needles(e, ctx: PushdownContext) -> Optional[Needles]:
     return None
 
 
+# conjunct classes whose children the leaf classifiers read
+_KIDS_READ = {*_CMP_OPS, "In", "Contains", "StartsWith", "EndsWith", "Like", "Or"}
+
+
+@dataclass
+class Conjuncts:
+    """The top-level conjuncts of one analyzed condition, each classified
+    once by ``classify``: what the listing tier, the per-file range test
+    and the needle derivation each read."""
+
+    # file-constant conjunct nodes (log_file / hive partition keys only)
+    files: list = field(default_factory=list)
+    # time column -> intersected (lo_us, hi_us), None = open
+    ts: dict = field(default_factory=dict)
+    # time column -> intersected (lo_year, hi_year) of year(ts) leaves
+    years: dict = field(default_factory=dict)
+    # verbatim int column -> intersected closed (lo, hi)
+    ints: dict = field(default_factory=dict)
+    # in conjunct order: a needle CNF, or the two classified branches of
+    # an Or, derived once the open-above bound is known
+    leaves: list = field(default_factory=list)
+
+    def time_lower(self) -> dict:
+        """{time column: (lo_us, None)}: the lower bound each time column
+        must reach; ``year(ts) >= y`` counts from Jan 1 of y (the session
+        zone's offset is inside the 2-day mtime slack)."""
+        req: dict = {}
+        for name, (lo, _hi) in self.ts.items():
+            if lo is not None:
+                narrow(req, name, lo, None)
+        for name, (y, _hi) in self.years.items():
+            if y is None:
+                continue
+            try:
+                days = (_dt.date(y, 1, 1) - _dt.date(1970, 1, 1)).days
+            except (ValueError, OverflowError):
+                continue
+            narrow(req, name, days * _US_PER_DAY, None)
+        return req
+
+    def needs_bound(self) -> bool:
+        """True when the needles close an open-above time range with the
+        listing's max mtime (here or in an Or branch)."""
+        return any(
+            lo is not None and hi is None
+            for iv in (self.ts, self.years)
+            for lo, hi in iv.values()
+        ) or any(
+            isinstance(leaf, tuple) and (leaf[0].needs_bound() or leaf[1].needs_bound())
+            for leaf in self.leaves
+        )
+
+    def needles(self, ctx: PushdownContext) -> Optional[Needles]:
+        groups: Needles = []
+        for leaf in self.leaves:
+            if isinstance(leaf, tuple):
+                dl, dr = (branch.needles(ctx) for branch in leaf)
+                if dl and dr:
+                    groups += _or_merge(dl, dr)
+            else:
+                groups += leaf
+        for name, (lo, hi) in self.ts.items():
+            # open-above closes from the listing's mtime bound; too-wide
+            # bounded ranges degrade to year needles
+            groups += _bounded_time_groups(name, lo, hi, ctx) or []
+        for name, (lo, hi) in self.years.items():
+            if lo is not None and hi is None:
+                hi = _close_year_hi(ctx)
+            if lo is not None and hi is not None:
+                g = _render_years(name, ctx, lo, hi)
+                if g:
+                    groups.append(g)
+        return groups or None
+
+
+def classify(cond, ctx: PushdownContext, prune_cols: Optional[set] = None) -> Conjuncts:
+    """One pass over the top-level conjuncts of ``cond``. A conjunct is a
+    time interval (intersected per column, so BOUNDED ranges split across
+    leaves — ``ts >= a AND ts < b``, BETWEEN's rewrite, ``to_date ==`` —
+    give ONE day group), a ``year(ts)`` range, a needle leaf (an int
+    equality or IN is also an int interval), an Or whose branches are
+    classified the same way (its needles push only if both branches
+    derive some), or, with ``prune_cols``, a file-constant conjunct for
+    the listing tier."""
+    out = Conjuncts()
+    for c, cls in _flatten_and(cond):
+        kids = _children(c) if cls in _KIDS_READ else None
+        iv = _ts_leaf_interval(cls, kids, ctx)
+        if iv is not None:
+            narrow(out.ts, *iv)
+            continue
+        yv = _year_leaf(cls, kids, ctx)
+        if yv is not None:
+            narrow(out.years, *yv)
+            continue
+        iv = _int_leaf(cls, kids, ctx)
+        if iv is not None:
+            narrow(out.ints, *iv)
+        if cls == "Or":
+            if prune_cols and _file_constant(c, cls, kids, prune_cols):
+                out.files.append(c)
+            else:
+                out.leaves.append((classify(kids[0], ctx), classify(kids[1], ctx)))
+            continue
+        g = _leaf_needles(c, cls, kids, ctx)
+        if g:
+            out.leaves.append(g)
+        elif iv is None and prune_cols and _file_constant(c, cls, kids, prune_cols):
+            out.files.append(c)
+    return out
+
+
 def cnf_predicate(cnf: Needles, value: Column) -> Column:
     """AND of OR-of-needles over the raw line column ``value``.
 
@@ -873,52 +966,39 @@ _QUERY_LOCAL_NODES = {
 }
 
 
-def _attrs_and_pruner_safe(e) -> Tuple[set, bool]:
-    """(attribute names referenced, safe-to-evaluate-out-of-query).
+def _attrs_and_pruner_safe(e, s=None, kids=None) -> Tuple[set, bool]:
+    """(attribute names referenced, safe-to-evaluate-out-of-query) of
+    node ``e`` (class ``s`` and children ``kids`` when already read).
 
     Safe means: no query-local node (see _QUERY_LOCAL_NODES) and no
     subquery expression — those either change value across queries or
     cannot be re-planned against the tiny one-column file frame."""
-    s = _simple(e)
+    s = s or _simple(e)
     if s in _QUERY_LOCAL_NODES or "Subquery" in s or s in ("Exists", "InSubquery"):
         return set(), False
     names = {e.name()} if s == "AttributeReference" else set()
     ok = True
-    for c in _children(e):
+    for c in _children(e) if kids is None else kids:
         n, o = _attrs_and_pruner_safe(c)
         names |= n
         ok = ok and o
     return names, ok
 
 
-def file_prune_sql(cond, prune_cols: Optional[set] = None) -> Optional[str]:
-    """SQL string of the conjuncts of ``cond`` that reference ONLY
-    file-constant columns (``prune_cols``: log_file and, when
-    hive_partitioning is on, the partition keys — all deterministic
-    functions of the file path), or None when no conjunct qualifies.
+def _file_constant(e, cls, kids, prune_cols: set) -> bool:
+    """True when conjunct ``e`` references ONLY file-constant columns
+    (``prune_cols``: log_file and, when hive_partitioning is on, the
+    partition keys — all deterministic functions of the file path) and
+    can be evaluated outside the query.
 
-    Every row of a file carries the same value for those columns, so
-    such a conjunct is file-constant: a file where it evaluates to
-    false/NULL contributes no row to the filtered result and can be
-    dropped from the LISTING — skipping whole files beats any raw-line
-    needle. Evaluation happens through Spark itself (a one-column
-    DataFrame of the bind-time listing with the same derived columns
-    attached), so LIKE/regexp/substring semantics are exact by
-    construction. Reference parallelism anchor: the reference opens one
-    reader per listed file (src/httpd_log_multi_file_info.cpp:236-249)
-    — pruning the listing is the Spark-native analogue of never
-    opening the file."""
-    if prune_cols is None:
-        prune_cols = {"log_file"}
-    keep = []
-    for c in _flatten_and(cond):
-        try:
-            names, safe = _attrs_and_pruner_safe(c)
-            if safe and names and names <= prune_cols and c.deterministic():
-                keep.append(f"({c.sql()})")
-        except Exception:
-            continue
-    return " AND ".join(keep) if keep else None
+    Every row of a file carries the same value for those columns, so a
+    file where such a conjunct evaluates to false/NULL contributes no
+    row to the filtered result and can be dropped from the LISTING."""
+    try:
+        names, safe = _attrs_and_pruner_safe(e, cls, kids)
+        return safe and bool(names) and names <= prune_cols and e.deterministic()
+    except Exception:
+        return False
 
 
 _GLOB_META = set("*?[]{}\\,")
@@ -992,9 +1072,8 @@ def stream_glob_for(cond, watch_path: str) -> Optional[str]:
     def _plain(s: str) -> bool:
         return bool(s) and "/" not in s and not (set(s) & _GLOB_META) and "%" not in s and "_" not in s
 
-    for c in _flatten_and(cond):
+    for c, s in _flatten_and(cond):
         try:
-            s = _simple(c)
             if s == "EndsWith":
                 l, r = _children(c)
                 if _attr_name(l) == "log_file":
@@ -1050,47 +1129,15 @@ def stream_glob_for(cond, watch_path: str) -> Optional[str]:
     return None
 
 
-def cond_ts_lower_us(cond, ctx: PushdownContext) -> Optional[int]:
-    """Largest lower time bound (epoch µs) any top-level CONJUNCT of
-    ``cond`` places on a recognized %t column, or None.
-
-    Used for FILE-LEVEL mtime pruning: under the documented mtime
-    contract (a log line's %t instant is never later than its file's
-    last modification + skew margin), a file whose mtime + margin is
-    below this bound cannot contain a qualifying row, so the whole
-    file is skipped — rotated-log corpora answer "since yesterday"
-    without opening years of old files. Only conjuncts count (a
-    disjunct's other branch could still match); equality and bounded
-    ranges bound below too; year(ts) >= y maps to Jan 1 of y (the
-    session-zone offset is inside the 2-day margin)."""
-    best: Optional[int] = None
-    for c in _flatten_and(cond):
-        iv = _ts_leaf_interval(c, ctx)
-        if iv is not None:
-            lo = iv[1]
-            if lo is not None:
-                best = lo if best is None else max(best, lo)
-            continue
-        yv = _year_leaf(c, ctx)
-        if yv is not None and yv[1] is not None:
-            y = yv[1]
-            try:
-                days = (_dt.date(y, 1, 1) - _dt.date(1970, 1, 1)).days
-            except (ValueError, OverflowError):
-                continue
-            lo = days * _US_PER_DAY
-            best = lo if best is None else max(best, lo)
-    return best
-
-
 class LineFilterableFrame(DataFrame):
     """read_httpd_log's fast-path result: a plain DataFrame whose
-    ``filter``/``where`` additionally attempts two scan re-plans —
-    pruning the FILE LISTING from log_file-only conjuncts (whole files
-    skipped) and the raw-line Contains pushdown (non-matching lines
-    never reach the parse regex). Every derived transformation returns
-    a plain DataFrame, so the pushdown applies exactly where it is
-    sound: predicates placed directly on the scan result. Its own plan
+    ``filter``/``where`` additionally re-plans the scan — the FILE
+    LISTING pruned by two tiers (the file-constant conjuncts, and a
+    per-file range test against a fresh stat: mtime for time columns,
+    cached column stats for int columns), and raw-line Contains needles
+    below the parse regex. Every derived transformation returns a plain
+    DataFrame, so the pushdown applies exactly where it is sound:
+    predicates placed directly on the scan result. Its own plan
     (``rebuild()``) is built on first use of ``_jdf``; ``filter``
     resolves predicates against a schema-only stand-in instead."""
 
@@ -1108,7 +1155,7 @@ class LineFilterableFrame(DataFrame):
         file_pairs: Optional[list] = None,
         prune_prepare: Optional[Callable[[DataFrame], DataFrame]] = None,
         prune_cols: Optional[set] = None,
-        file_mtimes_fn: Optional[Callable[[], Optional[list]]] = None,
+        files: Optional[list] = None,
         stream_glob_fn: Optional[Callable] = None,
         colstats_fp: Optional[str] = None,
     ):
@@ -1116,14 +1163,18 @@ class LineFilterableFrame(DataFrame):
         self._lf_schema = schema_json
         self._lf_stand_in: Optional[DataFrame] = None
         self._lf_rebuild = rebuild
-        # streaming twin of the listing prune: cond -> pathGlobFilter
-        # glob (or None); set only by the stream source, whose rebuild
-        # takes the glob where the batch rebuild takes a file subset
+        # streaming twin of the listing prune: file-constant conjunct ->
+        # pathGlobFilter glob (or None); set only by the stream source,
+        # whose rebuild takes the glob where the batch rebuild takes a
+        # file subset
         self._lf_stream_glob_fn = stream_glob_fn
         self._lf_ctx = ctx
-        # (bind-time path, row-visible log_file value) pairs; None when
-        # the reader can't vouch the mapping (remote schemes) or the
-        # rebuild can't take a subset (streaming source)
+        # the bind-time listing a filter stats for mtimes; None for a
+        # stream (its file set grows, so it takes no stat)
+        self._lf_paths = files
+        # (bind-time path, row-visible log_file value) pairs, aligned
+        # with ``files``; None when the reader can't vouch the mapping
+        # (remote schemes) or the rebuild can't take a subset (streams)
         self._lf_files = file_pairs
         # attaches the same derived file-constant columns (hive
         # partition keys) to the tiny pruning frame that the scan
@@ -1131,13 +1182,9 @@ class LineFilterableFrame(DataFrame):
         # identically; identity when hive_partitioning is off
         self._lf_prune_prepare = prune_prepare
         self._lf_prune_cols = prune_cols or {"log_file"}
-        # per-file epoch-second mtimes aligned with file_pairs (None
-        # entries = unknown, never pruned); None when the mtime bound
-        # is opted out or the scan is a stream — see reader.py
-        self._lf_mtimes_fn = file_mtimes_fn
         # reader-config fingerprint scoping the column-stats cache
         # (format regex + line_filter — see colstats.py); None disables
-        # the colstats tier (e.g. streams)
+        # the colstats part of the range test (e.g. streams)
         self._lf_colstats_fp = colstats_fp
 
     @property
@@ -1159,100 +1206,77 @@ class LineFilterableFrame(DataFrame):
             self._lf_stand_in = DataFrame(jdf, self.sparkSession)
         return self._lf_stand_in.filter(condition)._jdf.queryExecution().analyzed()
 
-    # skew slack for FILE-LEVEL mtime pruning: same 2-day contract the
-    # mtime-closed open-above bound documents (README "+2-day margin")
-    _MTIME_PRUNE_SLACK_US = 2 * _US_PER_DAY
+    # a file's range on a recognized time column is (-inf, mtime +
+    # slack]: the 2-day skew margin of the mtime contract (README)
+    _MTIME_SLACK_US = 2 * _US_PER_DAY
 
-    def _time_pruned_subset(self, cond) -> Optional[list]:
-        """Bind-time paths whose mtime (+2-day skew slack) can still
-        hold a row passing ``cond``'s lower time bound; None when
-        nothing prunes or the machinery is unavailable/opted out."""
-        if not self._lf_files or self._lf_mtimes_fn is None:
-            return None
-        lo = cond_ts_lower_us(cond, self._lf_ctx)
-        if lo is None:
-            return None
-        mts = self._lf_mtimes_fn()
-        if mts is None or len(mts) != len(self._lf_files):
-            return None
-        keep: list = []
-        dropped: list = []
-        for (b, _v), mt in zip(self._lf_files, mts):
-            if mt is None or int(mt * 1_000_000) + self._MTIME_PRUNE_SLACK_US >= lo:
-                keep.append(b)
-            else:
-                dropped.append(b)
-        if not dropped:
-            return None
-        # The recorded mtimes come from the BIND-TIME listing; a file
-        # appended since then can hold rows newer than that stale stat.
-        # Re-stat ONLY the would-drop set fresh before committing to
-        # skipping it (one stat per dropped file — far cheaper than a
-        # wrong skip, and the kept set needs no re-check: a newer mtime
-        # only ever widens, never shrinks, the keep decision).
-        from .fs import file_mtimes
-
-        fresh = file_mtimes(self.sparkSession, dropped, fresh=True)
-        rescued = {
-            b
-            for b, mt in zip(dropped, fresh)
-            if mt is None
-            or int(mt * 1_000_000) + self._MTIME_PRUNE_SLACK_US >= lo
-        }
-        if len(rescued) == len(dropped):
-            return None
-        keep_set = set(keep) | rescued
-        return [b for b, _v in self._lf_files if b in keep_set]
-
-    def _colstats_pruned_subset(self, cond) -> Optional[list]:
-        """Bind-time paths whose per-file column stats can still satisfy
-        every recognized int-column conjunct of ``cond``; None when
-        nothing prunes (off, no stats-able conjunct, no fresh stats).
-        See sources/colstats.py for the contract and gathering policy."""
+    def _colstats_policy(self) -> Optional[str]:
+        """'auto' or 'eager' when the column-stats part of the range
+        test applies to this frame (see sources/colstats.py), else None."""
         if (
             not self._lf_files
             or len(self._lf_files) < 2
             or self._lf_colstats_fp is None
+            or not self._lf_ctx.verbatim_int
         ):
             return None
         policy = str(
             self.sparkSession.conf.get("spark.graft.pushdown.colStats", "auto")
         ).lower()
-        if policy not in ("auto", "eager"):
-            return None
-        int_cols = self._lf_ctx.verbatim_int
-        if not int_cols:
-            return None
-        from .colstats import _disjoint, cond_int_intervals, stats_for
+        return policy if policy in ("auto", "eager") else None
 
-        req = cond_int_intervals(cond, int_cols)
-        if not req:
-            return None
-        stats = stats_for(
-            self.sparkSession,
-            self._lf_rebuild,
-            self._lf_colstats_fp,
-            self._lf_files,
-            int_cols,
-            policy,
+    def _ranged_subset(self, sigs, time_req: dict, int_req: dict, policy) -> Optional[list]:
+        """Bind-time paths whose per-file range can still meet every
+        required interval: (-inf, mtime + slack] on each time column of
+        ``time_req``, the cached column stats (keyed by the same stat)
+        on each int column of ``int_req``. A file without a stat is
+        kept. None when nothing prunes."""
+        stats = (
+            stats_for(
+                self.sparkSession,
+                self._lf_rebuild,
+                self._lf_colstats_fp,
+                self._lf_files,
+                sigs,
+                self._lf_ctx.verbatim_int,
+                policy,
+            )
+            if int_req
+            else {}
         )
-        if not stats:
-            return None
-        keep = [
-            b
-            for b, _v in self._lf_files
-            if b not in stats or not _disjoint(stats[b], req)
-        ]
+        req = {**time_req, **int_req}
+        keep = []
+        for (b, _v), sig in zip(self._lf_files, sigs):
+            rng = dict(stats.get(b, {}))
+            if sig is not None:
+                hi = sig[0] * 1000 + self._MTIME_SLACK_US
+                rng.update((col, (None, hi)) for col in time_req)
+            if not _disjoint(rng, req):
+                keep.append(b)
         return keep if len(keep) < len(self._lf_files) else None
 
-    def _pruned_subset(self, cond) -> Optional[list]:
-        """Bind-time paths surviving the file-constant conjuncts of
-        ``cond`` (log_file / hive partition keys); None when nothing
-        prunes (or pruning is unavailable)."""
+    def _pruned_subset(self, nodes: list) -> Optional[list]:
+        """Bind-time paths surviving the file-constant conjuncts
+        ``nodes`` (log_file / hive partition keys); None when nothing
+        prunes (or pruning is unavailable).
+
+        Evaluation happens through Spark itself (a one-column DataFrame
+        of the bind-time listing with the same derived columns
+        attached), so LIKE/regexp/substring semantics are exact by
+        construction. Reference parallelism anchor: the reference opens
+        one reader per listed file
+        (src/httpd_log_multi_file_info.cpp:236-249) — pruning the
+        listing is the Spark-native analogue of never opening the
+        file."""
         if not self._lf_files:
             return None
-        sql = file_prune_sql(cond, self._lf_prune_cols)
-        if sql is None:
+        keep_sql = []
+        for c in nodes:
+            try:
+                keep_sql.append(f"({c.sql()})")
+            except Exception:
+                continue
+        if not keep_sql:
             return None
         spark = self.sparkSession
         # the VALUES fast path goes through the SQL PARSER, whose string
@@ -1284,7 +1308,7 @@ class LineFilterableFrame(DataFrame):
             )
         if self._lf_prune_prepare is not None:
             tiny = self._lf_prune_prepare(tiny)
-        keep = {r[0] for r in tiny.filter(F.expr(sql)).select("log_file").collect()}
+        keep = {r[0] for r in tiny.filter(F.expr(" AND ".join(keep_sql))).select("log_file").collect()}
         if len(keep) >= len(self._lf_files):
             return None  # nothing pruned: keep the original plan
         return [b for b, v in self._lf_files if v in keep]
@@ -1303,36 +1327,51 @@ class LineFilterableFrame(DataFrame):
             if _simple(jplan) != "Filter":
                 return super().filter(condition)
             cond = jplan.condition()
-            ctx = self._lf_ctx
+            spark = self.sparkSession
             # margin is a session-zone property, so read it at filter
             # time: date semantics follow spark.sql.session.timeZone
-            tz = self.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-            ctx.margin_days = 1 if tz in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z") else 2
-            subset = self._pruned_subset(cond)
-            for extra in (
-                self._time_pruned_subset(cond),
-                self._colstats_pruned_subset(cond),
-            ):
-                if extra is not None:
-                    # intersect with the predicate-pruned set (each is
-                    # sound independently, so the intersection is too)
-                    if subset is None:
-                        subset = extra
-                    else:
-                        eset = set(extra)
-                        subset = [b for b in subset if b in eset]
+            tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
+            ctx = replace(
+                self._lf_ctx,
+                margin_days=1 if tz in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z") else 2,
+            )
+            conj = classify(cond, ctx, self._lf_prune_cols)
+            subset = self._pruned_subset(conj.files)
+            mtime_on = (
+                self._lf_paths is not None
+                and (conj.ts or conj.years or conj.needs_bound())
+                and str(spark.conf.get("spark.graft.pushdown.mtimeBound", "true")).lower()
+                == "true"
+            )
+            time_req = conj.time_lower() if mtime_on and self._lf_files else {}
+            policy = self._colstats_policy() if conj.ints else None
+            int_req = conj.ints if policy else {}
+            bound = mtime_on and conj.needs_bound()
+            if time_req or int_req or bound:
+                # ONE fresh stat of the bind-time listing per filter: a
+                # file appended since the bind is seen as it is now
+                sigs = FS.file_sigs(spark, self._lf_paths)
+                if time_req or int_req:
+                    ranged = self._ranged_subset(sigs, time_req, int_req, policy)
+                    if ranged is not None:
+                        # each tier is sound alone, so their
+                        # intersection is too
+                        keep = set(ranged)
+                        subset = ranged if subset is None else [b for b in subset if b in keep]
+                if bound and sigs and None not in sigs:
+                    ctx.hi_us = max(s[0] for s in sigs) * 1000
             if subset is not None and not subset:
                 # no file can produce a passing row: empty result,
                 # Catalyst folds the always-false filter to an empty
                 # LocalRelation — nothing is listed, opened, or parsed
                 return super().filter(F.lit(False))
-            cnf = derive_needles(cond, ctx)
+            cnf = conj.needles(ctx)
             glob = None
             if subset is None and self._lf_stream_glob_fn is not None:
                 # per-trigger listing prune for streams: a log_file
                 # conjunct becomes the source's pathGlobFilter, applied
                 # by the file stream source at EVERY trigger's listing
-                glob = self._lf_stream_glob_fn(cond)
+                glob = next((g for g in map(self._lf_stream_glob_fn, conj.files) if g), None)
             if not cnf and subset is None and glob is None:
                 return super().filter(condition)
             if subset is not None:

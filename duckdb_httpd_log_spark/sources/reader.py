@@ -580,55 +580,6 @@ def read_httpd_log(
         )
         return _attach_hive_cols(_apply_program(scan, prog), hive_keys)
 
-    _mt_cache: list = []  # [(max_mtime_or_None, wall_time_of_stat)]
-    _mt_stale: list = []  # non-empty once a refresh fired: stat fresh from then on
-
-    def _mtime_hi_us():
-        # upper-bound epoch-µs for any %t instant in this FIXED file
-        # set: the bind-time listing's max modification time (see
-        # fs.max_mtime, answered from the listing's own mtime hints).
-        # _rebuild pins the same bind-time list, so the bound and the
-        # scan always describe the SAME files. Opt out with
-        # spark.graft.pushdown.mtimeBound=false (e.g. for pathological
-        # corpora carrying future-dated lines); the conf is re-read on
-        # EVERY derivation — only the mtime stat itself is cached — so
-        # toggling it between filters on the same frame takes effect.
-        if str(
-            spark.conf.get("spark.graft.pushdown.mtimeBound", "true")
-        ).lower() != "true":
-            return None
-        # Staleness refresh (r12 ADVICE residual / verdict stretch 9):
-        # the bound must cover rows APPENDED since the stat was taken —
-        # the 2-day needle margin absorbs short derivation->action gaps,
-        # but a session re-filtering the same frame much later needs a
-        # fresh stat. Refresh after mtimeRefreshSec (default 6 h, well
-        # inside the margin); the refresh stats FRESH (bind-time listing
-        # hints are what went stale), and any un-stattable file yields
-        # None = no bound (weaker pushdown, never a dropped row).
-        import time as _time
-
-        refresh_sec = float(
-            spark.conf.get("spark.graft.pushdown.mtimeRefreshSec", "21600")
-        )
-        if _mt_cache and _time.time() - _mt_cache[0][1] > refresh_sec:
-            _mt_cache.clear()
-            _mt_stale.append(True)
-        if not _mt_cache:
-            from .fs import file_mtimes, max_mtime
-
-            if _mt_stale:
-                mts = file_mtimes(spark, files, fresh=True)
-                mt = (
-                    None
-                    if (not mts or any(m is None for m in mts))
-                    else max(mts)
-                )
-            else:
-                mt = max_mtime(spark, files)
-            _mt_cache.append((mt, _time.time()))
-        mt = _mt_cache[0][0]
-        return None if mt is None else int(mt * 1_000_000)
-
     # (bind path, row-visible log_file value) pairs for listing pruning
     # — only when the mapping is provable: local paths normalize to
     # os.path.abspath (what input_file_name round-trips to through
@@ -655,38 +606,11 @@ def read_httpd_log(
         list(zip(files, _vis)) if all(v is not None for v in _vis) else None
     )
 
-    # epoch digit-prefix derivation only pays when the parse it skips
-    # is expensive (r11 A/B: 9-field combined 0.84->0.67 s, 3-field no
-    # win — the prefix Contains costs more than the short regex), so
-    # formats below the field-count threshold skip it entirely
-    epoch_min_fields = int(
-        spark.conf.get("spark.graft.pushdown.epochMinFields", "6")
-    )
-
-    _per_file_mt_cache: list = []
-
-    def _file_mtimes():
-        # per-file mtimes for FILE-LEVEL time pruning (a "since X"
-        # conjunct skips files whose mtime + 2-day slack precedes the
-        # bound) — same contract and opt-out conf as the mtime-closed
-        # open-above bound; the stat list is cached, the conf re-read
-        if str(
-            spark.conf.get("spark.graft.pushdown.mtimeBound", "true")
-        ).lower() != "true":
-            return None
-        if not _per_file_mt_cache:
-            from .fs import file_mtimes
-
-            _per_file_mt_cache.append(file_mtimes(spark, files))
-        return _per_file_mt_cache[0]
-
     return LineFilterableFrame(
         spark,
         _schema_json(schema, hive_keys),
         _rebuild,
-        pushdown_context(
-            parsed, schema, hi_us_fn=_mtime_hi_us, epoch_min_fields=epoch_min_fields
-        ),
+        pushdown_context(parsed, schema),
         file_pairs=file_pairs,
         # hive partition keys are deterministic functions of log_file,
         # so predicates on them are file-constant too: the tiny pruning
@@ -695,7 +619,7 @@ def read_httpd_log(
             (lambda tiny: _attach_hive_cols(tiny, hive_keys)) if hive_keys else None
         ),
         prune_cols={"log_file", *hive_keys},
-        file_mtimes_fn=_file_mtimes,
+        files=files,
         # column-stats cache scope: stats describe the rows THIS reader
         # config parses out of a file, so the cache key carries the
         # compiled regex + line_filter (r13 ADVICE: a second reader
@@ -741,9 +665,14 @@ def _date_token_run(fmt: str):
     return None
 
 
-def pushdown_context(
-    parsed: ParsedFormat, schema: list, hi_us_fn=None, epoch_min_fields: int = 0
-):
+# epoch digit-prefix derivation only pays when the parse it skips is
+# expensive (r11 A/B: 9-field combined 0.84->0.67 s, 3-field no win —
+# the prefix Contains costs more than the short regex), so formats with
+# fewer capture groups skip it entirely
+EPOCH_MIN_FIELDS = 6
+
+
+def pushdown_context(parsed: ParsedFormat, schema: list):
     """PushdownContext for a scan of ``parsed`` emitting ``schema``
     (name, type) pairs — what sources/pushdown.py may assume VERBATIM
     (shared by the batch reader and the streaming source):
@@ -816,14 +745,14 @@ def pushdown_context(
     # single epoch %t fields: the raw token is the decimal epoch value,
     # so bounded ranges push digit-prefix needle covers — but only when
     # the parse the needles skip is expensive enough to beat the byte
-    # scan (epoch_min_fields gate; r11 A/B: 3-field formats lose)
+    # scan (EPOCH_MIN_FIELDS gate)
     _epoch_unit = {
         TsFormat.EPOCH_SEC: 1_000_000,
         TsFormat.EPOCH_MSEC: 1_000,
         TsFormat.EPOCH_USEC: 1,
     }
     ts_epoch = {}
-    if parsed.num_capture_groups >= epoch_min_fields:
+    if parsed.num_capture_groups >= EPOCH_MIN_FIELDS:
         ts_epoch = {
             f.column_name: _epoch_unit[f.timestamp_type]
             for f in parsed.fields
@@ -839,7 +768,6 @@ def pushdown_context(
         ts_year_cols=ts_year,
         ts_epoch_cols=ts_epoch,
         ts_date_cols=ts_date,
-        hi_us_fn=hi_us_fn,
     )
 
 

@@ -83,13 +83,9 @@ def read_httpd_log_stream(
         lines = scan.filter(_line_keep(line_filter, cnf)._jc).select(prog.lines)
         return _apply_program(DataFrame(lines, spark), prog)
 
-    # same epoch cost gate as the batch reader; no hi_us_fn (a stream's
-    # future files arrive with later mtimes — no sound bind-time bound)
-    # and no file_pairs (the file set grows; listing pruning re-plans as
-    # a per-trigger pathGlobFilter instead — see stream_glob_fn)
-    epoch_min_fields = int(
-        spark.conf.get("spark.graft.pushdown.epochMinFields", "6")
-    )
+    # no bind-time file list: a stream's future files arrive with later
+    # mtimes (no sound bound, no stat), and listing pruning re-plans as
+    # a per-trigger pathGlobFilter instead — see stream_glob_fn
     # a user-supplied pathGlobFilter must not be overwritten (glob
     # intersection isn't expressible as one glob), and recursive lookup
     # puts subdirectory text between the watch dir and the filename
@@ -98,14 +94,14 @@ def read_httpd_log_stream(
     glob_fn = (
         None
         if ("pathGlobFilter" in options or _recursive)
-        else (lambda cond: stream_glob_for(cond, path))
+        else (lambda conjunct: stream_glob_for(conjunct, path))
     )
     schema = generate_schema(parsed, False)
     return LineFilterableFrame(
         spark,
         _schema_json(schema),
         _scan,
-        pushdown_context(parsed, schema, epoch_min_fields=epoch_min_fields),
+        pushdown_context(parsed, schema),
         stream_glob_fn=glob_fn,
     )
 

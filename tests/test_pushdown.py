@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_httpd_log_spark import read_httpd_log
+from duckdb_httpd_log_spark.sources import reader
 from duckdb_httpd_log_spark.sources.pushdown import LineFilterableFrame
 
 
@@ -612,17 +613,15 @@ _EFMT = "%h %{sec}t %>s"
 
 
 @pytest.fixture()
-def epoch_push(spark):
+def epoch_push(monkeypatch):
     # r12: epoch needle derivation is gated on parse cost (the r11 A/B
     # showed cheap formats lose); drop the gate so these tests exercise
     # the derivation itself
-    spark.conf.set("spark.graft.pushdown.epochMinFields", "0")
-    yield
-    spark.conf.unset("spark.graft.pushdown.epochMinFields")
+    monkeypatch.setattr(reader, "EPOCH_MIN_FIELDS", 0)
 
 
 def test_epoch_cheap_format_gated_off_by_default(spark, epoch_path):
-    # 3 capture groups < default epochMinFields=6: the byte scan would
+    # 3 capture groups < default EPOCH_MIN_FIELDS=6: the byte scan would
     # cost more than the short regex it skips — derivation must bail
     df = read_httpd_log(spark, epoch_path, format_str=_EFMT)
     pred = F.col("timestamp").between("2024-10-10 00:00:00", "2024-10-10 23:59:59")
@@ -1068,25 +1067,22 @@ def test_strftime_date_needles_non_utc_session_tz(spark, strftime_path):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def test_epoch_gate_boundary_exact_field_count(spark, tmp_path):
-    # a format with EXACTLY epochMinFields capture groups passes the
+def test_epoch_gate_boundary_exact_field_count(spark, tmp_path, monkeypatch):
+    # a format with EXACTLY EPOCH_MIN_FIELDS capture groups passes the
     # gate (>= comparison), one fewer does not
     p = tmp_path / "gate.log"
     base = 1727740800
     p.write_text("".join(f"1.1.1.{d} - {base + d * 86400} 200\n" for d in range(5)))
     fmt4 = "%h %l %{sec}t %>s"  # 4 capture groups
-    spark.conf.set("spark.graft.pushdown.epochMinFields", "4")
-    try:
-        df = read_httpd_log(spark, str(p), format_str=fmt4)
-        out = df.filter(F.to_date("timestamp") == "2024-10-03")
-        assert re.search(r"Contains\(value#\d+, \d+\)", _optimized(out))
-        spark.conf.set("spark.graft.pushdown.epochMinFields", "5")
-        df2 = read_httpd_log(spark, str(p), format_str=fmt4)
-        out2 = df2.filter(F.to_date("timestamp") == "2024-10-03")
-        assert "Contains(value" not in _optimized(out2)
-        assert out2.count() == out.count() == 1
-    finally:
-        spark.conf.unset("spark.graft.pushdown.epochMinFields")
+    monkeypatch.setattr(reader, "EPOCH_MIN_FIELDS", 4)
+    df = read_httpd_log(spark, str(p), format_str=fmt4)
+    out = df.filter(F.to_date("timestamp") == "2024-10-03")
+    assert re.search(r"Contains\(value#\d+, \d+\)", _optimized(out))
+    monkeypatch.setattr(reader, "EPOCH_MIN_FIELDS", 5)
+    df2 = read_httpd_log(spark, str(p), format_str=fmt4)
+    out2 = df2.filter(F.to_date("timestamp") == "2024-10-03")
+    assert "Contains(value" not in _optimized(out2)
+    assert out2.count() == out.count() == 1
 
 
 # --- per-file column-stats pruning (r13) --------------------------------------
@@ -1254,29 +1250,100 @@ def test_mtime_bound_refreshes_after_staleness_window(spark, tmp_path):
     import time
 
     # bind, then append a line dated BEYOND the bind-time mtime bound;
-    # with mtimeRefreshSec=0 every derivation re-stats fresh, so the
-    # refreshed bound covers the appended row and the pushed plan keeps
-    # it (the bind-time-pinned bound would have dropped it)
+    # every filter stats fresh, so the bound covers the appended row
+    # and the pushed plan keeps it (a bind-time-pinned bound would
+    # have dropped it)
     p = tmp_path / "grow.log"
     p.write_text(
         '1.1.1.1 - u [10/Oct/2024:01:00:00 +0000] "GET /a HTTP/1.1" 200 1\n'
     )
     mt = time.mktime((2024, 10, 11, 0, 0, 0, 0, 0, 0))
     os.utime(p, (mt, mt))
-    spark.conf.set("spark.graft.pushdown.mtimeRefreshSec", "0")
-    try:
-        df = read_httpd_log(spark, str(p), format_type="common")
-        pred = F.col("timestamp") >= "2024-10-01 00:00:00"
-        assert df.filter(pred).count() == 1  # bound derived + cached
-        with open(p, "a") as fh:  # appended row, one month later
-            fh.write(
-                '2.2.2.2 - u [20/Nov/2024:01:00:00 +0000] "GET /b HTTP/1.1" 200 2\n'
-            )
-        got = sorted(r.client_host for r in df.filter(pred).collect())
+    df = read_httpd_log(spark, str(p), format_type="common")
+    pred = F.col("timestamp") >= "2024-10-01 00:00:00"
+    assert df.filter(pred).count() == 1  # bound derived
+    with open(p, "a") as fh:  # appended row, one month later
+        fh.write(
+            '2.2.2.2 - u [20/Nov/2024:01:00:00 +0000] "GET /b HTTP/1.1" 200 2\n'
+        )
+    got = sorted(r.client_host for r in df.filter(pred).collect())
+    naive = super(LineFilterableFrame, df).filter(pred)
+    assert got == sorted(r.client_host for r in naive.collect()) == [
+        "1.1.1.1",
+        "2.2.2.2",
+    ]
+
+
+def test_refilter_after_append_keeps_new_row(spark, tmp_path):
+    # the open-above bound comes from a stat taken at each filter, not
+    # at the first: re-filtering the same frame after its file grew
+    # must equal the unpushed plan
+    import time
+
+    p = tmp_path / "tail.log"
+    p.write_text(
+        '1.1.1.1 - u [02/Oct/2024:01:00:00 +0000] "GET /a HTTP/1.1" 200 1\n'
+    )
+    mt = time.mktime((2024, 10, 3, 0, 0, 0, 0, 0, 0))
+    os.utime(p, (mt, mt))
+    df = read_httpd_log(spark, str(p), format_type="common")
+    pred = F.col("timestamp") >= "2024-10-01 00:00:00"
+    assert [r.client_host for r in df.filter(pred).collect()] == ["1.1.1.1"]
+    with open(p, "a") as fh:
+        fh.write(
+            '2.2.2.2 - u [20/Oct/2024:01:00:00 +0000] "GET /b HTTP/1.1" 200 2\n'
+        )
+    got = sorted(r.client_host for r in df.filter(pred).collect())
+    naive = sorted(
+        r.client_host for r in super(LineFilterableFrame, df).filter(pred).collect()
+    )
+    assert got == naive == ["1.1.1.1", "2.2.2.2"]
+
+
+def test_time_prune_rescues_appended_file(spark, rotated_dir):
+    # a file appended after the bind holds rows newer than its
+    # bind-time mtime: the filter's fresh stat keeps it
+    df = read_httpd_log(spark, rotated_dir + "/*.log", format_type="combined")
+    pred = F.col("timestamp") >= "2024-10-01 00:00:00"
+    assert len(df.filter(pred).inputFiles()) == 1
+    with open(os.path.join(rotated_dir, "2024-07.log"), "a") as fh:
+        fh.write(
+            '10.0.7.9 - u [15/Oct/2024:12:00:00 +0000] "GET /late HTTP/1.1" 200 9 "-" "ua"\n'
+        )
+    pruned = df.filter(pred)
+    naive = super(LineFilterableFrame, df).filter(pred)
+    assert len(pruned.inputFiles()) == 2
+    assert sorted(map(str, pruned.collect())) == sorted(map(str, naive.collect()))
+    assert pruned.count() == 4
+
+
+def test_one_stat_per_filter(spark, fleet, monkeypatch):
+    # a filter stats the bind-time listing at most once, and only when
+    # a time or int conjunct can use it
+    from duckdb_httpd_log_spark.sources import fs
+
+    from .conftest import dashboard_shapes
+
+    real, calls = fs.file_sigs, []
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(fs, "file_sigs", counting)
+    shapes = {
+        **dashboard_shapes(),
+        # an Or takes the stat only when a branch needs the open-above bound
+        "or_needles": (F.col("path") == "/m8") | (F.col("path") == "/m9"),
+        "or_since": (F.col("timestamp") >= "2024-10-01 00:00:00") | (F.col("status") == 200),
+    }
+    want = {"needle": 0, "listing": 0, "day": 1, "since": 1, "status5xx": 1, "or_needles": 0, "or_since": 1}
+    got = {}
+    for name, pred in shapes.items():
+        df = read_httpd_log(spark, fleet + "/*.log", format_type="combined")
+        calls.clear()
+        out = df.filter(pred)
+        got[name] = len(calls)
         naive = super(LineFilterableFrame, df).filter(pred)
-        assert got == sorted(r.client_host for r in naive.collect()) == [
-            "1.1.1.1",
-            "2.2.2.2",
-        ]
-    finally:
-        spark.conf.unset("spark.graft.pushdown.mtimeRefreshSec")
+        assert sorted(map(str, out.collect())) == sorted(map(str, naive.collect())), name
+    assert got == want

@@ -466,28 +466,6 @@ def test_read_remote_misnamed_gzip_raw_mode(spark, tmp_path):
     assert mixed.select("log_file").distinct().count() == 2
 
 
-def test_mtime_hints_populated_by_listing(spark, tmp_path):
-    # r11: the listing captures modification times, so max_mtime
-    # answers without a per-file getFileStatus round trip
-    import time as _time
-
-    from duckdb_httpd_log_spark.sources.fs import _MTIME_HINTS, expand_paths, max_mtime
-
-    d = tmp_path / "hints"
-    d.mkdir()
-    for i in range(3):
-        (d / f"f{i}.log").write_text("x\n")
-    for i in range(3):
-        m = _time.mktime((2024, 5, 1 + i, 0, 0, 0, 0, 0, 0))
-        os.utime(d / f"f{i}.log", (m, m))
-    mt = _time.mktime((2024, 5, 3, 0, 0, 0, 0, 0, 0))
-    files = expand_paths("file://" + str(d) + "/*.log", spark)
-    assert len(files) == 3
-    assert any(f.endswith("f2.log") and f in _MTIME_HINTS for f in files)
-    got = max_mtime(spark, files)
-    assert got is not None and abs(got - mt) < 2.0
-
-
 # ---------------------------------------------------------------------------
 # Remote listing prunes (r14, r13 verdict item 1): the three file-skip
 # tiers (predicate, mtime, column-stats) fire on scheme-qualified
@@ -589,6 +567,54 @@ def test_viewfs_mtime_file_prune_value_identity(spark, tmp_path):
     assert len(pushed.inputFiles()) == 1  # old.log mtime-pruned
     assert sorted(map(str, pushed.collect())) == sorted(map(str, naive.collect()))
     assert [r.client_host for r in pushed.collect()] == ["2.2.2.2"]
+
+
+def test_viewfs_since_filter_stats_by_parent_listing(spark, tmp_path, monkeypatch):
+    # a "since" filter stats the remote listing through ONE listStatus
+    # per parent directory and no per-file getFileStatus
+    import time as _time
+
+    from duckdb_httpd_log_spark.sources import fs
+    from duckdb_httpd_log_spark.sources.pushdown import LineFilterableFrame
+
+    d = tmp_path / "since"
+    d.mkdir()
+    (d / "old.log").write_text(
+        '1.1.1.1 - u [10/Oct/2019:01:00:00 +0000] "GET /o HTTP/1.1" 200 1\n'
+    )
+    m = _time.mktime((2019, 10, 11, 0, 0, 0, 0, 0, 0))
+    os.utime(d / "old.log", (m, m))
+    for name in ("a.log", "b.log"):
+        (d / name).write_text(
+            '2.2.2.2 - u [10/Oct/2024:01:00:00 +0000] "GET /n HTTP/1.1" 200 2\n'
+        )
+    base = _viewfs_mount(spark, str(d))
+    df = read_httpd_log(spark, f"{base}/*.log", format_type="common")
+
+    calls = {"listStatus": 0, "getFileStatus": 0}
+    real_fs_for = fs._fs_for
+
+    class Counting:
+        def __init__(self, hfs):
+            self._hfs = hfs
+
+        def __getattr__(self, name):
+            if name in calls:
+                calls[name] += 1
+            return getattr(self._hfs, name)
+
+    def fs_for(spark_, path):
+        jvm, hfs, jpath = real_fs_for(spark_, path)
+        return jvm, Counting(hfs), jpath
+
+    monkeypatch.setattr(fs, "_fs_for", fs_for)
+    pred = F.col("timestamp") >= "2024-01-01"
+    pushed = df.filter(pred)
+    assert calls == {"listStatus": 1, "getFileStatus": 0}
+    monkeypatch.undo()
+    naive = super(LineFilterableFrame, df).filter(pred)
+    assert len(pushed.inputFiles()) == 2  # old.log mtime-pruned
+    assert sorted(map(str, pushed.collect())) == sorted(map(str, naive.collect()))
 
 
 def test_viewfs_colstats_prune_value_identity(spark, tmp_path):

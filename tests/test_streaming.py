@@ -781,7 +781,7 @@ def test_stream_automatic_pushdown_derives_needles(spark, tmp_path):
     assert got == want and len(got) == 1
 
 
-def test_stream_year_and_epoch_needles_no_mtime(spark, tmp_path):
+def test_stream_year_and_epoch_needles_no_mtime(spark, tmp_path, monkeypatch):
     """r11: bounded year/epoch predicates derive needles in STREAMING
     scans too, but one-sided 'since X' ranges must NOT (the mtime bound
     is batch-only — a stream's future files arrive later)."""
@@ -819,14 +819,14 @@ def test_stream_year_and_epoch_needles_no_mtime(spark, tmp_path):
     )
     # r12: epoch derivation is cost-gated; lift the gate for this cheap
     # 3-field fixture so the streaming derivation itself is exercised
-    spark.conf.set("spark.graft.pushdown.epochMinFields", "0")
-    try:
+    from duckdb_httpd_log_spark.sources import reader
+
+    with monkeypatch.context() as m:
+        m.setattr(reader, "EPOCH_MIN_FIELDS", 0)
         es = read_httpd_log_stream(spark, str(edir), format_str="%h %{sec}t %>s")
         eb = es.filter(
             F.col("timestamp").between("2024-10-01 00:00:00", "2024-10-01 23:59:59")
         )
-    finally:
-        spark.conf.unset("spark.graft.pushdown.epochMinFields")
     eplan = eb._jdf.queryExecution().analyzed().toString()
     assert "Contains(value" in eplan
     _run_stream(eb, "stream_epoch_pushed")
