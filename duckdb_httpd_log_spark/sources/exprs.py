@@ -85,34 +85,16 @@ def materialization_barrier(col: Column) -> Column:
     Codegen's common-subexpression elimination works within one operator
     only; a Filter above a Project re-evaluates any projected expression
     its predicate references (CollapseProject + PushDownPredicate inline
-    the alias). Wrapping the expression in an always-true nondeterministic
-    guard blocks both rules, so a filter + N-column projection over the
-    line regex costs ONE regex execution per row instead of two. The
-    guard is semantically the identity: length(input_file_name()) >= 0 is
-    always true on a file scan.
-
-    (Previously rand(seed) >= -1.0 — Spark 4.1's optimizer constant-folds
-    comparisons of rand() against out-of-range literals, which silently
-    dissolved the barrier; input_file_name() is equally nondeterministic
-    to the optimizer but its length cannot be range-analyzed, and unlike
-    rand it is valid in streaming plans. Pinned by
-    tests/test_plans.py::test_log_reader_fast_path_is_narrow.)
-
-    OFF-SCAN INVARIANT the call sites depend on (r14 ADVICE): since r14
-    this wrapper is also applied to post-join/post-aggregate columns
-    (dedup_minhash_lsh / dedup_jaccard_prefix's n_shared), where no file
-    scan is underneath. There the guard holds because Spark's
-    InputFileName expression reads a thread-local that is SET to the
-    empty string (never NULL) outside a file-scan RDD — length("") >= 0
-    is still true, so the barrier stays the identity. An .otherwise(col)
-    would make that structural instead, but it duplicates the wrapped
-    expression in the plan tree (breaking the single-evaluation pins the
-    reader path exists for and doubling codegen for the regex
-    projection), so the invariant is documented and pinned by test
-    instead: tests/test_operators.py::test_materialization_barrier_off_scan
-    evaluates the barrier over a join/aggregate with no file scan and
-    asserts non-NULL pass-through."""
-    return F.when(F.length(F.input_file_name()) >= 0, col)
+    the alias). ``explode(array(col))`` is a Generate of exactly one row
+    per input row, so it is the identity on any plan, with or without a
+    file scan underneath; Catalyst collapses no Project into a Generate
+    and pushes no predicate on its output below it, so a filter +
+    N-column projection over the line regex costs ONE regex execution
+    per row. A deterministic predicate on the Generate's other columns
+    (the reader's ``log_file``) still moves below it, down to the file
+    scan. Must be the only generator of its select. Pinned by
+    tests/test_plans.py::test_log_reader_fast_path_is_narrow."""
+    return F.explode(F.array(col))
 
 
 def group_value(parts: Column, capture_index: int) -> Column:

@@ -71,14 +71,17 @@ ranges split across their leaves; disjunctions push only if every
 branch is derivable (as an OR-of-needles group); anything else falls
 back to the unmodified plan. CNF across OR-of-ANDs distributes.
 
-File skipping has two tiers, both decided in ``LineFilterableFrame.
-filter`` from ONE classification pass over the top-level conjuncts
-(``classify``): the listing predicate (file-constant conjuncts on
-log_file / hive keys, evaluated by Spark over the bind-time listing)
-and a per-file range test against one fresh stat of that listing —
-a file's range is (-inf, mtime + 2 d] on every recognized time column
-and its cached column stats on verbatim int columns (colstats.py);
-a file whose range misses a required interval is dropped.
+File skipping has two tiers. The listing predicate is not ours: the
+scan's log_file is ``_metadata.file_path`` below a Generate barrier
+(reader._compile_program), so Catalyst moves a deterministic predicate
+on log_file or a hive key down to the text scan and Spark's file index
+drops the files it rules out, in any query shape. The per-file range
+test is decided in ``LineFilterableFrame.filter`` from ONE
+classification pass over the top-level conjuncts (``classify``),
+against one fresh stat of the bind-time listing — a file's range is
+(-inf, mtime + 2 d] on every recognized time column and its cached
+column stats on verbatim int columns (colstats.py); a file whose
+range misses a required interval is dropped.
 
 Cited parity anchor: the reference parses every line unconditionally
 (src/httpd_log_file_reader.cpp); this pushdown is beyond-reference,
@@ -820,11 +823,9 @@ _KIDS_READ = {*_CMP_OPS, "In", "Contains", "StartsWith", "EndsWith", "Like", "Or
 @dataclass
 class Conjuncts:
     """The top-level conjuncts of one analyzed condition, each classified
-    once by ``classify``: what the listing tier, the per-file range test
-    and the needle derivation each read."""
+    once by ``classify``: what the per-file range test and the needle
+    derivation each read."""
 
-    # file-constant conjunct nodes (log_file / hive partition keys only)
-    files: list = field(default_factory=list)
     # time column -> intersected (lo_us, hi_us), None = open
     ts: dict = field(default_factory=dict)
     # time column -> intersected (lo_year, hi_year) of year(ts) leaves
@@ -888,15 +889,14 @@ class Conjuncts:
         return groups or None
 
 
-def classify(cond, ctx: PushdownContext, prune_cols: Optional[set] = None) -> Conjuncts:
+def classify(cond, ctx: PushdownContext) -> Conjuncts:
     """One pass over the top-level conjuncts of ``cond``. A conjunct is a
     time interval (intersected per column, so BOUNDED ranges split across
     leaves — ``ts >= a AND ts < b``, BETWEEN's rewrite, ``to_date ==`` —
     give ONE day group), a ``year(ts)`` range, a needle leaf (an int
     equality or IN is also an int interval), an Or whose branches are
     classified the same way (its needles push only if both branches
-    derive some), or, with ``prune_cols``, a file-constant conjunct for
-    the listing tier."""
+    derive some)."""
     out = Conjuncts()
     for c, cls in _flatten_and(cond):
         kids = _children(c) if cls in _KIDS_READ else None
@@ -912,16 +912,11 @@ def classify(cond, ctx: PushdownContext, prune_cols: Optional[set] = None) -> Co
         if iv is not None:
             narrow(out.ints, *iv)
         if cls == "Or":
-            if prune_cols and _file_constant(c, cls, kids, prune_cols):
-                out.files.append(c)
-            else:
-                out.leaves.append((classify(kids[0], ctx), classify(kids[1], ctx)))
+            out.leaves.append((classify(kids[0], ctx), classify(kids[1], ctx)))
             continue
         g = _leaf_needles(c, cls, kids, ctx)
         if g:
             out.leaves.append(g)
-        elif iv is None and prune_cols and _file_constant(c, cls, kids, prune_cols):
-            out.files.append(c)
     return out
 
 
@@ -944,201 +939,17 @@ def cnf_predicate(cnf: Needles, value: Column) -> Column:
     return reduce(lambda a, b: a & b, map(any_of, cnf))
 
 
-# Catalyst nodes whose value can differ between the scan query and the
-# tiny driver-side file-pruning query (per-query "now" snapshots, ids,
-# randomness) — a conjunct containing one must never prune files, even
-# though Catalyst marks some of them deterministic.
-_QUERY_LOCAL_NODES = {
-    "CurrentDate",
-    "CurrentTimestamp",
-    "CurrentTimeZone",
-    "Now",
-    "LocalTimestamp",
-    "CurrentDatabase",
-    "CurrentCatalog",
-    "CurrentUser",
-    "InputFileName",
-    "SparkPartitionID",
-    "MonotonicallyIncreasingID",
-    "Uuid",
-    "Rand",
-    "Randn",
-}
-
-
-def _attrs_and_pruner_safe(e, s=None, kids=None) -> Tuple[set, bool]:
-    """(attribute names referenced, safe-to-evaluate-out-of-query) of
-    node ``e`` (class ``s`` and children ``kids`` when already read).
-
-    Safe means: no query-local node (see _QUERY_LOCAL_NODES) and no
-    subquery expression — those either change value across queries or
-    cannot be re-planned against the tiny one-column file frame."""
-    s = s or _simple(e)
-    if s in _QUERY_LOCAL_NODES or "Subquery" in s or s in ("Exists", "InSubquery"):
-        return set(), False
-    names = {e.name()} if s == "AttributeReference" else set()
-    ok = True
-    for c in _children(e) if kids is None else kids:
-        n, o = _attrs_and_pruner_safe(c)
-        names |= n
-        ok = ok and o
-    return names, ok
-
-
-def _file_constant(e, cls, kids, prune_cols: set) -> bool:
-    """True when conjunct ``e`` references ONLY file-constant columns
-    (``prune_cols``: log_file and, when hive_partitioning is on, the
-    partition keys — all deterministic functions of the file path) and
-    can be evaluated outside the query.
-
-    Every row of a file carries the same value for those columns, so a
-    file where such a conjunct evaluates to false/NULL contributes no
-    row to the filtered result and can be dropped from the LISTING."""
-    try:
-        names, safe = _attrs_and_pruner_safe(e, cls, kids)
-        return safe and bool(names) and names <= prune_cols and e.deterministic()
-    except Exception:
-        return False
-
-
-_GLOB_META = set("*?[]{}\\,")
-
-
-def stream_glob_for(cond, watch_path: str) -> Optional[str]:
-    """Hadoop filename glob (for the file source's ``pathGlobFilter``
-    option) implied by a ``log_file`` conjunct of ``cond``, or None.
-
-    This is the STREAMING twin of the batch listing prune: a batch scan
-    re-plans over a pruned bind-time file list, but a stream's file set
-    grows per trigger, so the prune must be a property the source
-    re-evaluates at every listing — exactly what ``pathGlobFilter``
-    is. Time bounds stay excluded (new files arrive with later mtimes);
-    path predicates are sound per-trigger because a file's path never
-    changes.
-
-    Soundness bar (the ORIGINAL predicate is always re-applied above
-    the rebuilt scan, so only wrongly EXCLUDING a file could ever be
-    wrong — every guard below protects that direction):
-
-    - the watched path's DIRECTORY portion must be static (no glob
-      metacharacters before the leaf);
-    - needle text must be '/'-free, glob-metacharacter-free, and
-      %/_-free;
-    - NESTING-SAFE forms only (r13 ADVICE): the file stream source can
-      list files inside key=value SUBDIRECTORIES of the watch dir even
-      without recursiveFileLookup, and ``pathGlobFilter`` matches only
-      the LEAF filename — so a translated form must stay sound when
-      arbitrary subdirectory text sits between the watch dir and the
-      leaf. That admits: EndsWith / LIKE '%X' (a '/'-free suffix of
-      the full path is always a suffix of the leaf), and full-path
-      equality / IN / wildcard-free LIKE anchored at the watch dir (a
-      true predicate forces the leaf to equal the anchored name; a
-      subdir file can only be OVER-kept, never wrongly excluded).
-      Contains / LIKE '%X%' and wildcard-bearing anchored LIKEs are
-      NOT translated — their needle can match subdirectory text (or a
-      '%' can span '/'), which the leaf-only glob cannot see.
-    - remote watch dirs (s3a/hdfs/viewfs/...) qualify exactly like
-      local ones: the anchored forms compare the predicate's literal
-      against the watch URI itself, and the suffix form never looks at
-      the directory — percent-encoding in input_file_name is undone by
-      the reader's url_decode, and needles are '%'-free by the guard
-      above, so the decoded-leaf == on-disk-leaf equivalence the glob
-      needs is the same one the batch pairs already rely on.
-
-    Returns the FIRST translatable conjunct's glob (one glob suffices
-    to prune; the rest of the predicate still filters rows)."""
-    import os.path as _osp
-
-    from .fs import _uri_path, has_scheme, scheme_of
-
-    if has_scheme(watch_path) and scheme_of(watch_path) != "file":
-        # the stream binds log_file to the url-decoded input_file_name
-        # URI, so anchored literals are compared against the watch URI
-        # verbatim; a '%'-bearing watch URI is ambiguous between
-        # encoded and literal (same guard as the batch pairs) — skip
-        if "%" in watch_path:
-            return None
-        prefix = watch_path.rstrip("/") + "/"
-    else:
-        p = _uri_path(watch_path) if has_scheme(watch_path) else watch_path
-        prefix = _osp.abspath(p) + "/"
-    # only a GLOB-FREE directory watch qualifies: a glob component can
-    # match a DIRECTORY (e.g. /l*gs -> /logs/...), making the anchored
-    # prefix comparison meaningless. (The caller additionally disables
-    # the prune under recursiveFileLookup and user pathGlobFilter.)
-    if set(prefix) & _GLOB_META:
-        return None
-
-    def _plain(s: str) -> bool:
-        return bool(s) and "/" not in s and not (set(s) & _GLOB_META) and "%" not in s and "_" not in s
-
-    for c, s in _flatten_and(cond):
-        try:
-            if s == "EndsWith":
-                l, r = _children(c)
-                if _attr_name(l) == "log_file":
-                    v, dt = _literal(r)
-                    if dt == "string" and _plain(str(v)):
-                        return f"*{v}"
-            elif s in ("EqualTo", "EqualNullSafe"):
-                l, r = _children(c)
-                for a, b in ((l, r), (r, l)):
-                    if _attr_name(a) == "log_file":
-                        v, dt = _literal(b)
-                        if dt == "string" and str(v).startswith(prefix):
-                            rest = str(v)[len(prefix):]
-                            if _plain(rest):
-                                return rest
-            elif s == "In":
-                kids = _children(c)
-                if _attr_name(kids[0]) == "log_file":
-                    names = []
-                    ok = True
-                    for k in kids[1:]:
-                        v, dt = _literal(k)
-                        if dt != "string" or not str(v).startswith(prefix):
-                            ok = False
-                            break
-                        rest = str(v)[len(prefix):]
-                        if not _plain(rest):
-                            ok = False
-                            break
-                        names.append(rest)
-                    if ok and names:
-                        return "{" + ",".join(names) + "}"
-            elif s == "Like":
-                l, r = _children(c)
-                if _attr_name(l) == "log_file":
-                    v, dt = _literal(r)
-                    if dt != "string":
-                        continue
-                    pat = str(v)
-                    if pat.startswith("%") and not pat.endswith("%"):
-                        body = pat.lstrip("%")
-                        # LIKE '%X' == EndsWith(X): suffix form,
-                        # nesting-safe when X is plain
-                        if _plain(body):
-                            return f"*{body}"
-                    elif pat.startswith(prefix):
-                        rest = pat[len(prefix):]
-                        # wildcard-free anchored LIKE == equality
-                        if _plain(rest):
-                            return rest
-        except Exception:
-            continue
-    return None
-
-
 class LineFilterableFrame(DataFrame):
     """read_httpd_log's fast-path result: a plain DataFrame whose
     ``filter``/``where`` additionally re-plans the scan — the FILE
-    LISTING pruned by two tiers (the file-constant conjuncts, and a
-    per-file range test against a fresh stat: mtime for time columns,
-    cached column stats for int columns), and raw-line Contains needles
-    below the parse regex. Every derived transformation returns a plain
-    DataFrame, so the pushdown applies exactly where it is sound:
-    predicates placed directly on the scan result. Its own plan
-    (``rebuild()``) is built on first use of ``_jdf``; ``filter``
+    LISTING narrowed by a per-file range test against a fresh stat
+    (mtime for time columns, cached column stats for int columns), and
+    raw-line Contains needles below the parse regex. Both infer
+    raw-line facts from typed predicates, so they apply to predicates
+    placed directly on the scan result; every derived transformation
+    returns a plain DataFrame. (A log_file or hive-key predicate needs
+    neither: Spark's file index applies it in any query shape.) Its own
+    plan (``rebuild()``) is built on first use of ``_jdf``; ``filter``
     resolves predicates against a schema-only stand-in instead."""
 
     def __new__(cls, *args, **kwargs):
@@ -1153,35 +964,22 @@ class LineFilterableFrame(DataFrame):
         rebuild: Callable[..., DataFrame],
         ctx: PushdownContext,
         file_pairs: Optional[list] = None,
-        prune_prepare: Optional[Callable[[DataFrame], DataFrame]] = None,
-        prune_cols: Optional[set] = None,
         files: Optional[list] = None,
-        stream_glob_fn: Optional[Callable] = None,
         colstats_fp: Optional[str] = None,
     ):
         super().__init__(None, spark)  # no plan yet: see _jdf
         self._lf_schema = schema_json
         self._lf_stand_in: Optional[DataFrame] = None
         self._lf_rebuild = rebuild
-        # streaming twin of the listing prune: file-constant conjunct ->
-        # pathGlobFilter glob (or None); set only by the stream source,
-        # whose rebuild takes the glob where the batch rebuild takes a
-        # file subset
-        self._lf_stream_glob_fn = stream_glob_fn
         self._lf_ctx = ctx
         # the bind-time listing a filter stats for mtimes; None for a
         # stream (its file set grows, so it takes no stat)
         self._lf_paths = files
         # (bind-time path, row-visible log_file value) pairs, aligned
         # with ``files``; None when the reader can't vouch the mapping
-        # (remote schemes) or the rebuild can't take a subset (streams)
+        # (a '%'-bearing remote URI) or the rebuild can't take a subset
+        # (streams)
         self._lf_files = file_pairs
-        # attaches the same derived file-constant columns (hive
-        # partition keys) to the tiny pruning frame that the scan
-        # attaches to its rows, so predicates on them evaluate
-        # identically; identity when hive_partitioning is off
-        self._lf_prune_prepare = prune_prepare
-        self._lf_prune_cols = prune_cols or {"log_file"}
         # reader-config fingerprint scoping the column-stats cache
         # (format regex + line_filter — see colstats.py); None disables
         # the colstats part of the range test (e.g. streams)
@@ -1255,64 +1053,6 @@ class LineFilterableFrame(DataFrame):
                 keep.append(b)
         return keep if len(keep) < len(self._lf_files) else None
 
-    def _pruned_subset(self, nodes: list) -> Optional[list]:
-        """Bind-time paths surviving the file-constant conjuncts
-        ``nodes`` (log_file / hive partition keys); None when nothing
-        prunes (or pruning is unavailable).
-
-        Evaluation happens through Spark itself (a one-column DataFrame
-        of the bind-time listing with the same derived columns
-        attached), so LIKE/regexp/substring semantics are exact by
-        construction. Reference parallelism anchor: the reference opens
-        one reader per listed file
-        (src/httpd_log_multi_file_info.cpp:236-249) — pruning the
-        listing is the Spark-native analogue of never opening the
-        file."""
-        if not self._lf_files:
-            return None
-        keep_sql = []
-        for c in nodes:
-            try:
-                keep_sql.append(f"({c.sql()})")
-            except Exception:
-                continue
-        if not keep_sql:
-            return None
-        spark = self.sparkSession
-        # the VALUES fast path goes through the SQL PARSER, whose string
-        # -literal escaping depends on spark.sql.parser.escapedStringLiterals
-        # (default false: \n etc. are unescaped, mangling the value so the
-        # membership test silently prunes the file). Quote-doubling is
-        # parser-mode-independent, backslashes are not — route any
-        # backslash-bearing listing through the parse-free tiny frame.
-        if len(self._lf_files) <= 20_000 and not any(
-            "\\" in v for _b, v in self._lf_files
-        ):
-            # VALUES builds a LocalRelation: Catalyst's
-            # ConvertToLocalRelation folds the Filter/Project over it in
-            # the OPTIMIZER, so collect() runs task-free (~60 ms vs
-            # ~450 ms for a parallelized tiny frame — measured; the
-            # prune must stay cheap relative to the scan it skips).
-            # Beyond the cap the SQL text itself gets megabytes long —
-            # fall back to a one-slice distributed frame.
-            vals = ", ".join(
-                "('" + v.replace("'", "''") + "')" for _b, v in self._lf_files
-            )
-            tiny = spark.sql(f"SELECT log_file FROM (VALUES {vals}) AS t(log_file)")
-        else:
-            tiny = spark.createDataFrame(
-                spark.sparkContext.parallelize(
-                    [(v,) for _b, v in self._lf_files], 1
-                ),
-                "log_file string",
-            )
-        if self._lf_prune_prepare is not None:
-            tiny = self._lf_prune_prepare(tiny)
-        keep = {r[0] for r in tiny.filter(F.expr(" AND ".join(keep_sql))).select("log_file").collect()}
-        if len(keep) >= len(self._lf_files):
-            return None  # nothing pruned: keep the original plan
-        return [b for b, v in self._lf_files if v in keep]
-
     def filter(self, condition):  # type: ignore[override]
         try:
             jplan = self._resolve(condition)
@@ -1335,8 +1075,8 @@ class LineFilterableFrame(DataFrame):
                 self._lf_ctx,
                 margin_days=1 if tz in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z") else 2,
             )
-            conj = classify(cond, ctx, self._lf_prune_cols)
-            subset = self._pruned_subset(conj.files)
+            conj = classify(cond, ctx)
+            subset = None
             mtime_on = (
                 self._lf_paths is not None
                 and (conj.ts or conj.years or conj.needs_bound())
@@ -1352,12 +1092,7 @@ class LineFilterableFrame(DataFrame):
                 # file appended since the bind is seen as it is now
                 sigs = FS.file_sigs(spark, self._lf_paths)
                 if time_req or int_req:
-                    ranged = self._ranged_subset(sigs, time_req, int_req, policy)
-                    if ranged is not None:
-                        # each tier is sound alone, so their
-                        # intersection is too
-                        keep = set(ranged)
-                        subset = ranged if subset is None else [b for b in subset if b in keep]
+                    subset = self._ranged_subset(sigs, time_req, int_req, policy)
                 if bound and sigs and None not in sigs:
                     ctx.hi_us = max(s[0] for s in sigs) * 1000
             if subset is not None and not subset:
@@ -1366,20 +1101,9 @@ class LineFilterableFrame(DataFrame):
                 # LocalRelation — nothing is listed, opened, or parsed
                 return super().filter(F.lit(False))
             cnf = conj.needles(ctx)
-            glob = None
-            if subset is None and self._lf_stream_glob_fn is not None:
-                # per-trigger listing prune for streams: a log_file
-                # conjunct becomes the source's pathGlobFilter, applied
-                # by the file stream source at EVERY trigger's listing
-                glob = next((g for g in map(self._lf_stream_glob_fn, conj.files) if g), None)
-            if not cnf and subset is None and glob is None:
+            if not cnf and subset is None:
                 return super().filter(condition)
-            if subset is not None:
-                rebuilt = self._lf_rebuild(cnf or [], subset)
-            elif glob is not None:
-                rebuilt = self._lf_rebuild(cnf or [], glob)
-            else:
-                rebuilt = self._lf_rebuild(cnf)
+            rebuilt = self._lf_rebuild(cnf) if subset is None else self._lf_rebuild(cnf, subset)
             return rebuilt.filter(F.expr(cond.sql()))
         except Exception:
             # introspection is best-effort: any surprise keeps the

@@ -260,10 +260,11 @@ def _schema_json(schema: list, hive_keys: Sequence[str] = ()) -> str:
 
 
 def _normalize_file_uri(col):
-    """file:-URI -> plain path with %XX unescaped. `input_file_name()`
+    """file:-URI -> plain path with %XX unescaped. `_metadata.file_path`
     percent-encodes special characters, but a literal '+' in a path is a
     plain character — shield it so url_decode (which would turn it into
-    a space, form-urlencoding style) leaves it intact."""
+    a space, form-urlencoding style) leaves it intact. Deterministic, so
+    a predicate on the result still reaches Spark's file index."""
     stripped = F.regexp_replace(col, "^file:(//)?", "")
     return F.url_decode(F.regexp_replace(stripped, r"\+", "%2B"))
 
@@ -288,10 +289,9 @@ def _projection(parsed: ParsedFormat, ok, parts) -> tuple[list, list]:
     as its own attribute makes the decomposition cost one split per
     row. The two-select shape survives optimization WITHOUT a
     materialization barrier because CollapseProject refuses to inline
-    a non-cheap producer referenced more than once (and the raw path's
-    unioned lineage rejects input_file_name-bearing barriers anyway).
-    ``pre`` is empty for request-free formats — the caller skips the
-    extra select entirely."""
+    a non-cheap producer referenced more than once. ``pre`` is empty
+    for request-free formats — the caller skips the extra select
+    entirely."""
     cols: list = []
     pre: list = []
     seen_groups: set[int] = set()
@@ -309,9 +309,8 @@ def _projection(parsed: ParsedFormat, ok, parts) -> tuple[list, list]:
                 e = X.single_timestamp_expr(f, parts)
             cols.append(F.when(ok, e).otherwise(F.lit(None).cast("timestamp")).alias(f.column_name))
         elif f.directive in _REQUEST_DIRECTIVES:
-            # no materialization_barrier here (input_file_name() is
-            # invalid on the raw path's unioned lineage): CollapseProject
-            # already refuses to inline a NON-CHEAP producer expression
+            # no materialization_barrier here: CollapseProject already
+            # refuses to inline a NON-CHEAP producer expression
             # referenced more than once, which is exactly the protection
             # the token array needs — and when only one sub-column is
             # selected, collapsing back to a single Project is the
@@ -365,8 +364,11 @@ def _compile_program(parsed: ParsedFormat, raw: bool) -> _Program:
     are materialized once behind a barrier so the drop-unparsed Filter
     and the typed Projection share ONE regex execution and ONE split
     per line (without it, predicate pushdown inlines them into both
-    operators — measured ~15% slower). Raw mode over (log_file,
-    line_number, line) keeps every row and flags the unparsed ones."""
+    operators — measured ~15% slower). ``__f`` is the decoded
+    ``_metadata.file_path``, deterministic, so a predicate on log_file
+    passes the barrier down to the text scan, where Spark's file index
+    applies it. Raw mode over (log_file, line_number, line) keeps every
+    row and flags the unparsed ones."""
     from pyspark import SparkContext
 
     n = parsed.num_capture_groups
@@ -386,7 +388,7 @@ def _compile_program(parsed: ParsedFormat, raw: bool) -> _Program:
         return _Program(None, None, None, None, pre, _seq(cols))
     cols.append(F.col("__f").alias("log_file"))
     return _Program(
-        _seq([line, _normalize_file_uri(F.input_file_name()).alias("__f")]),
+        _seq([line, _normalize_file_uri(F.col("_metadata.file_path")).alias("__f")]),
         SparkContext._jvm.java.util.regex.Pattern.compile("\x00"),
         _seq([X.materialization_barrier(tokens).alias("__m"), F.col("__f")])
         if parsed.fields
@@ -438,9 +440,8 @@ def _apply_program(df: DataFrame, prog: _Program) -> DataFrame:
 def _line_keep(line_filter: Optional[str] = None, cnf=None) -> Column:
     """The ONE line Filter: drops empty lines and lines failing the
     raw-line needles (``line_filter``, the pushdown's CNF) before the
-    parse regex runs. It goes BELOW the (value, __f) projection: Catalyst
-    neither pushes a filter under nor defers nondeterministic
-    input_file_name(), so __f would be decoded for every dropped line."""
+    parse regex runs. It goes on the text scan, below the (value, __f)
+    projection, so __f is decoded only for the lines it keeps."""
     value = F.col("value")
     keep = F.length(value) > 0
     if line_filter:
@@ -569,27 +570,34 @@ def read_httpd_log(
     # Verbatim columns = regex captures emitted unchanged: strings
     # except %X's remapped values; int/bigint digit tokens. Timestamps,
     # intervals, booleans, log_file, and hive keys are excluded.
+    split: list = []  # (plain, misnamed gzip) of ``files``, probed once
+
     def _rebuild(cnf=None, subset=None):
-        # re-plan over the BIND-TIME file list (or a PRUNED subset of
-        # it, when file-level conjuncts ruled whole files out), not the
-        # original pattern: a re-expanded glob could pick up files
-        # created since the read, silently making the pushed plan see
-        # MORE data than the naive plan it must be value-identical to
-        scan = _fast_lines_df(
-            spark, files if subset is None else subset, prog, _line_keep(line_filter, cnf)
-        )
+        # re-plan over the BIND-TIME file list (or the subset of it the
+        # per-file range test kept), not the original pattern: a
+        # re-expanded glob could pick up files created since the read,
+        # silently making the pushed plan see MORE data than the naive
+        # plan it must be value-identical to
+        if not split:
+            split.append(_split_misnamed_gzip(files, spark))
+        plain, misnamed = split[0]
+        if subset is not None:
+            keep = set(subset)
+            plain = [f for f in plain if f in keep]
+            misnamed = [f for f in misnamed if f in keep]
+        scan = _fast_lines_df(spark, plain, misnamed, prog, _line_keep(line_filter, cnf))
         return _attach_hive_cols(_apply_program(scan, prog), hive_keys)
 
-    # (bind path, row-visible log_file value) pairs for listing pruning
-    # — only when the mapping is provable: local paths normalize to
-    # os.path.abspath (what input_file_name round-trips to through
-    # _normalize_file_uri). Remote schemes (s3a/hdfs/viewfs/...) bind
-    # to the listing's own Path.toString URIs, which input_file_name
-    # percent-encodes and _normalize_file_uri decodes back — an exact
-    # round-trip whenever the listed URI carries no literal '%' of its
-    # own (a '%'-bearing remote name is ambiguous between encoded and
-    # literal, so pruning conservatively disables there; the needle
-    # pushdown and Catalyst's row filter still apply).
+    # (bind path, row-visible log_file value) pairs for the column-stats
+    # range test — only when the mapping is provable: local paths
+    # normalize to os.path.abspath (what _metadata.file_path round-trips
+    # to through _normalize_file_uri). Remote schemes (s3a/hdfs/viewfs/
+    # ...) bind to the listing's own Path.toString URIs, which
+    # _metadata.file_path percent-encodes and _normalize_file_uri decodes
+    # back — an exact round-trip whenever the listed URI carries no
+    # literal '%' of its own (a '%'-bearing remote name is ambiguous
+    # between encoded and literal, so the range test disables there;
+    # the needles and Spark's file index still apply).
     import os.path as _osp
 
     from .fs import _uri_path as _fs_uri_path
@@ -612,13 +620,6 @@ def read_httpd_log(
         _rebuild,
         pushdown_context(parsed, schema),
         file_pairs=file_pairs,
-        # hive partition keys are deterministic functions of log_file,
-        # so predicates on them are file-constant too: the tiny pruning
-        # frame re-derives them with the SAME expressions the scan uses
-        prune_prepare=(
-            (lambda tiny: _attach_hive_cols(tiny, hive_keys)) if hive_keys else None
-        ),
-        prune_cols={"log_file", *hive_keys},
         files=files,
         # column-stats cache scope: stats describe the rows THIS reader
         # config parses out of a file, so the cache key carries the
@@ -772,17 +773,22 @@ def pushdown_context(parsed: ParsedFormat, schema: list):
 
 
 def _fast_lines_df(
-    spark: SparkSession, files: list[str], prog: _Program, keep: Column
+    spark: SparkSession,
+    plain: list[str],
+    misnamed: list[str],
+    prog: _Program,
+    keep: Column,
 ) -> DataFrame:
     """DataFrame[(value, __f)] of the raw lines passing ``keep`` (see
-    _line_keep): the splittable text scan for extension-routed files,
-    unioned with a streamed-decompress branch
-    for content-detected gzip files lacking a codec extension (the
-    per-file streaming reader inflates through a 2 MiB buffer — no
-    whole-file value row, same memory contract as the raw path). The
-    path list crosses py4j as one NUL-joined string (NUL cannot occur
-    in a path), split in the JVM by the program's ``paths``."""
-    plain, misnamed = _split_misnamed_gzip(files, spark)
+    _line_keep): the splittable text scan for the extension-routed files
+    ``plain``, unioned with a streamed-decompress branch for ``misnamed``,
+    the content-detected gzip files lacking a codec extension (see
+    _split_misnamed_gzip; the per-file streaming reader inflates through
+    a 2 MiB buffer — no whole-file value row, same memory contract as the
+    raw path). That branch has no ``_metadata``, so a log_file predicate
+    filters its rows but skips none of its files. The path list crosses
+    py4j as one NUL-joined string (NUL cannot occur in a path), split in
+    the JVM by the program's ``paths``."""
     dfs = []
     if plain:
         # scheme-less paths were expanded against the LOCAL filesystem
@@ -837,7 +843,7 @@ def _raw_lines_df(spark: SparkSession, files: list[str]) -> DataFrame:
     from .pyconvert import iter_log_lines
 
     # absolutize local paths so log_file matches the fast path's
-    # normalized input_file_name form (absolute, file: URI stripped)
+    # normalized _metadata.file_path form (absolute, file: URI stripped)
     files = [f if has_scheme(f) else os.path.abspath(f) for f in files]
     # one file per task up to a cap: a task streams its files
     # sequentially (per-file numbering is inside the iterator), so a

@@ -30,7 +30,7 @@ from ..sources.logformat import (
     generate_schema,
     parse_format_string,
 )
-from ..sources.pushdown import LineFilterableFrame, stream_glob_for
+from ..sources.pushdown import LineFilterableFrame
 from ..sources.reader import _apply_program, _line_keep, _program, _schema_json, pushdown_context
 
 
@@ -69,40 +69,20 @@ def read_httpd_log_stream(
     parsed = parse_format_string(format_str)
     prog = _program(parsed, False)
 
-    def _scan(cnf=None, glob=None):
-        opts = dict(options)
-        if glob is not None:
-            # per-trigger listing prune (r12 verdict item 5): the file
-            # stream source applies pathGlobFilter at EVERY trigger's
-            # listing, so files a log_file conjunct rules out are never
-            # opened — new matching files still flow. Sound because a
-            # path is a per-file constant (unlike time bounds, which
-            # stay batch-only: future files arrive with later mtimes).
-            opts["pathGlobFilter"] = glob
-        scan = spark.readStream.options(**opts).text(path)._jdf
+    def _scan(cnf=None):
+        scan = spark.readStream.options(**options).text(path)._jdf
         lines = scan.filter(_line_keep(line_filter, cnf)._jc).select(prog.lines)
         return _apply_program(DataFrame(lines, spark), prog)
 
     # no bind-time file list: a stream's future files arrive with later
-    # mtimes (no sound bound, no stat), and listing pruning re-plans as
-    # a per-trigger pathGlobFilter instead — see stream_glob_fn
-    # a user-supplied pathGlobFilter must not be overwritten (glob
-    # intersection isn't expressible as one glob), and recursive lookup
-    # puts subdirectory text between the watch dir and the filename
-    # (breaking the filename-glob equivalence) — both disable the prune
-    _recursive = str(options.get("recursiveFileLookup", "false")).lower() == "true"
-    glob_fn = (
-        None
-        if ("pathGlobFilter" in options or _recursive)
-        else (lambda conjunct: stream_glob_for(conjunct, path))
-    )
+    # mtimes (no sound bound, no stat); a log_file predicate prunes each
+    # micro-batch's files through Spark's file index instead
     schema = generate_schema(parsed, False)
     return LineFilterableFrame(
         spark,
         _schema_json(schema),
         _scan,
         pushdown_context(parsed, schema),
-        stream_glob_fn=glob_fn,
     )
 
 

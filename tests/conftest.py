@@ -53,3 +53,30 @@ def dashboard_shapes() -> dict:
         "listing": F.col("log_file").like("%/2024-08.log"),
         "status5xx": F.col("status") >= 500,
     }
+
+
+def files_read(df) -> int:
+    """Execute ``df`` and sum ``numFiles`` over its executed text scans:
+    the files Spark's file index kept, i.e. opened. (``inputFiles()``
+    lists the relation, not what a run reads.) AQE query stages are
+    walked into. For a finished StreamingQuery, its last micro-batch."""
+    if hasattr(df, "_jsq"):
+        plan = df._jsq.streamingQuery().lastExecution().executedPlan()
+    else:
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan()
+    total, todo = 0, [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        if node.nodeName().startswith("Scan text"):
+            total += node.metrics().apply("numFiles").value()
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return total

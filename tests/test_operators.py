@@ -868,15 +868,12 @@ def test_label_propagation_components_exact(spark):
 
 
 def test_materialization_barrier_off_scan(spark):
-    """The barrier's guard is length(input_file_name()) >= 0 with no
-    .otherwise — the identity only because InputFileName yields the
-    EMPTY STRING (never NULL) when no file scan is underneath (r14
-    ADVICE: dedup_minhash_lsh/dedup_jaccard_prefix wrap a post-join,
-    post-aggregate column in it). Evaluate the barrier over a
+    """dedup_minhash_lsh/dedup_jaccard_prefix wrap a post-join,
+    post-aggregate column in the barrier (r14). Evaluate it over a
     join+aggregate plan with no files anywhere: every value must pass
-    through non-NULL. If Spark ever made InputFileName nullable
-    off-scan, the wrapped column would silently go NULL and candidate
-    pairs would be dropped — this test turns that into a loud failure."""
+    through unchanged, one row per input row — a barrier that went NULL
+    or dropped rows off a file scan would silently lose candidate
+    pairs."""
     from pyspark.sql import functions as F
 
     from duckdb_httpd_log_spark.sources.exprs import materialization_barrier

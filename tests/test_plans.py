@@ -70,9 +70,10 @@ def test_log_reader_fast_path_is_narrow(spark):
     text = "\n".join(opt)
     assert text.count("split(regexp_replace(value#") == 1
     assert text.count("regexp_replace(value#") == 1
-    barrier = [i for i, ln in enumerate(opt) if "length(input_file_name()) >= 0" in ln]
+    barrier = [i for i, ln in enumerate(opt) if "Generate " in ln]
     line_filters = [i for i, ln in enumerate(opt) if "Filter" in ln and "value#" in ln]
-    assert len(barrier) == 1 and "split(regexp_replace(value#" in opt[barrier[0]]
+    assert len(barrier) == 1
+    assert "Generate explode(array(split(regexp_replace(value#" in opt[barrier[0]]
     assert len(line_filters) == 1 and line_filters[0] > barrier[0]
     assert "length(value#" in opt[line_filters[0]]
     assert "Contains(value#" in opt[line_filters[0]]

@@ -21,6 +21,8 @@ from duckdb_httpd_log_spark import read_httpd_log
 from duckdb_httpd_log_spark.sources import reader
 from duckdb_httpd_log_spark.sources.pushdown import LineFilterableFrame
 
+from .conftest import files_read
+
 
 LINES = [
     # status 500
@@ -202,18 +204,18 @@ def test_hive_partitioning_composes_with_pushdown(spark, tmp_path):
     out = df.filter((F.col("dt") == "2024-01-01") & (F.col("status") == 500))
     plan = _optimized(out)
     assert "Contains(value" in plan  # the status conjunct pushed
-    assert len(out.inputFiles()) == 1  # r12: the dt conjunct pruned the listing
+    assert files_read(out) == 1  # Spark's file index skips the other dt
     assert out.count() == 50
     # hive key alone: no needle, but the LISTING prunes to one file
     out2 = df.filter(F.col("dt") == "2024-01-02")
     assert "Contains(value" not in _optimized(out2)
-    assert len(out2.inputFiles()) == 1
+    assert files_read(out2) == 1
     assert out2.count() == 50
     naive2 = super(LineFilterableFrame, df).filter(F.col("dt") == "2024-01-02")
     assert sorted(map(str, out2.collect())) == sorted(map(str, naive2.collect()))
     # hive key with %XX-escaped value still prunes identically
     out3 = df.filter(F.col("dt").isin("2024-01-01", "2099-01-01"))
-    assert len(out3.inputFiles()) == 1
+    assert files_read(out3) == 1
     assert out3.count() == 50
 
 
@@ -866,7 +868,7 @@ def test_log_file_like_prunes_listing(spark, fleet_dir):
     pred = F.col("log_file").like("%server03%")
     pruned = df.filter(pred)
     naive = super(LineFilterableFrame, df).filter(pred)
-    assert len(pruned.inputFiles()) == 1  # whole files skipped
+    assert files_read(pruned) == 1  # whole files skipped
     assert sorted(map(str, pruned.collect())) == sorted(map(str, naive.collect()))
     assert pruned.count() == 3
 
@@ -882,7 +884,7 @@ def test_log_file_equality_and_in_prune(spark, fleet_dir):
     ]:
         pruned = df.filter(pred)
         naive = super(LineFilterableFrame, df).filter(pred)
-        assert len(pruned.inputFiles()) == want, str(pred)
+        assert files_read(pruned) == want, str(pred)
         assert sorted(map(str, pruned.collect())) == sorted(map(str, naive.collect()))
 
 
@@ -892,7 +894,7 @@ def test_log_file_prune_composes_with_needles(spark, fleet_dir):
     df = _fleet(spark, fleet_dir)
     pred = F.col("log_file").like("%server0%") & (F.col("status") == 500)
     pruned = df.filter(pred)
-    assert len(pruned.inputFiles()) == 10  # server00..09
+    assert files_read(pruned) == 10  # server00..09
     plan = _optimized(pruned)
     assert re.search(r"Contains\(value#\d+, 500\)", plan)
     assert _contains_below_regex(plan)
@@ -905,7 +907,7 @@ def test_log_file_prune_to_empty_set(spark, fleet_dir):
     pred = F.col("log_file").like("%nonexistent%")
     pruned = df.filter(pred)
     assert pruned.count() == 0
-    assert len(pruned.inputFiles()) == 0  # folded to an empty relation
+    assert files_read(pruned) == 0  # the file index keeps no file
 
 
 def test_log_file_disjunction_with_row_predicate_not_pruned(spark, fleet_dir):
@@ -941,7 +943,7 @@ def test_log_file_prune_pinned_to_bind_time_listing(spark, tmp_path):
     pred = F.col("log_file").rlike("(a|b)\\.log$")
     pruned = df.filter(pred)
     naive = super(LineFilterableFrame, df).filter(pred)
-    assert len(pruned.inputFiles()) == 1
+    assert files_read(pruned) == 1
     got = sorted(r.client_host for r in pruned.collect())
     assert got == sorted(r.client_host for r in naive.collect()) == ["1.1.1.1"]
     fresh = read_httpd_log(spark, str(d) + "/*.log", format_type="combined")
@@ -1034,8 +1036,8 @@ def test_disjunctive_time_bound_never_file_prunes(spark, rotated_dir):
 
 
 def test_log_file_prune_escapes_quotes_in_paths(spark, tmp_path):
-    # the VALUES-based prune eval doubles single quotes: a path with an
-    # apostrophe must neither break the SQL nor mis-prune
+    # a path with an apostrophe must neither break the predicate nor
+    # mis-prune
     d = tmp_path / "quoted"
     d.mkdir()
     for name in ("bob's.log", "plain.log"):
@@ -1046,7 +1048,7 @@ def test_log_file_prune_escapes_quotes_in_paths(spark, tmp_path):
     pred = F.col("log_file").like("%bob's%")
     pruned = df.filter(pred)
     naive = super(LineFilterableFrame, df).filter(pred)
-    assert len(pruned.inputFiles()) == 1
+    assert files_read(pruned) == 1
     assert sorted(map(str, pruned.collect())) == sorted(map(str, naive.collect()))
     assert pruned.count() == 1
 
@@ -1347,3 +1349,98 @@ def test_one_stat_per_filter(spark, fleet, monkeypatch):
         naive = super(LineFilterableFrame, df).filter(pred)
         assert sorted(map(str, out.collect())) == sorted(map(str, naive.collect())), name
     assert got == want
+
+
+# --- log_file pruning in any query shape ------------------------------------------
+# log_file is _metadata.file_path below a Generate barrier, so Catalyst
+# moves any deterministic predicate on it (or on a hive key derived from
+# it) down to the text scan, and Spark's file index drops the files it
+# rules out: no .filter() directly on the read is needed.
+@pytest.fixture(scope="module")
+def month_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("months")
+    for m in range(1, 9):
+        sub = d / f"month={m:02d}"
+        sub.mkdir()
+        (sub / f"2024-{m:02d}.log").write_text("".join(
+            f'10.0.{m}.{i} - u [1{i}/Oct/2024:12:00:00 +0000] '
+            f'"GET /m{m} HTTP/1.1" {500 if i else 200} {i} "-" "ua"\n'
+            for i in range(3)
+        ))
+    return str(d)
+
+
+def _march_shape(spark, df, shape):
+    march = F.col("log_file").like("%2024-03%")
+    if shape == "direct":
+        return df.filter(march)
+    if shape == "select":
+        return df.select("client_host", "path", "log_file").filter(march)
+    if shape in ("sql", "hive_sql"):
+        df.createOrReplaceTempView("month_logs")
+        where = "log_file LIKE '%2024-03%'" if shape == "sql" else "month = '03'"
+        return spark.sql(f"SELECT * FROM month_logs WHERE {where}")
+    if shape == "join":
+        dim = spark.createDataFrame(
+            [(f"/m{m}", m) for m in range(1, 9)], "path string, m int")
+        return df.join(dim, "path").filter(march)
+    sel = df.select("client_host", "log_file")
+    return sel.unionByName(sel).filter(march)
+
+
+@pytest.mark.parametrize(
+    "shape,files", [("direct", 1), ("select", 1), ("sql", 1), ("hive_sql", 1),
+                    ("join", 1), ("union", 2)])
+def test_log_file_prunes_in_any_query_shape(spark, month_dir, shape, files):
+    df = read_httpd_log(spark, month_dir + "/*/*.log", format_type="combined",
+                        hive_partitioning=True)
+    # reference: every file parsed, the predicate applied in Python
+    want = sorted((r.client_host, r.log_file) for r in df.collect()
+                  if "2024-03" in r.log_file)
+    want = sorted(want * 2) if shape == "union" else want
+    out = _march_shape(spark, df, shape)
+    assert files_read(out) == files  # one per scan, of 8
+    assert sorted((r.client_host, r.log_file) for r in out.collect()) == want
+    assert len(want) == 3 * files
+
+
+def test_misnamed_gzip_rows_filtered_by_log_file(spark, tmp_path):
+    # a gzip file without a codec extension is read through mapInPandas,
+    # which has no _metadata: a log_file predicate filters its rows but
+    # skips no file of it, and the result still equals the unpushed plan
+    import gzip
+
+    lines = [
+        '1.1.1.1 - u [10/Oct/2024:10:00:00 +0000] "GET /a HTTP/1.1" 500 1 "-" "ua"\n',
+        '2.2.2.2 - u [10/Oct/2024:11:00:00 +0000] "GET /b HTTP/1.1" 200 2 "-" "ua"\n',
+    ]
+    (tmp_path / "plain.log").write_text("".join(lines))
+    (tmp_path / "packed.log").write_bytes(gzip.compress("".join(lines).encode()))
+    df = read_httpd_log(spark, str(tmp_path / "*.log"), format_type="combined")
+    for pred, scanned in [
+        (F.col("log_file").endswith("plain.log"), 1),
+        (F.col("log_file").endswith("packed.log"), 0),
+        (F.col("log_file").endswith("packed.log") & (F.col("status") == 500), 0),
+    ]:
+        out = df.filter(pred)
+        naive = super(LineFilterableFrame, df).filter(pred)
+        assert files_read(out) == scanned, str(pred)  # text scan of plain.log
+        got = sorted(map(str, out.collect()))
+        assert got == sorted(map(str, naive.collect())) and got, str(pred)
+
+
+def test_gzip_magic_probed_once_per_bind(spark, fleet, monkeypatch):
+    # which listed files are misnamed gzip is a bind-time fact: the probe
+    # reads 2 bytes of each non-codec file once, on the first plan built,
+    # not again on every pushed filter's re-plan
+    from .conftest import dashboard_shapes
+
+    real, calls = reader._gzip_by_magic, []
+    monkeypatch.setattr(
+        reader, "_gzip_by_magic", lambda *a: calls.append(a[0]) or real(*a))
+    df = read_httpd_log(spark, fleet + "/*.log", format_type="combined")
+    assert calls == []  # a bind builds no plan
+    shapes = dashboard_shapes()
+    for name in ("needle", "day", "since"):
+        assert df.filter(shapes[name]).count() > 0, name
+    assert len(calls) == 4

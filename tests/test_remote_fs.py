@@ -20,7 +20,7 @@ import pytest
 from duckdb_httpd_log_spark import read_httpd_conf, read_httpd_log
 from duckdb_httpd_log_spark.sources import fs as FS
 
-from .conftest import data
+from .conftest import data, files_read
 
 
 def uri(*parts: str) -> str:
@@ -467,13 +467,14 @@ def test_read_remote_misnamed_gzip_raw_mode(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Remote listing prunes (r14, r13 verdict item 1): the three file-skip
-# tiers (predicate, mtime, column-stats) fire on scheme-qualified
-# listings too. viewfs:// is a real non-file Hadoop scheme backed by a
-# mount table over local disk — the same FileSystem/Path/getFileStatus
-# code path an s3a:// or hdfs:// URI takes, minus the network — and
-# input_file_name round-trips viewfs URIs verbatim, so these tests
-# exercise the exact machinery a remote fleet uses.
+# Remote file skipping (r14, r13 verdict item 1): Spark's file index on
+# a log_file predicate and the per-file range test (mtime, column stats)
+# fire on scheme-qualified listings too. viewfs:// is a real non-file
+# Hadoop scheme backed by a mount table over local disk — the same
+# FileSystem/Path/getFileStatus code path an s3a:// or hdfs:// URI
+# takes, minus the network — and _metadata.file_path round-trips
+# viewfs URIs verbatim, so these tests exercise the exact machinery a
+# remote fleet uses.
 # ---------------------------------------------------------------------------
 import itertools as _it
 
@@ -537,7 +538,7 @@ def test_viewfs_predicate_listing_prune_value_identity(spark, tmp_path):
     pred = F.col("log_file").endswith("s1.log")
     pushed = df.filter(pred)
     naive = super(LineFilterableFrame, df).filter(pred)
-    assert len(pushed.inputFiles()) == 1  # listing pruned to s1
+    assert files_read(pushed) == 1  # Spark's file index keeps s1 only
     assert sorted(map(str, pushed.collect())) == sorted(map(str, naive.collect()))
     assert pushed.count() == 4
 

@@ -846,67 +846,46 @@ def _mklog(p, host, n=3):
     )
 
 
-def test_stream_glob_for_translations(spark):
-    from duckdb_httpd_log_spark.sources.pushdown import stream_glob_for
+def _files_read(df, name):
+    """Runs ``df`` to completion; the files its one micro-batch's text
+    scan read (see conftest.files_read)."""
+    from .conftest import files_read
 
-    base = spark.range(1).select(F.lit("x").alias("log_file"), F.lit(1).alias("v"))
+    q = _run_stream(df, name)
+    assert len([p for p in q.recentProgress if p["numInputRows"]]) == 1
+    return files_read(q)
 
-    def cond_of(pred):
-        return base.filter(pred)._jdf.queryExecution().analyzed().condition()
 
-    watch = "/logs"
-    cases = [
-        # nesting-safe forms translate: suffix (endswith / LIKE '%X'),
-        # and equality / IN / wildcard-free LIKE anchored at the watch
-        (F.col("log_file").like("%.log"), "*.log"),
-        (F.col("log_file") == "/logs/a.log", "a.log"),
-        (F.col("log_file").isin("/logs/a.log", "/logs/b.log"), "{a.log,b.log}"),
-        (F.col("log_file").like("/logs/a.log"), "a.log"),
-        (F.col("log_file").endswith("A.log"), "*A.log"),
-        # composes: only the log_file conjunct translates
-        (F.col("log_file").like("%serverA.log") & (F.col("v") > 0), "*serverA.log"),
-        # NOT nesting-safe (r13 ADVICE): the file stream source lists
-        # key=value subdirectories, and pathGlobFilter sees only the
-        # leaf filename — contains/'%X%' needles could match subdir
-        # text, and a '%'/'_' inside an anchored LIKE can span '/'
-        (F.col("log_file").contains("serverA"), None),
-        (F.col("log_file").like("%serverA%"), None),
-        (F.col("log_file").like("/logs/server%.log"), None),
-        (F.col("log_file").like("/logs/server_.log"), None),
-        # untranslatable shapes stay None (rlike, needle with '/',
-        # equality outside the watched dir)
-        (F.col("log_file").rlike("server[AB]"), None),
-        (F.col("log_file").endswith("gs/a.log"), None),
-        (F.col("log_file") == "/other/a.log", None),
-        (F.col("v") > 0, None),
-    ]
-    for pred, want in cases:
-        assert stream_glob_for(cond_of(pred), watch) == want, str(pred)
-    # glob metacharacters in the watched dir disable translation
-    assert (
-        stream_glob_for(cond_of(F.col("log_file") == "/l*gs/a.log"), "/l*gs")
-        is None
+def test_stream_select_then_filter_prunes_files(spark, tmp_path):
+    # a log_file predicate anywhere above the stream reaches Spark's file
+    # index, not only a .filter() placed directly on it
+    logdir = tmp_path / "logs"
+    logdir.mkdir()
+    for i in range(8):
+        _mklog(logdir / f"server{i}.log", f"10.0.0.{i}")
+    stream = read_httpd_log_stream(spark, str(logdir), format_type="common")
+    out = stream.select("client_host", "log_file").filter(
+        F.col("log_file").like("%server3.log"))
+    assert _files_read(out, "prune_select") == 1
+    rows = spark.sql("SELECT * FROM prune_select").collect()
+    assert {r.client_host for r in rows} == {"10.0.0.3"} and len(rows) == 3
+
+
+def test_stream_user_glob_and_log_file_filter_prune(spark, tmp_path):
+    # a user pathGlobFilter and a log_file predicate both narrow the
+    # files read: the glob drops serverC.txt, the predicate serverA.log
+    logdir = tmp_path / "logs"
+    logdir.mkdir()
+    _mklog(logdir / "serverA.log", "1.1.1.1")
+    _mklog(logdir / "serverB.log", "2.2.2.2")
+    _mklog(logdir / "serverC.txt", "3.3.3.3")
+    stream = read_httpd_log_stream(
+        spark, str(logdir), format_type="common", pathGlobFilter="*.log"
     )
-    # remote watch dirs qualify (r13 verdict item 1): anchored forms
-    # compare against the watch URI verbatim, suffix forms never look
-    # at the directory; a '%'-bearing watch URI disables (ambiguous
-    # between encoded and literal)
-    rbase = "s3a://bucket/logs"
-    assert (
-        stream_glob_for(cond_of(F.col("log_file") == f"{rbase}/a.log"), rbase)
-        == "a.log"
-    )
-    assert (
-        stream_glob_for(cond_of(F.col("log_file").endswith("A.log")), rbase)
-        == "*A.log"
-    )
-    assert (
-        stream_glob_for(
-            cond_of(F.col("log_file") == "s3a://bucket/l%20gs/a.log"),
-            "s3a://bucket/l%20gs",
-        )
-        is None
-    )
+    out = stream.filter(F.col("log_file").like("%serverB%"))
+    assert _files_read(out, "user_glob_prune") == 1
+    rows = spark.sql("SELECT * FROM user_glob_prune").collect()
+    assert {r.client_host for r in rows} == {"2.2.2.2"} and len(rows) == 3
 
 
 def test_stream_listing_prune_skips_unopenable_file(spark, tmp_path):
