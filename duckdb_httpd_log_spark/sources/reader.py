@@ -15,14 +15,17 @@ per-file, identical granularity). The Catalyst expressions of that parse
 (the parse program) are built once per format and mode per process
 (``_program``); later binds and every pushdown re-plan reuse them.
 
-Raw mode (`raw=True`) needs deterministic per-file `line_number`s that
-count empty and unparseable lines (`src/httpd_log_file_reader.cpp:377-392`).
-Spark's splittable text scan has no per-file ordering, so raw mode
-streams each file through a per-task line reader (one file per task —
-the same granularity the reference uses for every read, buffered like
-its 2 MB reader) that numbers lines as it goes and ships bounded Arrow
-batches; the typed parse stays in the codegen'd Catalyst projection.
-The fast splittable path is used whenever `raw=False`.
+Raw mode (`raw=True`) keeps every non-empty line, flags the unparsed
+ones, and numbers lines per file, counting empty and unparseable lines
+(`src/httpd_log_file_reader.cpp:377-392`). It uses the same splittable
+text scan and the same one-regex parse as the fast path;
+``line_number`` comes from per-(file, block) offsets joined back to the
+lines (``_raw_lines_df_jvm``). That join is an outer join Catalyst
+removes when ``line_number`` is not read, so only a query that selects
+or filters on ``line_number`` pays for a second pass over the files.
+Gzip files named without a codec extension, which Spark's text scan
+cannot decompress, stream through a per-task Python line reader that
+numbers lines as it goes (``_raw_lines_df``).
 """
 
 from __future__ import annotations
@@ -340,8 +343,9 @@ class _Program(NamedTuple):
     into the schema's columns, the lists held as JVM ``Seq[Column]`` so
     each operator costs one py4j call. Fast path only: ``lines`` projects
     a text scan to (value, __f), ``paths`` splits a path list (see
-    _fast_lines_df), ``head`` projects the barrier-wrapped match tokens
-    ``__m`` next to ``__f``, ``keep`` drops unparsed rows. ``pre`` adds
+    _fast_lines_df), ``keep`` drops unparsed rows. ``head`` projects the
+    barrier-wrapped match tokens ``__m`` next to the line frame's other
+    columns (__f; raw mode: log_file, line_number, line), ``pre`` adds
     the %r token columns (see _projection), ``cols`` selects the output
     columns in schema order; None marks a step that is skipped."""
 
@@ -360,24 +364,27 @@ def _seq(cols: list) -> Any:
 
 
 def _compile_program(parsed: ParsedFormat, raw: bool) -> _Program:
-    """Fast path (raw=False) over (value, __f): the split match tokens
-    are materialized once behind a barrier so the drop-unparsed Filter
-    and the typed Projection share ONE regex execution and ONE split
-    per line (without it, predicate pushdown inlines them into both
-    operators — measured ~15% slower). ``__f`` is the decoded
+    """In both modes the split match tokens are materialized once
+    behind a barrier, so every consumer of the match shares ONE regex
+    execution and ONE split per line (without it, predicate pushdown
+    inlines them into each operator — measured ~15% slower). Fast path
+    (raw=False) over (value, __f): the consumers are the drop-unparsed
+    Filter and the typed Projection. ``__f`` is the decoded
     ``_metadata.file_path``, deterministic, so a predicate on log_file
     passes the barrier down to the text scan, where Spark's file index
     applies it. Raw mode over (log_file, line_number, line) keeps every
-    row and flags the unparsed ones."""
+    row and flags the unparsed ones; the consumers are ``parse_error``
+    (and a user's filter on it), the %r token columns and the typed
+    Projection."""
     from pyspark import SparkContext
 
     n = parsed.num_capture_groups
     line = F.col("line" if raw else "value")
-    tokens = X.match_tokens(line, parsed.regex_pattern, n)
-    parts = tokens if raw else F.col("__m")
+    parts = F.col("__m")
     ok = X.match_ok(parts, n) if parsed.fields else F.lit(False)
     pre, cols = _projection(parsed, ok, parts)
     pre = _seq([F.col("*"), *pre]) if pre else None
+    m = X.materialization_barrier(X.match_tokens(line, parsed.regex_pattern, n)).alias("__m")
     if raw:
         cols += [
             F.col("log_file"),
@@ -385,23 +392,23 @@ def _compile_program(parsed: ParsedFormat, raw: bool) -> _Program:
             (~ok).alias("parse_error"),
             line.alias("raw_line"),
         ]
-        return _Program(None, None, None, None, pre, _seq(cols))
+        head = [F.col("log_file"), F.col("line_number"), line, m]
+        return _Program(None, None, _seq(head) if parsed.fields else None, None, pre, _seq(cols))
     cols.append(F.col("__f").alias("log_file"))
     return _Program(
         _seq([line, _normalize_file_uri(F.col("_metadata.file_path")).alias("__f")]),
         SparkContext._jvm.java.util.regex.Pattern.compile("\x00"),
-        _seq([X.materialization_barrier(tokens).alias("__m"), F.col("__f")])
-        if parsed.fields
-        else None,
+        _seq([m, F.col("__f")]) if parsed.fields else None,
         ok,
         pre,
         _seq(cols),
     )
 
 
-# Compiled programs, least recently used first. Building one costs about
-# a thousand py4j round trips, which dominated every interactive query's
-# bind and pushdown re-plan. Entries are unresolved expressions only (no
+# Compiled programs and raw mode's line numbering (_compile_numbering),
+# least recently used first. Building a program costs about a thousand
+# py4j round trips, which dominated every interactive query's bind and
+# pushdown re-plan. Entries are unresolved expressions only (no
 # data, no plan, no Spark cache entry), valid in any session of the JVM
 # that built them.
 _PROGRAMS: dict = {}
@@ -409,21 +416,26 @@ _PROGRAMS_MAX = 32
 _PROGRAMS_LOCK = threading.Lock()
 
 
+def _cached(key: tuple, build) -> Any:
+    """``build()``, kept in _PROGRAMS under ``key`` plus the live py4j
+    gateway, so a relaunched JVM never sees another JVM's expressions."""
+    from pyspark import SparkContext
+
+    key = (*key, SparkContext._gateway)
+    with _PROGRAMS_LOCK:
+        val = _PROGRAMS.pop(key, None) or build()
+        _PROGRAMS[key] = val  # (re)inserted as the most recently used
+        if len(_PROGRAMS) > _PROGRAMS_MAX:
+            del _PROGRAMS[next(iter(_PROGRAMS))]
+    return val
+
+
 def _program(parsed: ParsedFormat, raw: bool) -> _Program:
     """The compiled program for ``parsed`` in the given mode. The key is
     the WHOLE format — its dataclass repr carries every modifier,
     strftime layout and column name, which the regex alone does not
-    (%T and %{ms}T share one) — plus the live py4j gateway, so a
-    relaunched JVM never sees another JVM's expressions."""
-    from pyspark import SparkContext
-
-    key = (repr(parsed), raw, SparkContext._gateway)
-    with _PROGRAMS_LOCK:
-        prog = _PROGRAMS.pop(key, None) or _compile_program(parsed, raw)
-        _PROGRAMS[key] = prog  # (re)inserted as the most recently used
-        if len(_PROGRAMS) > _PROGRAMS_MAX:
-            del _PROGRAMS[next(iter(_PROGRAMS))]
-    return prog
+    (%T and %{ms}T share one)."""
+    return _cached((repr(parsed), raw), lambda: _compile_program(parsed, raw))
 
 
 def _apply_program(df: DataFrame, prog: _Program) -> DataFrame:
@@ -879,65 +891,82 @@ def _raw_lines_df(spark: SparkSession, files: list[str]) -> DataFrame:
     )
 
 
-def _raw_lines_df_jvm(spark: SparkSession, files: list[str]) -> DataFrame:
-    """Split-parallel JVM raw-line reader (r9 verdict stretch item 9).
+class _Numbering(NamedTuple):
+    """Raw mode's per-file line numbering (see _raw_lines_df_jvm) as JVM
+    objects, so each of its plan steps costs one py4j call. It does not
+    depend on the format, so one instance serves every raw read."""
 
-    The Python streamer above is semantics-first (one task per file,
-    every byte through a Python worker) — ~4x slower than the fast
-    path. For files Spark's codec factory handles by NAME (plain text
-    and properly-named .gz), per-file line numbers are recoverable
-    WITHOUT per-file tasks:
+    paths: Any  # splits the NUL-joined path list
+    lines: Any  # text scan -> (line, log_file, __bstart, __mid)
+    blocks: Any  # the (file, block) group keys, renamed for the join
+    shift: Any  # per block: line_number - __mid
+    no_cols: Any  # the empty Seq the broadcast hint takes
+    nonempty: Any
+    on: Any  # the join condition
+    out: Any  # (log_file, line_number, line)
 
-    1. every split carries `_metadata.file_block_start`, and a split's
-       rows are contiguous under `monotonically_increasing_id`, so
-       `mid - min(mid) OVER (file, block)` is the exact in-split line
-       index (no shuffle — the min comes from a small per-block
-       aggregate, broadcast back);
-    2. per-(file, block) line counts (empty lines INCLUDED — they
-       advance the counter) prefix-sum per file over block starts into
-       each block's starting line number;
-    3. line_number = block offset + in-split index + 1; empty lines
-       are dropped only AFTER numbering.
 
-    Both passes re-read the same deterministic file splits (leaf scan,
-    fixed listing), so the nondeterministic-by-annotation mid is
-    reproducible between them; parity with the Python streamer is
-    pinned in tests (CRLF, gzip, junk, multi-split).
-    """
-    df = (
-        spark.read.text(files)
-        .select(
+def _compile_numbering() -> _Numbering:
+    from pyspark import SparkContext
+
+    per_file = Window.partitionBy("log_file").orderBy("__bstart")
+    before = per_file.rowsBetween(Window.unboundedPreceding, -1)
+    lines_before = F.coalesce(F.sum(F.count(F.lit(1))).over(before), F.lit(0))
+    return _Numbering(
+        SparkContext._jvm.java.util.regex.Pattern.compile("\x00"),
+        _seq([
             F.col("value").alias("line"),
             _normalize_file_uri(F.col("_metadata.file_path")).alias("log_file"),
             F.col("_metadata.file_block_start").alias("__bstart"),
             F.monotonically_increasing_id().alias("__mid"),
-        )
+        ]),
+        _seq([F.col("log_file").alias("__o_file"), F.col("__bstart").alias("__o_bstart")]),
+        (lines_before + 1 - F.min("__mid")).alias("__shift")._jc,
+        _seq([]),
+        (F.length("line") > 0)._jc,
+        ((F.col("log_file") == F.col("__o_file"))
+         & (F.col("__bstart") == F.col("__o_bstart")))._jc,
+        _seq([
+            F.col("log_file"),
+            (F.col("__mid") + F.col("__shift")).alias("line_number"),
+            F.col("line"),
+        ]),
     )
-    blocks = df.groupBy("log_file", "__bstart").agg(
-        F.count(F.lit(1)).alias("__cnt"), F.min("__mid").alias("__minmid")
-    )
-    woff = (
-        Window.partitionBy("log_file")
-        .orderBy("__bstart")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = blocks.select(
-        F.col("log_file").alias("__o_file"),
-        F.col("__bstart").alias("__o_bstart"),
-        F.col("__minmid"),
-        F.coalesce(F.sum("__cnt").over(woff), F.lit(0)).alias("__loff"),
-    )
-    cond = (F.col("log_file") == F.col("__o_file")) & (
-        F.col("__bstart") == F.col("__o_bstart")
-    )
-    return (
-        df.join(F.broadcast(offs), cond)
-        .withColumn(
-            "line_number", F.col("__loff") + (F.col("__mid") - F.col("__minmid")) + 1
-        )
-        .filter(F.length("line") > 0)
-        .select("log_file", "line_number", "line")
-    )
+
+
+def _raw_lines_df_jvm(spark: SparkSession, files: list[str]) -> DataFrame:
+    """Split-parallel JVM raw-line reader: DataFrame[(log_file,
+    line_number, line)] for files Spark's codec factory handles by NAME
+    (plain text and properly-named .gz). Per-file line numbers are
+    recovered WITHOUT per-file tasks:
+
+    1. every split carries `_metadata.file_block_start`, and a split's
+       rows are contiguous under `monotonically_increasing_id`, so
+       `mid - min(mid)` per (file, block) is the exact in-split line
+       index;
+    2. per-(file, block) line counts (empty lines INCLUDED — they
+       advance the counter) prefix-sum per file over block starts into
+       each block's first line number; one small aggregate computes
+       both, as the block's ``line_number - mid``, broadcast back;
+    3. line_number = mid + that shift; empty lines are dropped after
+       ``mid`` is assigned and before the join.
+
+    The offsets join is a LEFT outer join: every line matches exactly
+    one block of the same relation, so it is value-identical to an
+    inner join. The offsets are unique on the join keys (their group
+    keys), so Catalyst drops the whole offsets side (its second read of
+    the files, the aggregate, the window and the broadcast) whenever
+    ``line_number`` is not referenced. When it is referenced,
+    both reads scan the same deterministic file splits (leaf scan,
+    fixed listing), so the nondeterministic-by-annotation mid is
+    reproducible between them; parity with the Python streamer is
+    pinned in tests (CRLF, gzip, junk, multi-split).
+    """
+    num = _cached(("numbering",), _compile_numbering)
+    df = spark._jsparkSession.read().text(num.paths.split("\x00".join(files))).select(num.lines)
+    offs = df.groupBy(num.blocks).agg(num.shift, num.no_cols).hint("broadcast", num.no_cols)
+    joined = df.filter(num.nonempty).join(offs, num.on, "left")
+    return DataFrame(joined.select(num.out), spark)
 
 
 def _read_raw(spark: SparkSession, files: list[str], prog: _Program) -> DataFrame:

@@ -80,6 +80,39 @@ def test_log_reader_fast_path_is_narrow(spark):
     assert pushed.count() == 1
 
 
+def test_raw_mode_parses_once_and_numbers_lines_only_when_read(spark, tmp_path):
+    # raw mode shares the fast path's barrier: the parse_error Filter,
+    # the %r token column and the typed Projection run one line regex.
+    # line_number's offsets come from a left outer join Catalyst drops
+    # when line_number is unread: no second scan, aggregate or join, and
+    # the write runs as one Spark job
+    from pyspark.sql import functions as F
+
+    from duckdb_httpd_log_spark import write_httpd_log
+
+    raw = read_httpd_log(spark, data("common", "with_errors.log"), raw=True)
+    good = raw.filter(~F.col("parse_error"))
+    curated = good.drop("line_number")
+    opt = curated._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    text = "\n".join(opt)
+    assert text.count("regexp_replace(line#") == 1
+    assert len([ln for ln in opt if "Generate " in ln]) == 1
+    assert "Join" not in text and "Aggregate" not in text
+
+    sc = spark.sparkContext
+    sc.setJobGroup("raw_curate_write", "raw curate write")
+    try:
+        write_httpd_log(curated, str(tmp_path / "out"), format_type="common")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("raw_curate_write")) == 1
+
+    numbered = good._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join LeftOuter" in numbered
+    assert numbered.count("regexp_replace(line#") == 1
+    assert [r.line_number for r in good.orderBy("line_number").collect()] == [1, 3, 5]
+
+
 def test_exact_dedup_has_partial_agg(spark):
     plan = _plan(REGISTRY["dedup_exact"].spark_fn(spark, SF_DIR))
     # partial_min/partial_count before the exchange = map-side combine

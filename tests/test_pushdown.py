@@ -916,7 +916,7 @@ def test_log_file_disjunction_with_row_predicate_not_pruned(spark, fleet_dir):
     df = _fleet(spark, fleet_dir)
     pred = F.col("log_file").like("%server03%") | (F.col("status") == 500)
     out = df.filter(pred)
-    assert len(out.inputFiles()) == 16
+    assert files_read(out) == 16
     naive = super(LineFilterableFrame, df).filter(pred)
     assert sorted(map(str, out.collect())) == sorted(map(str, naive.collect()))
 

@@ -5,9 +5,9 @@ sources/pushdown.py ``LineFilterableFrame``).
    on first use of the frame, and a pushed-down filter builds only its
    re-planned scan. Filters resolve against a schema-only stand-in whose
    columns match the built frame's.
-2. ROUND TRIPS: a bind and each dashboard filter shape stay within a
-   py4j round-trip budget, so a per-column conversion or a per-call
-   capture creeping back in fails here.
+2. ROUND TRIPS: a bind, each dashboard filter shape and a raw-mode
+   bind stay within a py4j round-trip budget, so a per-column
+   conversion or a per-call capture creeping back in fails here.
 3. GUARD: lines carrying the \\x01/\\x02 control characters the parse
    uses as separator and sentinel give the same rows and parse_error
    values in fast and raw mode as before the split moved under the
@@ -137,13 +137,15 @@ def test_unbuilt_frame_works_everywhere(spark, fleet):
 
 # --- 2. py4j round-trip budget ------------------------------------------------------
 # py4j calls measured per call on the fleet after warm-up (``plan``:
-# building a bind's all-files parse plan); each may grow by at most a
-# quarter. A filter walks the analyzed condition once (one
+# building a bind's all-files parse plan; ``raw``: a raw-mode bind,
+# which builds its numbered parse plan eagerly); each may grow by at
+# most a quarter. A filter walks the analyzed condition once (one
 # classification of its top-level conjuncts feeds the per-file range
 # test and the needles); the rest resolve the predicate and build the
 # re-planned scan (``listing``: the all-files plan, which Spark's file
 # index prunes).
-MEASURED = {"bind": 0, "plan": 16, "needle": 78, "day": 75, "since": 66, "listing": 46, "status5xx": 67}
+MEASURED = {"bind": 0, "plan": 16, "needle": 78, "day": 75, "since": 66, "listing": 46,
+            "status5xx": 67, "raw": 13}
 
 
 def test_py4j_round_trips_per_bind_and_filter(spark, fleet, monkeypatch):
@@ -171,8 +173,11 @@ def test_py4j_round_trips_per_bind_and_filter(spark, fleet, monkeypatch):
     for _ in range(2):
         for pred in shapes.values():
             read_httpd_log(spark, path, format_type="combined").filter(pred).count()
+        read_httpd_log(spark, path, format_type="combined", raw=True)
     df, got = calls(lambda: read_httpd_log(spark, path, format_type="combined"))
     counts = {"bind": got}
+    _raw, counts["raw"] = calls(
+        lambda: read_httpd_log(spark, path, format_type="combined", raw=True))
     _jdf, counts["plan"] = calls(lambda: df._jdf)  # the all-files parse plan
     for name, pred in shapes.items():
         df = read_httpd_log(spark, path, format_type="combined")

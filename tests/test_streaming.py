@@ -974,8 +974,9 @@ def test_stream_glob_nesting_safe_with_subdirs(spark, tmp_path):
     assert gotc == {r.client_host for r in all_rows if "serverA" in r.log_file}
 
 
-def test_stream_user_glob_option_disables_prune(spark, tmp_path):
-    # a user-supplied pathGlobFilter is respected verbatim (no overwrite)
+def test_stream_user_glob_composes_with_log_file_filter(spark, tmp_path):
+    # a user-supplied pathGlobFilter is respected verbatim, and a
+    # log_file filter on top of it still keeps only the matching rows
     logdir = tmp_path / "logs"
     logdir.mkdir()
     _mklog(logdir / "serverA.log", "1.1.1.1")
@@ -990,9 +991,10 @@ def test_stream_user_glob_option_disables_prune(spark, tmp_path):
 
 
 def test_stream_glob_prune_remote_watch_dir(spark, tmp_path):
-    # r14: stream_glob_for accepts scheme-qualified watch dirs — the
-    # corrupt gz proves the suffix glob pruned the open on a viewfs://
-    # watch (the same Hadoop FS code path an s3a:// watch takes)
+    # a scheme-qualified watch dir prunes too: the log_file predicate
+    # reaches Spark's file index, and the corrupt gz proves the pruned
+    # file was never opened on a viewfs:// watch (the same Hadoop FS
+    # code path an s3a:// watch takes)
     logdir = tmp_path / "vlogs"
     logdir.mkdir()
     _mklog(logdir / "serverA.log", "1.1.1.1")
