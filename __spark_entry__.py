@@ -32,7 +32,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # round open, after CORRECTNESS_r13.json landed):
 # never-sampled registry entries first, then every row oldest-green
 # first, so each row's driver verdict ages out on a rolling basis
-# under the pandas-dtype guards (tests/test_roundproof.py,
+# under the pandas-dtype guards (tests/test_registry_sweep.py,
 # operators/probes.py).
 _PRIORITY = [
     # last green r8

@@ -705,9 +705,11 @@ def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the frames into stats-less LogicalRDDs whose join estimates
     # exploded (measured 250 PB for lat) and double-ran the query
     # (interleaved A/B 1.0 -> 2.1 s; the persist form measures
-    # 0.63-0.74 s vs 1.0 s old). Retention: cached partitions unpin
-    # when the returned DataFrame's lineage is GC'd (bench.py's
-    # gc.collect() cadence), same contract as distrank's materialize.
+    # 0.63-0.74 s vs 1.0 s old). Retention: these are CacheManager
+    # entries, which outlive Python GC (only localCheckpoint RDDs are
+    # reaped by the ContextCleaner); they stay until unpersist() or
+    # spark.catalog.clearCache(), same contract as distrank's
+    # materialize.
     from pyspark import StorageLevel
 
     v = (

@@ -1218,8 +1218,8 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §2.4): exact feeds BOTH ne and nh, cands feeds BOTH nc
     # and nh — unpinned, each reference re-ran the full gram self-join /
     # band self-join from the checkpointed docs (34 Exchanges in the
-    # r13 executedPlan, plans/r14/dedup_minhash_eval_before.txt). Pin
-    # the two small pair frames so each pipeline runs once.
+    # r13 executedPlan). Pin the two small pair frames so each pipeline
+    # runs once.
     exact = (
         inter.join(ga, "doc_a")
         .join(gb, "doc_b")
@@ -2208,8 +2208,7 @@ def emb_pca_power_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads u twice; the final select reads u2 + normed(u2) + m) and
     # Catalyst does not de-duplicate the repeated subtrees — the r13
     # plan re-derived u1 ~9x through the nesting: 38 parquet scans /
-    # 134 Exchanges in one executedPlan (plans/r14/
-    # emb_pca_power_train_before.txt). Pinning the three tiny frames
+    # 134 Exchanges in one executedPlan. Pinning the three tiny frames
     # (lazy localCheckpoint, same pattern as vals) collapses the plan
     # to the linear chain the algorithm actually is.
     m = raw.agg(F.max(F.abs("x0")).alias("m0")).localCheckpoint(eager=False)

@@ -279,11 +279,12 @@ def _two_phase(
         # where a persist would only add cost). RETENTION: both the
         # counts pass and the final join consume the persisted input
         # lazily, so there is no build-time point at which an eager
-        # unpersist is sound — the cached partitions stay pinned until
-        # the returned DataFrame's lineage is dropped (Python GC ->
-        # ContextCleaner, the lifecycle bench.py's gc.collect() cadence
-        # manages). Long-lived sessions holding the result should
-        # expect that storage, or recompute without materialize.
+        # unpersist is sound. The persist is a CacheManager entry: it
+        # outlives Python GC (the ContextCleaner reaps localCheckpoint
+        # RDDs, not cache entries) and stays until an unpersist() of
+        # the input's plan or spark.catalog.clearCache(). Long-lived
+        # sessions should clear it when done with the result, or
+        # recompute without materialize.
         from pyspark import StorageLevel
 
         df = df.persist(StorageLevel.MEMORY_AND_DISK)

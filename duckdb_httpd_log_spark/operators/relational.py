@@ -1664,7 +1664,7 @@ def q48_rank_distributions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # columns: the driver's canonicalizer sorts pandas columns and throws
 # `unhashable type: 'list'` on array cells (CORRECTNESS_r05 harness
 # error), so complex types must never reach the output contract —
-# tests/test_roundproof.py now guards this for every registry entry.
+# tests/test_registry_sweep.py now guards this for every registry entry.
 # ---------------------------------------------------------------------------
 @register(
     "q50_array_agg",

@@ -145,50 +145,23 @@ def _assign_cells(
     return out
 
 
-def _assign_cell_expr(col, cell_ids, cen):
-    """JVM-expression dense nearest-cell assignment (cell count <=
-    _HIER_MAX_DENSE_CELLS): per-cell squared distance as a sequential
-    zip_with/aggregate fold — the SAME ascending-order summation as the
-    oracle's list_sum — quantized via fround(., 6), argmin by array_min
-    over (d2, cell) structs (lexicographic struct order = round-6
-    distance then LOWEST cell id, the exact oracle tie contract).
+def _assigned_cells(spark: SparkSession, emb: DataFrame, ids, cen) -> DataFrame:
+    """``emb``'s ``embedding`` with its nearest cell (``cell``) under the
+    model (``ids``, ``cen``): one broadcast of the model and one Arrow
+    pass. Round-6 distances with the lowest-cell tie-break — the exact
+    contract the oracle's ORDER BY d2, cell encodes (dense path);
+    coarse-quantizer pruning past _HIER_MAX_DENSE_CELLS. A Catalyst
+    higher-order-function form lost to this kernel in the A/B recorded
+    in BASELINE.md §kmeans-assign."""
+    b = spark.sparkContext.broadcast((ids, cen, _coarse_model(cen)))
 
-    MEASURED DISPOSITION (r14 A/B, r13 verdict item 2) — the
-    expression form LOSES to the Arrow kernel and is therefore the
-    OPT-IN path (``spark.graft.kmeans.assign=expr``), not the default:
-    at sf0.1 / local[32], kmeans_update_step arrow 2.19 s vs this form
-    2.69 s vs a flat unrolled-arithmetic variant 12.0 s; kmeans_train
-    3.17 / 5.35 / 24.0 s (value parity held in every variant).
-    Catalyst evaluates higher-order-function lambdas interpreted per
-    array element (16 cells x 64 dims = 1024 lambda frames per row),
-    and the unrolled form's ~33k-node expression tree falls out of
-    codegen entirely — both pay more than the ONE Arrow round-trip of
-    the vector column per pass, which Spark pipelines through the
-    Python worker in parallel batches. The A/B numbers live in
-    BASELINE.md §kmeans-assign; re-run via tools/scale_rehearsal.py
-    or the conf toggle if Spark's HOF evaluation ever compiles."""
-    structs = []
-    for cid, c in zip(cell_ids, cen):
-        carr = F.array(*[F.lit(float(v)) for v in c])
-        d2 = F.aggregate(
-            F.zip_with(
-                col,
-                carr,
-                lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        structs.append(
-            F.struct(fround(d2, 6).alias("d2"), F.lit(int(cid)).alias("cell"))
-        )
-    return F.array_min(F.array(*structs)).getField("cell").cast("int")
+    @F.pandas_udf("int")
+    def assigned_cell(embedding: pd.Series) -> pd.Series:
+        bids, bc, bco = b.value
+        mat = np.stack(embedding.values).astype(np.float64)
+        return pd.Series(_assign_cells(mat, bids, bc, bco).astype("int32"))
 
-
-def _assign_mode(spark: SparkSession) -> str:
-    # default 'arrow' per the measured disposition above; 'expr' opts
-    # into the Catalyst form for dense cell counts
-    return str(spark.conf.get("spark.graft.kmeans.assign", "arrow")).lower()
+    return emb.select(assigned_cell("embedding").alias("cell"), "embedding")
 
 
 def _d2_matrix(mat: "np.ndarray", cen: "np.ndarray") -> "np.ndarray":
@@ -746,27 +719,6 @@ def kmeans_update_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     cen = np.array(_centroids(spark, sf_dir), dtype=np.float64)  # nlist x dim
     cell_ids = np.arange(cen.shape[0], dtype=np.int32)
-    coarse_model = _coarse_model(cen)
-
-    if coarse_model is None and _assign_mode(spark) == "expr":
-        # opt-in Catalyst-expression assignment (<= 64 cells) — loses
-        # the r14 A/B to the Arrow kernel; see _assign_cell_expr
-        assigned = emb.select(
-            _assign_cell_expr(F.col("embedding"), cell_ids, cen).alias("cell"),
-            "embedding",
-        )
-        return _cell_means(assigned)
-
-    b_cen = spark.sparkContext.broadcast((cell_ids, cen, coarse_model))
-
-    @F.pandas_udf("int")
-    def assigned_cell(embedding: pd.Series) -> pd.Series:
-        ids, c, coarse = b_cen.value
-        mat = np.stack(embedding.values).astype(np.float64)
-        # round-6 then lowest-cell tie-break — the exact tie/precision
-        # contract the oracle's ORDER BY d2, cell encodes (dense path);
-        # coarse-quantizer pruning past _HIER_MAX_DENSE_CELLS
-        return pd.Series(_assign_cells(mat, ids, c, coarse).astype("int32"))
 
     # Partial-aggregate shape: one groupBy(cell) with DIM avg() columns.
     # Spark's Average runs map-side partial aggregation, so the shuffle
@@ -774,8 +726,7 @@ def kmeans_update_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count) instead of the posexplode form's DIM rows PER VECTOR —
     # ~DIM x less shuffle volume, the shape an iterated k-means driver
     # loop needs at 100 TB (shared with kmeans_train via _cell_means).
-    assigned = emb.select(assigned_cell("embedding").alias("cell"), "embedding")
-    return _cell_means(assigned)
+    return _cell_means(_assigned_cells(spark, emb, cell_ids, cen))
 
 
 # ---------------------------------------------------------------------------
@@ -844,27 +795,6 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     cen = np.array(_centroids(spark, sf_dir), dtype=np.float64)
     cell_ids = np.arange(cen.shape[0], dtype=np.int32)
 
-    def _assigned(ids, c):
-        # one full-corpus assignment pass under the current model:
-        # Arrow kernel by default (the r14 A/B winner — see
-        # _assign_cell_expr's measured disposition), Catalyst
-        # expression form on the dense path under the opt-in conf
-        coarse = _coarse_model(c)
-        if coarse is None and _assign_mode(spark) == "expr":
-            return emb.select(
-                _assign_cell_expr(F.col("embedding"), ids, c).alias("cell"),
-                "embedding",
-            )
-        b = spark.sparkContext.broadcast((ids, c, coarse))
-
-        @F.pandas_udf("int")
-        def assigned_cell(embedding: pd.Series) -> pd.Series:
-            bids, bc, bco = b.value
-            mat = np.stack(embedding.values).astype(np.float64)
-            return pd.Series(_assign_cells(mat, bids, bc, bco).astype("int32"))
-
-        return emb.select(assigned_cell("embedding").alias("cell"), "embedding")
-
     for _ in range(KMEANS_ITERS - 1):
         # r15 (r14-verdict item 2: fewer actions per training round):
         # collect the 64-wide grouped row per cell directly. The
@@ -873,7 +803,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         # range-partitioning boundary-sampling job per iteration and a
         # 64x row blow-up before the collect. Values are identical:
         # fround(avg(embedding[j]), 4) per (cell, j) either way.
-        grouped = _assigned(cell_ids, cen).groupBy("cell").agg(
+        grouped = _assigned_cells(spark, emb, cell_ids, cen).groupBy("cell").agg(
             *[
                 fround(F.avg(F.col("embedding").getItem(j).cast("double")), 4).alias(f"c{j}")
                 for j in range(DIM)
@@ -887,7 +817,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cell_ids = np.array(cells, dtype=np.int32)
 
-    return _cell_means(_assigned(cell_ids, cen))
+    return _cell_means(_assigned_cells(spark, emb, cell_ids, cen))
 
 
 # ---------------------------------------------------------------------------

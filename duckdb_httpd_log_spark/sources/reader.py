@@ -280,8 +280,14 @@ def _error_fill(typ: str):
     return F.lit(None).cast(_SPARK_TYPES[typ])
 
 
-def _projection(parsed: ParsedFormat, ok, parts) -> tuple[list, list]:
+def _projection(parsed: ParsedFormat, ok: Optional[Column], parts) -> tuple[list, list]:
     """Build the typed output columns (excluding metadata columns).
+
+    ``ok`` (raw mode) guards each column with ``CASE WHEN ok`` so an
+    unparsed row gets its fill value; the fast path passes None, since
+    its ``keep`` Filter below has already dropped every row failing
+    ``ok``, and a user predicate pushed into that Filter is ANDed after
+    it.
 
     Returns ``(pre, cols)``: ``pre`` is a list of INTERMEDIATE columns
     (currently the %r token arrays, one per request field) that must be
@@ -298,6 +304,10 @@ def _projection(parsed: ParsedFormat, ok, parts) -> tuple[list, list]:
     cols: list = []
     pre: list = []
     seen_groups: set[int] = set()
+
+    def guard(e, fill):
+        return e if ok is None else F.when(ok, e).otherwise(fill)
+
     for f in parsed.fields:
         if f.should_skip:
             continue
@@ -310,7 +320,7 @@ def _projection(parsed: ParsedFormat, ok, parts) -> tuple[list, list]:
                 e = X.timestamp_group_expr(parsed, parsed.timestamp_groups[gid], parts)
             else:
                 e = X.single_timestamp_expr(f, parts)
-            cols.append(F.when(ok, e).otherwise(F.lit(None).cast("timestamp")).alias(f.column_name))
+            cols.append(guard(e, F.lit(None).cast("timestamp")).alias(f.column_name))
         elif f.directive in _REQUEST_DIRECTIVES:
             # no materialization_barrier here: CollapseProject already
             # refuses to inline a NON-CHEAP producer expression
@@ -331,10 +341,10 @@ def _projection(parsed: ParsedFormat, ok, parts) -> tuple[list, list]:
                 if flag:
                     continue
                 fill = F.lit(None).cast("string") if name == "query_string" else F.lit("")
-                cols.append(F.when(ok, sub[name]).otherwise(fill).alias(name))
+                cols.append(guard(sub[name], fill).alias(name))
         else:
             e = X.regular_field_expr(f, parts)
-            cols.append(F.when(ok, e).otherwise(_error_fill(f.type)).alias(f.column_name))
+            cols.append(guard(e, _error_fill(f.type)).alias(f.column_name))
     return pre, cols
 
 
@@ -382,7 +392,7 @@ def _compile_program(parsed: ParsedFormat, raw: bool) -> _Program:
     line = F.col("line" if raw else "value")
     parts = F.col("__m")
     ok = X.match_ok(parts, n) if parsed.fields else F.lit(False)
-    pre, cols = _projection(parsed, ok, parts)
+    pre, cols = _projection(parsed, ok if raw else None, parts)
     pre = _seq([F.col("*"), *pre]) if pre else None
     m = X.materialization_barrier(X.match_tokens(line, parsed.regex_pattern, n)).alias("__m")
     if raw:

@@ -57,6 +57,12 @@ def test_log_reader_fast_path_is_narrow(spark):
     # PushDownPredicate inline the regexp into every consumer. (The
     # other regexp_replace in the plan is the file-URI normalizer.)
     assert plan.count("regexp_replace(value#") == 1
+    # no CASE WHEN ok guard over the typed columns: the match-ok
+    # predicate (its size(__m) part count) sits in the drop-unparsed
+    # Filter only
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("size(__m#") == 1
+    assert "CASE WHEN ((substring(element_at(__m#" not in opt
 
     # a pushed-down filter: the barrier wraps the SPLIT match, so the
     # drop-unparsed Filter and the Project share one split per line, and
@@ -381,8 +387,7 @@ def test_r14_pca_and_eval_pins_collapse_fanout(spark):
     # pair frames, triangle count's degree table) are localCheckpointed
     # so Catalyst stops re-deriving the full upstream subtree per
     # reference. Before the pins emb_pca_power_train's executedPlan
-    # held 38 parquet scans / 134 Exchanges (plans/r14/
-    # emb_pca_power_train_before.txt); pinned, every corpus scan sits
+    # held 38 parquet scans / 134 Exchanges; pinned, every corpus scan sits
     # behind an ExistingRDD and the plan is the linear chain the
     # algorithm is.
     plan = _plan(REGISTRY["emb_pca_power_train"].spark_fn(spark, SF_DIR))
@@ -448,8 +453,8 @@ def test_r15_fanout_pins_collapse_scans(spark):
     # cascade's v/c/counts, the text ops' tokenized projections) are
     # pinned so Catalyst stops re-deriving the full corpus subtree per
     # reference. Before the pins these plans carried 8-36 parquet scans
-    # each (plans/r15/*_before.txt) and their execution cost depended
-    # on AQE's runtime ReusedExchange rescue.
+    # each and their execution cost depended on AQE's runtime
+    # ReusedExchange rescue.
     for name, max_scans, max_exchanges in [
         ("emb_outlier_filter", 0, 12),
         ("events_funnel_dropoff", 0, 4),

@@ -412,6 +412,40 @@ def test_control_char_line_degrades_to_parse_error(spark, tmp_path):
     assert flags == [False, True, True]
 
 
+def test_fast_mode_filters_agree_under_ansi(spark, tmp_path):
+    # the fast path's typed columns carry no CASE WHEN ok guard: the
+    # drop-unparsed Filter runs first, so a typed filter never indexes
+    # past a junk line's one-element parts array, which ANSI mode would
+    # raise on
+    lines = []
+    for i in range(30):
+        if i % 3 == 0:
+            lines.append(f"junk line {i}")
+        elif i % 3 == 1:
+            lines.append(
+                f'10.0.0.{i} - - [10/Oct/2024:13:55:{i:02d} +0000] '
+                f'"GET /p{i} HTTP/1.1" {500 if i % 2 else 200} {i * 10}'
+            )
+        else:
+            lines.append("")
+    p = tmp_path / "mixed.log"
+    p.write_text("\n".join(lines) + "\n")
+
+    def rows(pred):
+        df = read_httpd_log(spark, str(p), format_type="common").filter(pred)
+        return sorted(tuple(r) for r in df.collect())
+
+    preds = [F.col("status") >= 500, F.col("bytes") > 100]
+    plain = [rows(pred) for pred in preds]
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        ansi = [rows(pred) for pred in preds]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+    assert [len(r) for r in plain] == [5, 6]
+    assert ansi == plain
+
+
 # --- special chars / edge cases ---------------------------------------------
 def test_special_chars(spark):
     df = read_httpd_log(spark, data("edge_cases", "special_chars.log"), format_type="common", raw=True)

@@ -31,8 +31,6 @@ import pytest
 import duckdb_httpd_log_spark.operators  # noqa: F401
 from duckdb_httpd_log_spark.plans.registry import REGISTRY
 
-from .conftest import SF_DIR
-
 OPS_DIR = Path(__file__).resolve().parent.parent / "duckdb_httpd_log_spark" / "operators"
 
 # name -> reason; entries here are exempt from the oracle-SQL scan
@@ -166,107 +164,6 @@ def test_no_libm_in_operator_sources():
                     f"{path.name}: libm {_LIBM_SQL.search(seg).group(0)!r} in string {seg[:60]!r}"
                 )
     assert not offenders, offenders
-
-
-def test_no_complex_types_in_output_contract(spark):
-    """The driver canonicalizes results through pandas sort_values,
-    which throws `unhashable type: 'list'` on array/map/struct cells
-    (q50_array_agg crashed the r5 harness). Every registry query must
-    emit scalar columns only. Schema-analysis only — no jobs run for
-    the overwhelming majority (a few queries fetch a driver-side
-    scalar at plan-build time, which is why this uses sf0.001)."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    bad = []
-    for name, qd in REGISTRY.items():
-        df = qd.spark_fn(spark, SF_DIR)
-        for fld in df.schema.fields:
-            if isinstance(fld.dataType, (ArrayType, MapType, StructType)):
-                bad.append(f"{name}.{fld.name}: {fld.dataType.simpleString()}")
-    assert not bad, (
-        f"complex output types break the driver canonicalizer: {bad}; "
-        f"project arrays to scalar columns or concat_ws strings"
-    )
-
-
-# DuckDB type -> pandas-kind for the driver's .df() canonicalization.
-# Types NOT in this map are banned from oracle output schemas outright:
-# HUGEINT/UHUGEINT (integer sum() results!) and DECIMAL land in pandas
-# as float64/object, FLOAT/REAL as float32 — none of which hash equal
-# to the int64/float64 Spark's toPandas() produces for the same values.
-_DUCK_KIND = {
-    "TINYINT": "int",
-    "SMALLINT": "int",
-    "INTEGER": "int",
-    "BIGINT": "int",
-    "DOUBLE": "float",
-    "VARCHAR": "str",
-    "BOOLEAN": "bool",
-    "DATE": "date",
-    "TIMESTAMP": "ts",
-}
-
-
-def _spark_kind(dt) -> str:
-    from pyspark.sql import types as T
-
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return "int"
-    if isinstance(dt, T.DoubleType):
-        return "float"
-    if isinstance(dt, T.StringType):
-        return "str"
-    if isinstance(dt, T.BooleanType):
-        return "bool"
-    if isinstance(dt, T.DateType):
-        return "date"
-    if isinstance(dt, T.TimestampType):
-        return "ts"
-    # FloatType (float32 repr drift) and DecimalType (pandas object)
-    # are deliberately unmapped -> banned
-    return f"BANNED:{dt.simpleString()}"
-
-
-def test_pandas_dtype_parity_contract(spark):
-    """The CORRECTNESS_r06 root cause, turned into CI: the driver
-    hashes results after pandas conversion, and DuckDB's .df() maps
-    HUGEINT — the result type of any uncast integer sum() — to
-    float64 while Spark stays int64, so `5` hashes as `5.0` on the
-    oracle side and the row goes red even though fetchall()-level
-    comparison is bit-exact (tools/dtype_audit.py reproduced the
-    exact 8-query red set of CORRECTNESS_r06 from this alone). Every
-    oracle output column must bind (DuckDB DESCRIBE — no execution)
-    to a type whose pandas kind equals the Spark column's kind;
-    int-width differences are allowed (int32 `5` and int64 `5`
-    canonicalize identically — orders_seasonality_index was driver-
-    green with an int32/int64 split), int-vs-float never is."""
-    import duckdb
-
-    sf_dir = SF_DIR
-    con = duckdb.connect()
-    from duckdb_httpd_log_spark.plans.registry import TABLES
-
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    bad = []
-    for name, qd in REGISTRY.items():
-        if qd.oracle_sql is None:
-            continue
-        sdf = qd.spark_fn(spark, sf_dir)
-        skinds = {f.name.lower(): _spark_kind(f.dataType) for f in sdf.schema.fields}
-        for col, typ, *_ in con.execute(f"DESCRIBE {qd.oracle_sql}").fetchall():
-            okind = _DUCK_KIND.get(typ.split("(")[0])
-            skind = skinds.get(col.lower())
-            if okind is None:
-                bad.append(f"{name}.{col}: oracle type {typ} (pandas-unsafe)")
-            elif skind != okind:
-                bad.append(f"{name}.{col}: spark {skind} vs oracle {okind} ({typ})")
-    assert not bad, (
-        "pandas-dtype parity violations (driver hash will flip red): "
-        + "; ".join(bad)
-    )
 
 
 if __name__ == "__main__":

@@ -1,14 +1,17 @@
-"""Round-14 optimization profiler: per-query plan capture + isolated timing.
+"""Per-query profiler: plan capture plus isolated noop-sink timing.
 
-For each named registry query (default: the board's slowest ones):
-  - captures .explain("formatted") into plans/r14/<name>_<tag>.txt
-  - times the computation against the noop sink (guide section 1.4) so
-    the measurement excludes driver-side result pull, median of N
-  - labels jobs via setJobDescription (guide section 1.5)
+For each named registry query (default: the TOP set below, the board's
+slowest ones) it
+  - writes .explain("formatted") to <out_dir>/<name>_<tag>.txt;
+  - times the computation against the noop sink, so the measurement
+    excludes the driver-side result pull, through bench._timed (warm-up,
+    median of bench.N_RUNS, spike guard, pins released before each run);
+  - labels the query's jobs via setJobDescription;
+and writes the medians and plan-shape counts to
+<out_dir>/profile_<tag>.json.
 
-Usage: python tools/profile_r14.py <tag> [query ...]
-  tag is 'before' or 'after' (the plans/r14 filename suffix).
-  With no queries given, profiles the TOP set below.
+Usage: python tools/profile.py <out_dir> <tag> [query ...]
+  tag names the run, e.g. 'before' or 'after'.
 """
 
 from __future__ import annotations
@@ -17,11 +20,13 @@ import contextlib
 import io
 import json
 import os
-import statistics
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the repo root replaces this script's dir on the path: run as a script,
+# tools/profile.py would shadow the stdlib profile module cProfile imports
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+from bench import _timed  # noqa: E402
 
 TOP = [
     "kmeans_train",
@@ -49,12 +54,11 @@ TOP = [
     "bpe_vocab_stats",
 ]
 
-N_RUNS = 5
-
-
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or TOP
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or TOP
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
@@ -64,49 +68,30 @@ def main() -> None:
 
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     results: dict[str, dict] = {}
-    import gc
-
     for name in names:
         qd = REGISTRY.get(name)
         if qd is None:
             print(f"{name}: NOT IN REGISTRY", flush=True)
             continue
-        df = qd.spark_fn(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
-            fh.write(buf.getvalue())
-
-        # warm-up (codegen/JIT/broadcast), then noop-sink timed loop
-        spark.sparkContext.setJobDescription(f"r14 {tag} warmup: {name}")
-        qd.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs = []
-        for i in range(N_RUNS):
-            spark.sparkContext.setJobDescription(f"r14 {tag} run{i}: {name}")
-            t0 = time.perf_counter()
-            qd.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        spark.sparkContext.setJobDescription(None)
-        med = statistics.median(runs)
-        if med > 1.5 * min(runs):  # same spike guard as bench.py
-            runs2 = []
-            for _ in range(N_RUNS):
-                t0 = time.perf_counter()
-                qd.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs2.append(time.perf_counter() - t0)
-            med = min(med, statistics.median(runs2))
+            qd.spark_fn(spark, sf_dir).explain("formatted")
         plan = buf.getvalue()
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
+            fh.write(plan)
+
+        spark.sparkContext.setJobDescription(f"profile {tag}: {name}")
+        med, ts = _timed(
+            lambda: qd.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+            guard=True,
+        )
+        spark.sparkContext.setJobDescription(None)
         results[name] = {
-            "noop_median_s": round(med, 4),
-            "min_s": round(min(runs), 4),
+            "noop_median_s": med,
+            "min_s": round(ts[0], 4),
             "exchanges": plan.count("Exchange"),
             "scans": plan.count("Scan parquet"),
             "arrow_eval": plan.count("ArrowEvalPython"),
@@ -116,7 +101,6 @@ def main() -> None:
             "shj": plan.count("ShuffledHashJoin"),
         }
         print(f"{name}: {json.dumps(results[name])}", flush=True)
-        gc.collect()
 
     with open(os.path.join(out_dir, f"profile_{tag}.json"), "w") as fh:
         json.dump(results, fh, indent=1)
