@@ -6,8 +6,7 @@ Per query: one untimed warm-up run (codegen/JIT/regex compile), then a
 timed loop of N_RUNS runs, median reported; every run starts with the
 session's pins released (_timed). Also benchmarks the log-scan path
 (parse throughput, pushdown pairs, the writer) over synthetic Apache
-logs generated deterministically into a temp dir (SCAN_AXES,
-PUSHDOWN_PAIRS).
+logs generated deterministically into a temp dir (LOG_AXES).
 """
 
 from __future__ import annotations
@@ -306,77 +305,80 @@ COMBINED = {"format_type": "combined"}
 _EPOCH_FMT = '%h %l %u %{sec}t "%r" %>s %b "%{Referer}i" "%{User-Agent}i"'
 _ISO_FMT = '%h %l %u %{%Y-%m-%d %H:%M:%S}t "%r" %>s %b "%{Referer}i" "%{User-Agent}i"'
 
-# Single-reader log-scan axes: board key, corpus (a file or glob under
-# the bench temp dir, see write_corpora), read_httpd_log kwargs (a
-# "conf" value names a file in the same dir). Each times
-# read_httpd_log(...).count().
-SCAN_AXES = [
+# The log axes in board order: round-over-round diffs and the mover
+# gate join on these keys and their order. Row: key, what is timed,
+# corpus (a file or glob under the bench temp dir, see write_corpora),
+# read_httpd_log kwargs (a "conf" value names a file in the same dir).
+#   "count"  read_httpd_log(...).count()
+#   "write"  write_httpd_log of the read frame
+#   "pair"   a line-filter pushdown pair: the SAME typed predicate
+#            timed pushed (LineFilterableFrame.filter: derived needles
+#            below the regex, file pruning) as "<key>_pushdown" and
+#            naive (plain DataFrame.filter: parse everything, then
+#            filter) as "<key>_naive"; the pair is the win. The row
+#            adds the predicate (built once the session exists) and the
+#            session confs set for the pushed side only.
+# Pushdown is a selectivity play, not a constant factor: a status ==
+# 500 filter (~1/6 of lines, cheap typed eval) ties with naive.
+LOG_AXES = [
     # one file (the reference's one-thread-per-file granularity); N=9:
     # this axis wobbled r9->r10, so it also carries a noise band
-    ("log_scan_200k_combined", "bench_access.log", COMBINED),
+    ("log_scan_200k_combined", "count", "bench_access.log", COMBINED),
     # a 16-file glob: the multi-file parallel axis from BASELINE.md
-    ("log_scan_16files_800k", "multi/server*.log", COMBINED),
+    ("log_scan_16files_800k", "count", "multi/server*.log", COMBINED),
     # one LARGE file: the byte-range-splittable axis where this engine
     # beats the reference's one-thread-per-file model (~250-316 MB/s on
     # local[32] for 214 MB; the 200k axes are task-overhead-bound)
-    ("log_scan_2m_single_file", "bench_big.log", COMBINED),
+    ("log_scan_2m_single_file", "count", "bench_big.log", COMBINED),
     # raw mode on the same file: per-file line numbers + error rows
-    ("log_scan_2m_raw", "bench_big.log", {**COMBINED, "raw": True}),
+    ("log_scan_2m_raw", "count", "bench_big.log", {**COMBINED, "raw": True}),
+    # inverse-formatter sink: render the 2M-row typed frame back to
+    # combined-format text, one codegen'd concat projection + text write
+    ("log_write_2m", "write", "bench_big.log", COMBINED),
     # 20% junk lines: the error path's cost (regex miss, dropped row)
-    ("log_scan_2m_20pct_junk", "bench_junk.log", COMBINED),
-    # gzip: unsplittable, one task, decode inline
-    ("log_scan_200k_gz", "bench_access.log.gz", COMBINED),
-    # format resolved from an Apache config at bind time (sources/conf.py)
-    ("log_scan_200k_conf", "bench_access.log", {"conf": "bench_httpd.conf"}),
-    # no format given: the bind-time detection sampler, then the parse
-    ("log_scan_200k_autodetect", "bench_access.log", {}),
-]
-
-# Line-filter pushdown pairs: the SAME typed predicate timed pushed
-# (LineFilterableFrame.filter: derived needles below the regex, file
-# pruning) as "<prefix>_pushdown" and naive (plain DataFrame.filter:
-# parse everything, then filter) as "<prefix>_naive"; the pair is the
-# win. Pushdown is a selectivity play, not a constant factor: a
-# status == 500 filter (~1/6 of lines, cheap typed eval) ties with
-# naive. Key prefix, corpus, reader kwargs, predicate (built once the
-# session exists), session confs set for the pushed side only.
-PUSHDOWN_PAIRS = [
+    ("log_scan_2m_20pct_junk", "count", "bench_junk.log", COMBINED),
     # 16 monthly rotated files; 15/16 mtimes precede the bound, so the
     # pruned plan never opens them
-    ("log_scan_rotated_since", "rotated/*.log", COMBINED,
+    ("log_scan_rotated_since", "pair", "rotated/*.log", COMBINED,
      lambda: F.col("timestamp") >= "2024-04-01 00:00:00", None),
     # the needle-in-haystack shape (1/52 of lines, ~2.0x): the needle
     # prunes before the regex and the request decomposition. The reader
     # splits the request at '?', so "/search?q=x" would match 0 rows
-    ("log_scan_2m_path", "bench_big.log", COMBINED,
+    ("log_scan_2m_path", "pair", "bench_big.log", COMBINED,
      lambda: F.col("path") == "/api/v1/data", None),
     # 28 October days, one-day filter: 3 [dd/oct/2024 needles (UTC
     # margin 1), so ~3/28 of lines reach the regex
-    ("log_scan_2m_date", "bench_days.log", COMBINED,
+    ("log_scan_2m_date", "pair", "bench_days.log", COMBINED,
      lambda: F.to_date("timestamp") == "2024-10-15", None),
     # open-above range closed from the file's mtime (set just past the
     # last day): the 3-day tail derives full-day needles
-    ("log_scan_2m_since", "bench_days.log", COMBINED,
+    ("log_scan_2m_since", "pair", "bench_days.log", COMBINED,
      lambda: F.col("timestamp") >= "2024-10-26 00:00:00", None),
     # epoch-seconds %t: six 5-digit prefix needles skip the 9-field
     # regex on ~79% of lines (a 3-field format shows no win)
-    ("log_scan_2m_epoch", "bench_epoch.log", {"format_str": _EPOCH_FMT},
+    ("log_scan_2m_epoch", "pair", "bench_epoch.log", {"format_str": _EPOCH_FMT},
      lambda: F.to_date("timestamp") == "2024-10-15", None),
     # a per-server log_file predicate on a 16-file, 4M-line fleet: 15/16
     # of the corpus is never opened. Its own corpus, not the 800k one:
     # each pushed filter pays a fixed classify + re-plan cost (about
     # 0.1 s, pushdown.filter_s in perfbench's dashboard trace), so the
     # pair is measured where the scan dwarfs it
-    ("log_scan_16files_prune", "fleet/server*.log", COMBINED,
+    ("log_scan_16files_prune", "pair", "fleet/server*.log", COMBINED,
      lambda: F.col("log_file").like("%server03%"), None),
     # one file of 16 carries the 5xx rows: after the eager column-stats
     # pass (the warm-up pays it) the listing drops 15/16 files
-    ("log_scan_colstats", "colstats_fleet/*.log", COMBINED,
+    ("log_scan_colstats", "pair", "colstats_fleet/*.log", COMBINED,
      lambda: F.col("status") >= 500, {"spark.graft.pushdown.colStats": "eager"}),
     # ISO %Y-%m-%d layout: 3 full-date needles skip the regex on ~25/28
     # of lines (this once degraded to a bare-year needle matching all)
-    ("log_scan_2m_isodate", "bench_iso.log", {"format_str": _ISO_FMT},
+    ("log_scan_2m_isodate", "pair", "bench_iso.log", {"format_str": _ISO_FMT},
      lambda: F.to_date("timestamp") == "2024-10-15", None),
+    # gzip: unsplittable, one task, decode inline
+    ("log_scan_200k_gz", "count", "bench_access.log.gz", COMBINED),
+    # format resolved from an Apache config at bind time (sources/conf.py)
+    ("log_scan_200k_conf", "count", "bench_access.log", {"conf": "bench_httpd.conf"}),
+    # no format given: the bind-time detection sampler, then the parse
+    ("log_scan_200k_autodetect", "count", "bench_access.log", {}),
 ]
 
 # Entries re-measured 9x for a p25-p75 band (with the run's 10 most
@@ -409,11 +411,12 @@ CALIBRATION = {"py_sha256_s": _py_sha256, "jvm_range_sum_s": _jvm_range_sum}
 
 
 def axis_keys() -> list[str]:
-    """The log-scan board keys in board order, which predates the tables:
-    the write axis follows raw mode, the pushdown pairs the junk axis."""
-    single = [key for key, _, _ in SCAN_AXES]
-    pairs = [f"{p}_{side}" for p, *_ in PUSHDOWN_PAIRS for side in ("pushdown", "naive")]
-    return single[:4] + ["log_write_2m", single[4]] + pairs + single[5:]
+    """The log-axis board keys, in LOG_AXES order."""
+    return [
+        k
+        for key, kind, *_ in LOG_AXES
+        for k in ([f"{key}_pushdown", f"{key}_naive"] if kind == "pair" else [key])
+    ]
 
 
 def _release() -> None:
@@ -571,34 +574,32 @@ def _scan_fns(spark, td: str) -> dict:
         kw = {k: os.path.join(td, v) if k == "conf" else v for k, v in kwargs.items()}
         return read_httpd_log(spark, os.path.join(td, corpus), **kw)
 
-    fns = {
-        key: (lambda c=corpus, kw=kwargs: read(c, kw).count())
-        for key, corpus, kwargs in SCAN_AXES
-    }
-    for prefix, corpus, kwargs, pred_fn, confs in PUSHDOWN_PAIRS:
-        pred = pred_fn()
+    fns = {}
+    for key, kind, corpus, kwargs, *pair in LOG_AXES:
+        if kind == "count":
+            fns[key] = lambda c=corpus, kw=kwargs: read(c, kw).count()
+        elif kind == "write":
+            outs = (os.path.join(td, f"wout_{i}") for i in itertools.count())
+            fns[key] = lambda typed=read(corpus, kwargs), outs=outs: write_httpd_log(
+                typed, next(outs), format_type="combined", mode="overwrite"
+            )
+        else:
+            pred_fn, confs = pair
+            pred = pred_fn()
 
-        def pushed(c=corpus, kw=kwargs, pred=pred, confs=confs or {}):
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            try:
-                return read(c, kw).filter(pred).count()
-            finally:
-                for k in confs:
-                    spark.conf.unset(k)
+            def pushed(c=corpus, kw=kwargs, pred=pred, confs=confs or {}):
+                for k, v in confs.items():
+                    spark.conf.set(k, v)
+                try:
+                    return read(c, kw).filter(pred).count()
+                finally:
+                    for k in confs:
+                        spark.conf.unset(k)
 
-        def naive(c=corpus, kw=kwargs, pred=pred):
-            return super(LineFilterableFrame, read(c, kw)).filter(pred).count()
+            def naive(c=corpus, kw=kwargs, pred=pred):
+                return super(LineFilterableFrame, read(c, kw)).filter(pred).count()
 
-        fns[f"{prefix}_pushdown"], fns[f"{prefix}_naive"] = pushed, naive
-
-    # inverse-formatter sink: render the 2M-row typed frame back to
-    # combined-format text, one codegen'd concat projection + text write
-    typed_2m = read("bench_big.log", COMBINED)
-    outs = (os.path.join(td, f"wout_{i}") for i in itertools.count())
-    fns["log_write_2m"] = lambda: write_httpd_log(
-        typed_2m, next(outs), format_type="combined", mode="overwrite"
-    )
+            fns[f"{key}_pushdown"], fns[f"{key}_naive"] = pushed, naive
     return fns
 
 

@@ -5,28 +5,6 @@ Spark work."""
 
 import bench
 
-SCAN_KEYS = [
-    "log_scan_200k_combined",
-    "log_scan_16files_800k",
-    "log_scan_2m_single_file",
-    "log_scan_2m_raw",
-    "log_scan_2m_20pct_junk",
-    "log_scan_200k_gz",
-    "log_scan_200k_conf",
-    "log_scan_200k_autodetect",
-]
-
-PAIR_PREFIXES = [
-    "log_scan_rotated_since",
-    "log_scan_2m_path",
-    "log_scan_2m_date",
-    "log_scan_2m_since",
-    "log_scan_2m_epoch",
-    "log_scan_16files_prune",
-    "log_scan_colstats",
-    "log_scan_2m_isodate",
-]
-
 BOARD_ORDER = [
     "log_scan_200k_combined",
     "log_scan_16files_800k",
@@ -56,9 +34,7 @@ BOARD_ORDER = [
 ]
 
 
-def test_scan_axes_and_pairs():
-    assert [key for key, _, _ in bench.SCAN_AXES] == SCAN_KEYS
-    assert [row[0] for row in bench.PUSHDOWN_PAIRS] == PAIR_PREFIXES
+def test_log_axis_board_order():
     assert bench.axis_keys() == BOARD_ORDER
 
 

@@ -10,7 +10,7 @@ slowest ones) it
 and writes the medians and plan-shape counts to
 <out_dir>/profile_<tag>.json.
 
-Usage: python tools/profile.py <out_dir> <tag> [query ...]
+Usage: python tools/profile_queries.py <out_dir> <tag> [query ...]
   tag names the run, e.g. 'before' or 'after'.
 """
 
@@ -22,9 +22,7 @@ import json
 import os
 import sys
 
-# the repo root replaces this script's dir on the path: run as a script,
-# tools/profile.py would shadow the stdlib profile module cProfile imports
-sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import _timed  # noqa: E402
 
