@@ -419,24 +419,15 @@ def axis_keys() -> list[str]:
     ]
 
 
-def _release() -> None:
-    """Drop what earlier runs pinned, so a timed run does its own work:
-    Python garbage (whose collection lets the ContextCleaner reap
-    localCheckpoint RDDs) and every CacheManager (persist) entry, which
-    only unpersist or clearCache removes."""
-    from pyspark.sql import SparkSession
-
-    gc.collect()
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        spark.catalog.clearCache()
-
-
 def _timed(fn, runs: int = N_RUNS, *, warmup: bool = True, guard: bool = False,
            cap_s: float | None = None) -> tuple[float, list[float]]:
     """Time ``fn()``: one untimed warm-up (codegen, JIT, regex compile)
-    unless ``warmup`` is False, then ``runs`` timed calls, each after
-    _release(). Returns (median rounded to 0.1 ms, sorted run times).
+    unless ``warmup`` is False, then ``runs`` timed calls. Returns
+    (median rounded to 0.1 ms, sorted run times). Each call does its own
+    work: a registered query's pins are released when its result is
+    dropped (operators/pins.py), and a garbage collection before each
+    run lets the ContextCleaner reap label propagation's per-round
+    checkpoints.
 
     ``guard`` is the transient-host-spike guard: a genuinely slow call
     has median ~ min, while a window hit by a noise burst (this box
@@ -449,7 +440,7 @@ def _timed(fn, runs: int = N_RUNS, *, warmup: bool = True, guard: bool = False,
     def window() -> list[float]:
         out: list[float] = []
         for _ in range(runs):
-            _release()
+            gc.collect()
             t0 = time.perf_counter()
             fn()
             out.append(time.perf_counter() - t0)

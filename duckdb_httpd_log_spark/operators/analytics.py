@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from ..plans.portable import dlit, pexp, pln, pln_ratio, pln_stages, stage_subselects, with_stages
 from ..plans.registry import fround, register, table
 from .distrank import with_grouped_rank
+from .events import funnel_firsts
+from .pins import pin
 
 # Portable-transcendental snippets (plans/portable.py): spliced
 # verbatim into BOTH the oracle SQL and F.expr so neither engine's
@@ -70,14 +72,14 @@ GT_TOP_R = 15
 )
 def corpus_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # lazy checkpoint: tc (vocabulary-sized) feeds fof AND tot — without
+    # pinned: tc (vocabulary-sized) feeds fof AND tot — without
     # it each branch re-runs the full corpus explode+agg
     tc = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     fof = tc.groupBy(F.col("c").alias("r")).agg(F.count(F.lit(1)).alias("n_r"))
     tot = tc.agg(F.sum("c").alias("n_tokens"))
@@ -520,7 +522,7 @@ def drift_psi_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.range(0, PSI_MAX_BIN + 1).select(F.col("id").alias("bin"))
         )
     )
-    # lazy checkpoint: smoothed (n_sources x 13 rows) feeds ref AND the
+    # pinned: smoothed (n_sources x 13 rows) feeds ref AND the
     # comparison side — one scan chain instead of two
     smoothed = (
         spine.join(counts, ["source", "bin"], "left")
@@ -531,7 +533,7 @@ def drift_psi_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.coalesce("c", F.lit(0)) + 1).cast("long").alias("a"),
             (F.col("n") + F.lit(PSI_MAX_BIN + 1)).cast("long").alias("n1"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ref = smoothed.filter(F.col("source") == PSI_REF_SOURCE).select(
         "bin", F.col("a").alias("b"), F.col("n1").alias("n2")
@@ -587,13 +589,13 @@ RULES_TOP = 25
     "association rules: confidence and lift over top co-ordered part pairs",
 )
 def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # lazy checkpoint: the deduped (order, part) set feeds nb, ic, and
+    # pinned: the deduped (order, part) set feeds nb, ic, and
     # both pair-join sides — one scan + distinct instead of four
     li = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     nb = li.agg(F.count_distinct("l_orderkey").alias("n_baskets"))
     ic = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_item"))
@@ -690,49 +692,13 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "funnel conversion-latency distribution: exact discrete quantiles per stage",
 )
 def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.unix_micros("ts").alias("us")
-    )
     # r15 (guide §2.4/§5, r14-verdict item 1): v is read by c AND vc, c
     # by p, vc AND cp, and lat is read up to 3x by the two-phase rank
     # (bounds sample, counts pass, final join) — unpinned, each
     # reference re-derived its full events-scan join cascade (16
     # parquet scans in the pre-execution plan, collapsing only via
-    # AQE's runtime ReusedExchange rescue). Pinned via persist(), NOT
-    # localCheckpoint: the CacheManager substitutes every reference to
-    # the same canonical subtree with one InMemoryRelation (structural
-    # dedup, no AQE dependence), while a localCheckpoint here turned
-    # the frames into stats-less LogicalRDDs whose join estimates
-    # exploded (measured 250 PB for lat) and double-ran the query
-    # (interleaved A/B 1.0 -> 2.1 s; the persist form measures
-    # 0.63-0.74 s vs 1.0 s old). Retention: these are CacheManager
-    # entries, which outlive Python GC (only localCheckpoint RDDs are
-    # reaped by the ContextCleaner); they stay until unpersist() or
-    # spark.catalog.clearCache(), same contract as distrank's
-    # materialize.
-    from pyspark import StorageLevel
-
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("us").alias("v_us"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("us") >= F.col("v_us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("c_us"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c.select("user_id", "c_us"), "user_id")
-        .filter(F.col("us") >= F.col("c_us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("p_us"))
-    )
+    # AQE's runtime ReusedExchange rescue). funnel_firsts pins v and c.
+    v, c, p = funnel_firsts(spark, sf_dir)
     vc = (
         c.join(v, "user_id")
         .select(
@@ -747,7 +713,7 @@ def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("p_us") - F.col("c_us")).alias("lat_us"),
         )
     )
-    lat = vc.unionAll(cp).persist(StorageLevel.MEMORY_AND_DISK)
+    lat = vc.unionAll(cp).transform(pin)
     ranked = with_grouped_rank(
         spark, lat, ["stage"], [F.col("lat_us")], rn_col="rn", n_col="n"
     ).select("stage", "lat_us", "rn", "n")
@@ -907,7 +873,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q9 = fround(
         (F.col("x") - F.col("c")) * (F.col("x") - F.col("c")) * F.lit(1000000000.0)
     ).cast("long")
-    # lazy checkpoint: d (N x subs x codes distance rows) feeds the code
+    # pinned: d (N x subs x codes distance rows) feeds the code
     # assignment AND the query distance table — without it the
     # posexplode + centroid join runs twice
     d = (
@@ -915,7 +881,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "sub", "code", q9.alias("t9"))
         .groupBy("vec_id", "sub", "code")
         .agg(F.sum("t9").alias("q9"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rk_w = Window.partitionBy("vec_id", "sub").orderBy("q9", "code")
     assigned = (
@@ -1045,9 +1011,9 @@ def corpus_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     w4 = fround(
         F.col("tf") * F.expr(pln_ratio("n", "df")) * F.lit(10000.0)
     ).cast("long")
-    # lazy checkpoint: wts feeds norms and BOTH pair-join sides; without
-    # it the tokenize + two hash aggs re-run three times (12 parquet
-    # scans in the un-checkpointed plan). Materialize-once is what a
+    # pinned: wts feeds norms and BOTH pair-join sides; without it the
+    # tokenize + two hash aggs re-run three times (12 parquet scans in
+    # the unpinned plan). Materialize-once is what a
     # production pipeline would snapshot anyway.
     # r15 (guide §2.3/§2.4, r14-verdict item 5): materialize it
     # PRE-PARTITIONED on the term key — the a/b projections below then
@@ -1063,7 +1029,7 @@ def corpus_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_docs))
         .select("doc_id", "w", w4.alias("w4"))
         .repartition(F.col("w"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     norms = wts.groupBy("doc_id").agg(F.sum(F.col("w4") * F.col("w4")).alias("ss"))
     a = wts.select(F.col("doc_id").alias("doc_a"), "w", F.col("w4").alias("wa"))
@@ -1234,9 +1200,9 @@ def events_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         * F.lit(10000.0)
     ).cast("long")
-    # lazy checkpoint: the 5-row per-type table feeds both output
+    # pinned: the 5-row per-type table feeds both output
     # branches; without it the transition window re-runs for each
-    pertype = agg.select("cur", "n", h4.alias("h4")).localCheckpoint(eager=False)
+    pertype = agg.select("cur", "n", h4.alias("h4")).transform(pin)
     per_rows = pertype.select(
         F.col("cur").alias("from_type"),
         F.col("n").alias("n_transitions"),
@@ -1546,7 +1512,7 @@ def orders_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         spend.repartitionByRange(nparts, "period", "cents", "o_custkey")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # pin the partitioning for both passes
+        .transform(pin)  # pin the partitioning for both passes
     )
     pc = d.groupBy("period", "pid").agg(F.count(F.lit(1)).alias("c"))
     woff = Window.partitionBy("period").orderBy("pid").rowsBetween(
@@ -1568,10 +1534,10 @@ def orders_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "     THEN (rn - 1) div (n div 5 + 1) + 1"
         "     ELSE n % 5 + (rn - (n div 5 + 1) * (n % 5) - 1) div (n div 5) + 1 END"
     )
-    # lazy checkpoint: the classed table joins itself (early x late)
+    # pinned: the classed table joins itself (early x late)
     classed = (
         ranked.select("o_custkey", "period", tier.cast("int").alias("tier"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     e = classed.filter(F.col("period") == 0).select(
         "o_custkey", F.col("tier").alias("tier_early")
@@ -1712,7 +1678,7 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select(bucket.alias("bucket"), "label")
         .groupBy("bucket", "label")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # feeds agg AND the majority pick
+        .transform(pin)  # feeds agg AND the majority pick
     )
     cts = ct
     cts = with_stages(cts, _PC_STAGES)
@@ -1858,42 +1824,17 @@ def events_sla_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "funnel drop-off card: users per ordered stage, step and cumulative conversion",
 )
 def events_funnel_dropoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.unix_micros("ts").alias("us")
-    )
     # r15 (guide §2.4, same class as events_funnel_latency): v feeds c
     # AND counts, c feeds p AND counts, and the 1-row counts frame is
     # consumed by each of the 3 per-stage selects — unpinned, every
-    # reference re-derived the full events cascade. Pin the per-user
-    # frames and the 1-row counts card.
-    from pyspark import StorageLevel
-
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("us").alias("v_us"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("us") >= F.col("v_us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("c_us"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c.select("user_id", "c_us"), "user_id")
-        .filter(F.col("us") >= F.col("c_us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("p_us"))
-    )
+    # reference re-derived the full events cascade. funnel_firsts pins
+    # the per-user frames; the 1-row counts card is pinned here.
+    v, c, p = funnel_firsts(spark, sf_dir)
     counts = (
         v.agg(F.count(F.lit(1)).alias("n_view"))
         .crossJoin(c.agg(F.count(F.lit(1)).alias("n_click")))
         .crossJoin(p.agg(F.count(F.lit(1)).alias("n_purchase")))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rows = None
     for ordv, stage, cur, prev, first in [
@@ -1987,7 +1928,7 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         rev.repartitionByRange(nparts, F.col("cents").desc(), F.col("l_partkey"))
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = d.agg(F.sum("cents").alias("total"))
     ptot = d.groupBy("pid").agg(F.sum("cents").alias("ps"))
@@ -2097,9 +2038,8 @@ def emb_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mu = (F.col("s6").cast("double") / F.lit(1000000.0)) / F.col("n")
     var_ = (F.col("ss9").cast("double") / F.lit(1000000000.0)) / F.col("n") - mu * mu
-    prof = s.select("pos", "n", mu.alias("mu"), var_.alias("var_"), "mabs").localCheckpoint(
-        eager=False  # feeds the total-variance agg AND the output
-    )
+    # feeds the total-variance agg AND the output
+    prof = pin(s.select("pos", "n", mu.alias("mu"), var_.alias("var_"), "mabs"))
     tv = prof.agg(
         F.sum(fround(F.col("var_") * F.lit(1000000000.0)).cast("long")).alias("tot9")
     )
@@ -2342,9 +2282,8 @@ def dedup_cross_split_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textops import text_split_assign
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
-    splits = text_split_assign(spark, sf_dir).select("doc_id", "split").localCheckpoint(
-        eager=False  # joined twice (both pair endpoints)
-    )
+    # joined twice (both pair endpoints)
+    splits = pin(text_split_assign(spark, sf_dir).select("doc_id", "split"))
     sa = splits.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
     sb = splits.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
     j4 = fround(F.col("jaccard") * F.lit(10000.0)).cast("long")
@@ -2560,7 +2499,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ct = preds.groupBy("true_lang", "predicted").agg(
         F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False)  # feeds totals AND the output join
+    ).transform(pin)  # feeds totals AND the output join
     tot = ct.groupBy("true_lang").agg(F.sum("n").alias("n_true"))
     share = (
         fround(F.col("n").cast("double") * F.lit(1000000.0) / F.col("n_true")).cast("long")
@@ -3057,7 +2996,7 @@ def supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"), F.col("l_suppkey").alias("suppkey"))
         .agg(F.sum("cents0").alias("cents"))
-        .localCheckpoint(eager=False)  # feeds totals AND the share terms
+        .transform(pin)  # feeds totals AND the share terms
     )
     tot = rev.groupBy("brand").agg(
         F.sum("cents").alias("total"), F.count(F.lit(1)).alias("n_suppliers")
@@ -3244,9 +3183,7 @@ def emb_knn_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("nn_id"), F.col("label").alias("nn_label")
     )
-    joined = knn.join(F.broadcast(lab), "nn_id").localCheckpoint(
-        eager=False  # feeds the total AND the histogram
-    )
+    joined = pin(knn.join(F.broadcast(lab), "nn_id"))  # feeds the total AND the histogram
     tot = joined.agg(F.count(F.lit(1)).alias("n_total"))
     share = (
         fround(
@@ -3410,7 +3347,7 @@ def events_error_precursors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = seq.groupBy("prev").agg(
         F.count(F.lit(1)).alias("n_next"),
         F.sum(F.when(F.col("nxt") == "error", 1).otherwise(0)).cast("long").alias("n_err"),
-    ).localCheckpoint(eager=False)  # feeds the base rate AND the output
+    ).transform(pin)  # feeds the base rate AND the output
     base = tc.agg(F.sum("n_err").alias("tot_err"), F.sum("n_next").alias("tot"))
     rate = (
         fround(F.col("n_err").cast("double") * F.lit(1000000.0) / F.col("n_next")).cast("long")
@@ -3698,7 +3635,7 @@ def events_session_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ct = sess.groupBy("entry_type", "exit_type").agg(
         F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     tot = ct.agg(F.sum("n").alias("total"))
     share = (
         fround(F.col("n").cast("double") * F.lit(1000000.0) / F.col("total")).cast("long")
@@ -3889,7 +3826,7 @@ def size_outlier_stats(bt: DataFrame) -> DataFrame:
     """3-sigma payload-size fence over a (kind, b) DataFrame — factored
     out so the integer cross-multiplied inequality is unit-testable on a
     synthetic planted outlier (the fixture corpora have none)."""
-    bt = bt.localCheckpoint(eager=False)  # feeds the moment agg AND the outlier scan
+    bt = pin(bt)  # feeds the moment agg AND the outlier scan
     s = bt.groupBy("kind").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("b").alias("s1"),
@@ -4041,7 +3978,7 @@ def events_anomaly_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False)  # feeds the quartiles AND the output
+    ).transform(pin)  # feeds the quartiles AND the output
     wr = Window.orderBy("n", "d")
     ranked = daily.select(
         "n",
@@ -4505,7 +4442,7 @@ def text_token_len_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("token_len") > 0)
         .groupBy("token_len")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = ct.agg(F.sum("n").alias("total"))
     share = (
@@ -4677,7 +4614,7 @@ def orders_priority_mix_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = orders.groupBy(
         F.date_format(F.col("o_orderdate").cast("date"), "yyyy-MM").alias("month"),
         F.col("o_orderpriority").alias("pri"),
-    ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=False)
+    ).agg(F.count(F.lit(1)).alias("n")).transform(pin)
     tot = m.groupBy("month").agg(F.sum("n").alias("mn"))
     share = (
         fround(F.col("n").cast("double") * F.lit(1000000.0) / F.col("mn")).cast("long")
@@ -4787,7 +4724,7 @@ def events_value_log_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = (F.length(F.bin("cents")) - 1).cast("long")
     ct = v.select(bucket.alias("log2_bucket")).groupBy("log2_bucket").agg(
         F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     tot = ct.agg(F.sum("n").alias("total"))
     share = (
         fround(F.col("n").cast("double") * F.lit(1000000.0) / F.col("total")).cast("long")

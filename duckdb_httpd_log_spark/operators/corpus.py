@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..plans.portable import LN2, pln, pln_stages, stage_subselects, with_stages
 from ..plans.registry import fround, REGISTRY, register, share_expr, share_sql, table
+from .pins import pin
 
 # Portable-ln snippets (plans/portable.py) spliced verbatim into both
 # the oracle SQL and F.expr — no libm reaches a hashed output.
@@ -115,7 +116,7 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # iterations then run on the FREQUENCY-CAPPED vocabulary (<= 2000
 # rows — how production BPE trainers iterate too), each fetching ONE
 # model row to the driver and re-deriving the tiny state frame
-# (localCheckpoint per iteration keeps lineage flat).
+# (the state never grows a lineage: it lives on the driver).
 # ---------------------------------------------------------------------------
 BPE_TRAIN_MERGES = 6
 BPE_TRAIN_VOCAB = 2000
@@ -903,7 +904,7 @@ def emb_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows) by the matvec result, mu and the final select — unpinned,
     # Catalyst re-derives each subtree per reference (the
     # emb_pca_power_train fan-out in miniature). Pin both tiny frames.
-    m = raw.agg(F.max(F.abs("x0")).alias("m0")).localCheckpoint(eager=False)
+    m = raw.agg(F.max(F.abs("x0")).alias("m0")).transform(pin)
     vals = (
         raw.crossJoin(F.broadcast(m))
         .filter(F.col("m0") > 0)
@@ -925,7 +926,7 @@ def emb_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("pos", fround(F.col("x") * F.col("wv") * F.lit(1000000.0)).cast("long").alias("t6"))
         .groupBy("pos")
         .agg((F.sum("t6").cast("double") / F.lit(1000000.0)).alias("uv"))
-        .localCheckpoint(eager=False)  # DIM rows, read 3x
+        .transform(pin)  # DIM rows, read 3x
     )
     mu = u.agg(F.max(F.abs("uv")).alias("m1"))
     r2 = (F.col("uv") / F.col("m1")) * (F.col("uv") / F.col("m1"))
@@ -1197,8 +1198,8 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, cands = _dedup._minhash_docs_and_cands(spark, sf_dir)
-    # the exact ground truth re-derives from the helper's CHECKPOINTED
-    # per-doc gram sets (docs.gs holds the same DF-capped xxhash64 grams
+    # the exact ground truth re-derives from the helper's PINNED per-doc
+    # gram sets (docs.gs holds the same DF-capped xxhash64 grams
     # dedup_ngram_jaccard builds), so the corpus shingle pipeline runs
     # once for both sides instead of twice — measured 3.0 s -> ~2 s at
     # sf0.1 with identical output
@@ -1217,7 +1218,7 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared"))
     # r14 (guide §2.4): exact feeds BOTH ne and nh, cands feeds BOTH nc
     # and nh — unpinned, each reference re-ran the full gram self-join /
-    # band self-join from the checkpointed docs (34 Exchanges in the
+    # band self-join from the pinned docs (34 Exchanges in the
     # r13 executedPlan). Pin the two small pair frames so each pipeline
     # runs once.
     exact = (
@@ -1225,9 +1226,9 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(gb, "doc_b")
         .filter(jac >= _dedup.JACCARD_THRESHOLD)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
-    cands = cands.localCheckpoint(eager=False)
+    cands = pin(cands)
     ne = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     nc = cands.agg(F.count(F.lit(1)).alias("n_candidates"))
     nh = exact.join(cands, ["doc_a", "doc_b"]).agg(F.count(F.lit(1)).alias("n_hit"))
@@ -1365,9 +1366,7 @@ def emb_outlier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame (3 narrow columns, one row per vector — 64x smaller than
     # the exploded stream it derives from), exactly the
     # emb_pca_power_train pattern.
-    m = raw.agg(F.greatest(F.max(F.abs("x0")), F.lit(1e-300)).alias("m0")).localCheckpoint(
-        eager=False
-    )
+    m = raw.agg(F.greatest(F.max(F.abs("x0")), F.lit(1e-300)).alias("m0")).transform(pin)
     vals = raw.crossJoin(F.broadcast(m)).select(
         "vec_id", "label", "pos", (F.col("x0") / F.col("m0")).alias("x")
     )
@@ -1376,7 +1375,7 @@ def emb_outlier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.sum(fround(F.col("x") * m6).cast("long")).cast("double") / m6) / F.count(F.lit(1))).alias(
             "c"
         )
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     diff2 = (F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))
     d2 = (
         vals.join(F.broadcast(cen), ["label", "pos"])
@@ -1388,11 +1387,8 @@ def emb_outlier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "label")
         .agg((F.sum("q9").cast("double") / F.lit(1000000000.0)).alias("dist2"))
     )
-    from pyspark import StorageLevel
 
-    dist = d2.select("vec_id", "label", F.sqrt("dist2").alias("d")).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    dist = d2.select("vec_id", "label", F.sqrt("dist2").alias("d")).transform(pin)
     md = dist.groupBy("label").agg(
         ((F.sum(fround(F.col("d") * m6).cast("long")).cast("double") / m6) / F.count(F.lit(1))).alias(
             "mean_d"
@@ -1481,7 +1477,7 @@ def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # seg (the lead-window derivation) feeds the span totals AND the
         # weighted-term join; unpinned, the window ran twice
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     spans = seg.groupBy("event_type").agg(F.sum("gap_us").cast("long").alias("span_us"))
     term = fround(
@@ -1837,14 +1833,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("s"))
         .filter(F.col("s") >= TRIANGLE_MIN_SUPPORT)
         .select("va", "vb")
-        .localCheckpoint(eager=False)  # feeds deg + three join sides
+        .transform(pin)  # feeds deg + three join sides
     )
     deg = (
         edges.select(F.col("va").alias("v"))
         .unionAll(edges.select(F.col("vb").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)  # r14: feeds wedges AND n_vertices
+        .transform(pin)  # r14: feeds wedges AND n_vertices
     )
     wedges = deg.agg(
         F.sum((F.col("d") * (F.col("d") - 1) / 2)).cast("long").alias("n_wedges")
@@ -2209,14 +2205,14 @@ def emb_pca_power_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Catalyst does not de-duplicate the repeated subtrees — the r13
     # plan re-derived u1 ~9x through the nesting: 38 parquet scans /
     # 134 Exchanges in one executedPlan. Pinning the three tiny frames
-    # (lazy localCheckpoint, same pattern as vals) collapses the plan
-    # to the linear chain the algorithm actually is.
-    m = raw.agg(F.max(F.abs("x0")).alias("m0")).localCheckpoint(eager=False)
+    # (same pattern as vals) collapses the plan to the linear chain the
+    # algorithm actually is.
+    m = raw.agg(F.max(F.abs("x0")).alias("m0")).transform(pin)
     vals = (
         raw.crossJoin(F.broadcast(m))
         .filter(F.col("m0") > 0)
         .select("vec_id", "pos", (F.col("x0") / F.col("m0")).alias("x"))
-        .localCheckpoint(eager=False)  # feeds w1, u1, w2, u2
+        .transform(pin)  # feeds w1, u1, w2, u2
     )
     w1 = (
         emb.crossJoin(F.broadcast(m))
@@ -2253,7 +2249,7 @@ def emb_pca_power_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("nn")
         )
 
-    u1 = matvec(w1, 1000000.0).localCheckpoint(eager=False)  # DIM rows, read 3x
+    u1 = matvec(w1, 1000000.0).transform(pin)  # DIM rows, read 3x
     v1 = u1.crossJoin(F.broadcast(normed(u1))).select(
         "pos", (F.col("uv") / F.col("nn")).alias("v")
     )
@@ -2266,7 +2262,7 @@ def emb_pca_power_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg((F.sum("t9").cast("double") / F.lit(1000000000.0)).alias("wv"))
     )
-    u2 = matvec(w2, 1000000.0).localCheckpoint(eager=False)  # DIM rows, read 3x
+    u2 = matvec(w2, 1000000.0).transform(pin)  # DIM rows, read 3x
     nrm2 = normed(u2)
     return (
         u2.crossJoin(F.broadcast(nrm2))
@@ -3084,7 +3080,7 @@ def text_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("c").cast("long").alias("c_all"))
         .orderBy(F.col("c_all").desc(), "w")
         .limit(KL_VOCAB_K)
-        .localCheckpoint(eager=False)  # feeds nv + the per-source join
+        .transform(pin)  # feeds nv + the per-source join
     )
     nv = vocab.agg(
         F.count(F.lit(1)).alias("k"), F.sum("c_all").cast("long").alias("n_all")
@@ -3153,7 +3149,7 @@ DEDUP_CURVE_T20 = [8, 10, 12, 14, 16, 18]  # thresholds x20 (0.4 .. 0.9)
 )
 def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, _cands = _dedup._minhash_docs_and_cands(spark, sf_dir)
-    # reuse the checkpointed per-doc gram sets (same trick as
+    # reuse the pinned per-doc gram sets (same trick as
     # dedup_minhash_eval): one corpus shingle pipeline for the pair join
     grams = docs.select("doc_id", F.explode("gs").alias("gh"))
     a = grams.select(F.col("doc_id").alias("doc_a"), "gh")
@@ -3893,7 +3889,7 @@ def source_vocab_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rk") <= VOCABSIM_K)
         .select("source", "w")
-        .localCheckpoint(eager=False)  # feeds sizes + both join sides
+        .transform(pin)  # feeds sizes + both join sides
     )
     sizes = topv.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = topv.select(F.col("source").alias("source_a"), "w")
@@ -3992,12 +3988,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds the rungs frame that both point passes broadcast — unpinned,
     # each reference re-scanned and re-tokenized the corpus. Pinned,
     # the corpus is scanned twice total (docs_n once, firsts once).
-    from pyspark import StorageLevel
-
     docs_n = docs.select(
         "doc_id", F.size(F.split("text", " ")).alias("n_tok")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    mx = docs_n.agg(F.max("doc_id").alias("mx")).localCheckpoint(eager=False)
+    ).transform(pin)
+    mx = docs_n.agg(F.max("doc_id").alias("mx")).transform(pin)
     firsts = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")

@@ -24,12 +24,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.registry import fround, register, table
 from ..sources import exprs as X
+from .pins import pin
 from .similarity import _quantize_floor_form, hyperplanes
 
 # --- shared shingling parameters (MUST match the SQL oracles below) --------
@@ -88,9 +88,8 @@ def _hashed_capped_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engines' float-rounding agreement threshold; the oracle's
     cap-on-string is identical sans collisions). Multiple consumers
     (doc sizes + both sides of a pair join) carry alias renames that
-    defeat exchange reuse — the lazy serialized checkpoint runs the
-    explode pipeline once. Shared by dedup_ngram_jaccard and
-    dedup_text_knn."""
+    defeat exchange reuse — the pin runs the explode pipeline once.
+    Shared by dedup_ngram_jaccard and dedup_text_knn."""
     docs_t = table(spark, sf_dir, "documents")
     toks = docs_t.select("doc_id", F.split("text", " ").alias("t"))
     grams = toks.select(
@@ -105,9 +104,7 @@ def _hashed_capped_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gh"),
     ).distinct()
     hot = grams.groupBy("gh").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > DF_CAP)
-    return grams.join(F.broadcast(hot), "gh", "left_anti").localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    return grams.join(F.broadcast(hot), "gh", "left_anti").transform(pin)
 
 
 
@@ -221,7 +218,7 @@ _SQL_MINHASH_CANDS = f"""{_SQL_GRAMS},
 
 
 def _minhash_docs_and_cands(spark: SparkSession, sf_dir: str):
-    """The per-doc signature/gram-set table (lineage-checkpointed) and
+    """The per-doc signature/gram-set table (pinned) and
     the banded candidate pairs — shared by dedup_minhash_lsh and
     corpus.dedup_minhash_eval so both see the identical candidate set."""
     # Single groupBy computes all K min-hashes at once (K aggregate
@@ -241,9 +238,8 @@ def _minhash_docs_and_cands(spark: SparkSession, sf_dir: str):
     )
     # docs feeds three consumers (bands + both verify sides) whose alias
     # renames defeat Catalyst exchange reuse — without this the gram
-    # pipeline is scanned and shuffled 3x. localCheckpoint materializes
-    # it once, truncates lineage, and is GC'd with the DataFrame.
-    docs = docs.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    # pipeline is scanned and shuffled 3x. The pin materializes it once.
+    docs = pin(docs)
     # band identity as a 64-bit hash (the oracle's band_key md5 string is
     # only an equality key there too — identity, not content)
     band_keys = [
@@ -437,9 +433,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sigs feeds both sides of the band self-join; the alias renames
         # defeat exchange reuse, so without materialization the signature
         # UDF (full embedding scan) runs twice.
-        sigs = emb.select("vec_id", signature("embedding").alias("sig")).localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
+        sigs = emb.select("vec_id", signature("embedding").alias("sig")).transform(pin)
         band_keys = [
             F.concat(
                 F.lit(f"{b}:"),
@@ -471,7 +465,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         bands = emb.select(
             "vec_id", F.explode(band_keys_of("embedding")).alias("band_key")
-        ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        ).transform(pin)
     cands = (
         bands.select(F.col("vec_id").alias("vec_a"), "band_key")
         .join(bands.select(F.col("vec_id").alias("vec_b"), "band_key"), "band_key")
@@ -700,12 +694,12 @@ def label_propagation(pairs: DataFrame, a_col: str, b_col: str, id_out: str) -> 
         pairs.union(pairs.select(F.col(b_col).alias(a_col), F.col(a_col).alias(b_col)))
         .withColumnsRenamed({a_col: "a", b_col: "b"})
         .repartition(F.col("b"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .transform(pin)
     )
     labels = (
         edges.groupBy(F.col("a").alias(id_out))
         .agg(F.min(F.least(F.col("a"), F.col("b"))).alias("label"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # truncation: each round's plan starts here
     )
     prev_sum = labels.agg(F.sum("label")).first()[0]
     converged = False
@@ -720,7 +714,7 @@ def label_propagation(pairs: DataFrame, a_col: str, b_col: str, id_out: str) -> 
             labels.unionByName(nbr)
             .groupBy(id_out)
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)  # truncation: the plan must not grow per round
         )
         # monotone convergence metric: sum of labels strictly decreases
         # until fixpoint; this action also materializes the round's lazy
@@ -831,16 +825,13 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins raw grams; don't swap this hash for a narrower one).
     grams = _capped_grams(spark, sf_dir).select("doc_id", F.xxhash64("g").alias("gh"))
     # global total order: (document frequency asc, hash) — rare first.
-    # The lazy checkpoint cuts the plan: per_doc (window output) feeds
-    # both the prefix filter and the verify sets, and without a
-    # materialization barrier each branch would recompute the df-join
-    # from the scan (measured 3.4 s vs 2.8 s at sf0.1). Checkpointing
-    # here beats checkpointing per_doc — the (doc_id, gh, df) rows are
-    # the smaller payload.
+    # The pin cuts the plan: per_doc (window output) feeds both the
+    # prefix filter and the verify sets, and without a materialization
+    # barrier each branch would recompute the df-join from the scan
+    # (measured 3.4 s vs 2.8 s at sf0.1). Pinning here beats pinning
+    # per_doc — the (doc_id, gh, df) rows are the smaller payload.
     freq = grams.groupBy("gh").agg(F.count(F.lit(1)).alias("df"))
-    ranked = grams.join(freq, "gh").localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    ranked = grams.join(freq, "gh").transform(pin)
     from pyspark.sql import Window
 
     w = Window.partitionBy("doc_id").orderBy("df", "gh")
@@ -945,9 +936,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gh"),
     ).distinct()
     hot = grams.groupBy("gh").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > DF_CAP)
-    grams = grams.join(F.broadcast(hot), "gh", "left_anti").localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    grams = grams.join(F.broadcast(hot), "gh", "left_anti").transform(pin)
     gc = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     ga = gc.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     gb = gc.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))

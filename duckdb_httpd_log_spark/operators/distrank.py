@@ -46,6 +46,8 @@ from typing import List, Optional, Sequence, Tuple, Union
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .pins import pin
+
 OrderSpec = Union[Column, Tuple[Column, bool]]
 
 _SAMPLE_PER_PART = 128
@@ -276,18 +278,8 @@ def _two_phase(
         # heavy lineage a persist turns the double scan into one
         # (measured on a sha2-derived lineitem x orders lineage at
         # sf0.1: 4.09s -> 2.67s; plain parquet-scan input: 2.03s,
-        # where a persist would only add cost). RETENTION: both the
-        # counts pass and the final join consume the persisted input
-        # lazily, so there is no build-time point at which an eager
-        # unpersist is sound. The persist is a CacheManager entry: it
-        # outlives Python GC (the ContextCleaner reaps localCheckpoint
-        # RDDs, not cache entries) and stays until an unpersist() of
-        # the input's plan or spark.catalog.clearCache(). Long-lived
-        # sessions should clear it when done with the result, or
-        # recompute without materialize.
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        # where a persist would only add cost).
+        df = pin(df)
     nparts = max(spark.sparkContext.defaultParallelism, 1)
     order_pairs = _norm_order(order_cols)
     # bucket on (keys..., order...) like the old repartitionByRange:
@@ -363,9 +355,8 @@ def with_global_rank(
     ``materialize=True`` when the input lineage is expensive to
     recompute (joins / heavy derivations): the two-phase scan reads
     the input twice, and a persist then halves the work (see
-    _two_phase). The persisted blocks stay pinned while the returned
-    DataFrame's lineage is referenced — drop the reference (or avoid
-    materialize) in long-lived sessions to release executor storage.
+    _two_phase). The pin is released with the registered query's
+    result (operators/pins.py), or with ``df`` outside one.
     """
     return _two_phase(
         spark, df, [], order_cols, rn_col, n_col, cum_col, cum_src,

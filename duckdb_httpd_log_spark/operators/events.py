@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import fround, register, share_expr, share_sql, table
+from .pins import pin
 
 SESSION_GAP_MIN = 30  # minutes of inactivity ending a session
 _GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
@@ -126,6 +127,34 @@ def q16_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def funnel_firsts(spark: SparkSession, sf_dir: str):
+    """Per user: the first view (v_us), the first click at or after it
+    (c_us) and the first purchase at or after that (p_us), as three
+    (user_id, us) frames, shared by the funnel queries.
+
+    r15 (guide §2.4/§5): v feeds c AND the caller, c feeds p AND the
+    caller, so both are pinned (one InMemoryRelation per frame,
+    column-prunable on read, plan stats kept) and each reference reads
+    the materialized rows instead of re-deriving the events cascade. A
+    stats-less checkpoint here blocked q17's count-path column pruning
+    (+75% on the bench action, OPTIMIZATION_r15.md #3) and made
+    events_funnel_latency's join estimates explode (measured 250 PB)
+    and double-run the query (interleaved A/B 1.0 -> 2.1 s)."""
+    ev = table(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.unix_micros("ts").alias("us")
+    )
+
+    def first(event_type: str, col: str, after: DataFrame | None = None) -> DataFrame:
+        e = ev.filter(F.col("event_type") == event_type)
+        if after is not None:
+            e = e.join(after, "user_id").filter(F.col("us") >= F.col(after.columns[1]))
+        return e.groupBy("user_id").agg(F.min("us").alias(col))
+
+    v = pin(first("view", "v_us"))
+    c = pin(first("click", "c_us", v))
+    return v, c, first("purchase", "p_us", c)
+
+
 @register(
     "q17_funnel",
     """
@@ -157,50 +186,22 @@ def q16_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "view→click→purchase funnel: staged ordered-min aggregation per user",
 )
 def q17_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.unix_micros("ts").alias("us")
-    )
-    # r15 (guide §2.4/§5, same class as events_funnel_latency): v feeds
-    # c AND the final left-join spine, c feeds p AND the spine — pinned
-    # via persist() (CacheManager substitution: one InMemoryRelation
-    # per frame, column-prunable on read, original plan stats kept) so
-    # each reference reads the materialized rows instead of re-deriving
-    # the events cascade. localCheckpoint was measured here too: it
-    # blocked the count-path's column pruning and cost +75% on the
-    # bench action (counts in OPTIMIZATION_r15.md #3).
-    from pyspark import StorageLevel
-
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("us").alias("first_view_us"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("us") >= F.col("first_view_us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("first_click_us"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("us") >= F.col("first_click_us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("first_purchase_us"))
-    )
+    v, c, p = funnel_firsts(spark, sf_dir)
     stage = (
-        F.when(F.col("first_purchase_us").isNotNull(), 3)
-        .when(F.col("first_click_us").isNotNull(), 2)
+        F.when(F.col("p_us").isNotNull(), 3)
+        .when(F.col("c_us").isNotNull(), 2)
         .otherwise(1)
     )
     return (
         v.join(c, "user_id", "left")
         .join(p, "user_id", "left")
-        .select("user_id", "first_view_us", "first_click_us", "first_purchase_us")
-        .withColumn("stage", stage)
+        .select(
+            "user_id",
+            F.col("v_us").alias("first_view_us"),
+            F.col("c_us").alias("first_click_us"),
+            F.col("p_us").alias("first_purchase_us"),
+            stage.alias("stage"),
+        )
         .orderBy("user_id")
     )
 
@@ -374,7 +375,7 @@ def q29_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts feeds both the result and the offset-0 base; the filter
     # defeats exchange reuse, so materialize the (tiny, |cohorts|x8-row)
     # aggregate once instead of re-scanning events for each branch
-    counts = counts.localCheckpoint(eager=False)
+    counts = pin(counts)
     base = counts.filter(F.col("day_offset") == 0).select(
         "cohort_us", F.col("n_users").alias("base_users")
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import fround, register, share_expr, share_sql, table
+from .pins import pin
 
 
 # ---------------------------------------------------------------------------
@@ -932,7 +933,6 @@ def q35_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     "explicit GROUPING SETS: three independent groupings in one Expand pass",
 )
 def q36_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("q36_lineitem")
     return spark.sql(
         """
         SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
@@ -940,10 +940,11 @@ def q36_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS INT) AS grouping_id,
                count(*) AS n,
                CAST(sum(l_quantity) AS BIGINT) AS sum_qty
-        FROM q36_lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         ORDER BY grouping_id, returnflag, linestatus
-        """
+        """,
+        lineitem=table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1021,16 +1022,16 @@ def q37_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     "correlated scalar subquery, decorrelated by Catalyst into agg + join",
 )
 def q38_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("q38_orders")
     return spark.sql(
         """
         SELECT o.o_orderkey, o.o_custkey, floor((o.o_totalprice) * 1e2 + 0.5) / 1e2 AS total_price
-        FROM q38_orders o
+        FROM {orders} o
         WHERE o.o_totalprice > (
-            SELECT 2 * avg(o2.o_totalprice) FROM q38_orders o2 WHERE o2.o_custkey = o.o_custkey
+            SELECT 2 * avg(o2.o_totalprice) FROM {orders} o2 WHERE o2.o_custkey = o.o_custkey
         )
         ORDER BY o.o_orderkey
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -1128,7 +1129,7 @@ _TC_SQL = """
 
 _TC_REC_SQL = """
     WITH RECURSIVE reach(node, hops) AS (
-        SELECT '{seed}', 0
+        SELECT {seed}, 0
         UNION ALL
         SELECT e.dst, r.hops + 1
         FROM reach r JOIN {edges} e ON e.src = r.node
@@ -1170,10 +1171,11 @@ def q40_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         trans.crossJoin(F.broadcast(total))
         .filter(F.col("cnt") * 25 > F.col("n"))
         .select("src", "dst")
-        .localCheckpoint()  # eager: the recursive plan must not replay the derivation
+        # eager checkpoint, not pin: the recursive plan replays a pinned
+        # derivation every iteration (65 jobs vs 30 at sf0.1)
+        .localCheckpoint()
     )
-    edges.createOrReplaceTempView("__tc_edges")
-    return spark.sql(_TC_REC_SQL.format(edges="__tc_edges", seed=TC_SEED, max_hops=TC_MAX_HOPS))
+    return spark.sql(_TC_REC_SQL, edges=edges, seed=TC_SEED, max_hops=TC_MAX_HOPS)
 
 
 # ---------------------------------------------------------------------------
@@ -1634,7 +1636,7 @@ def q48_rank_distributions(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_col="n",
         # rk feeds the rank-3 pick AND the output join; unpinned, the
         # whole grouped rank (sort/shuffle) ran once per consumer
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     third = rk.filter(F.col("rk") == 3).select(
         "c_nationkey", F.col("c_acctbal").alias("third_bal")
     )
@@ -2125,7 +2127,7 @@ def q61_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consumers apply different filters before any exchange, so
         # Catalyst never inserts a ReusedExchange and the join runs
         # twice. Pin it once — at 100 TB this halves the dominant join.
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     om = ls.groupBy("okey").agg(
         F.count(F.lit(1)).alias("n_supps"),

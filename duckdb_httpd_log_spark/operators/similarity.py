@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import fround, register, share_expr, share_sql, table
+from .pins import pin
 
 N_QUERIES = 10  # vec_id < N_QUERIES are the query vectors
 TOP_K = 5
@@ -779,8 +780,6 @@ def _cell_means(assigned: DataFrame) -> DataFrame:
     "two full k-means iterations (assign + update, twice) — the training loop, oracle-checked",
 )
 def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     # Every training iteration re-assigns the FULL corpus (semantically
     # required: the oracle's a2 assigns under the updated centroids), so
     # without a pin each pass re-scans parquet and re-pays the Arrow
@@ -790,7 +789,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         table(spark, sf_dir, "embeddings")
         .select("embedding")
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .transform(pin)
     )
     cen = np.array(_centroids(spark, sf_dir), dtype=np.float64)
     cell_ids = np.arange(cen.shape[0], dtype=np.int32)
@@ -1254,10 +1253,8 @@ def emb_split_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # d is BOUNDED (|labels| x 2 x 64 rows) but feeds four branches
         # (gmax, the normalized means, both halves) — without this pin
         # every branch re-scans and re-aggregates the fact table (the
-        # unpinned plan read embeddings 8x). localCheckpoint, not
-        # persist: the CacheManager would leak the entry for the
-        # session (see distrank.py).
-        .localCheckpoint(eager=False)
+        # unpinned plan read embeddings 8x)
+        .transform(pin)
     )
     # Cosine is scale-invariant: normalize each half's mean vector by
     # its max |component| (exact max over 64 values) BEFORE the e6
@@ -1281,7 +1278,7 @@ def emb_split_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # mt is as bounded as d (|labels| x 2 x 64 rows) but feeds both
         # half-splits — pin so the d x g join runs once, not per half
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = mt.filter(F.col("h") == 0).select(
         "label", "dim", F.col("mn").alias("ma"), F.col("c").alias("ca")

@@ -9,12 +9,12 @@ computing the same formulas.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel as _StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.portable import LN2, pexp, pln, pln_ratio, pln_stages, stage_subselects, with_stages
 from ..plans.registry import fround, register, share_expr, share_sql, table
+from .pins import pin
 
 # Shared portable-transcendental snippets (see plans/portable.py): each
 # is ONE SQL string spliced verbatim into BOTH the oracle SQL and the
@@ -535,9 +535,9 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .sortWithinPartitions("doc_id")
         .withColumn("pid", F.spark_partition_id())
         # two consumers (per-partition totals + the cumsum pass) must see
-        # identical partitioning; checkpoint pins it and runs the range
+        # identical partitioning; the pin fixes it and runs the range
         # shuffle once
-        .localCheckpoint(eager=False, storageLevel=_StorageLevel.MEMORY_AND_DISK)
+        .transform(pin)
     )
     totals = {r.pid: r.s for r in d.groupBy("pid").agg(F.sum("n_tok").alias("s")).collect()}
     offsets, acc = {}, 0
@@ -1232,11 +1232,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it once so the corpus is read and tokenized one time instead of
     # three (composers text_ccnet_bucket / dedup_rate-style consumers
     # inherit the collapse).
-    from pyspark import StorageLevel
-
-    toks = docs.select("doc_id", F.split("text", " ").alias("t")).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    toks = docs.select("doc_id", F.split("text", " ").alias("t")).transform(pin)
     bg = toks.select(
         "doc_id",
         F.explode(
@@ -1632,7 +1628,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("g"),
-    ).localCheckpoint(eager=False)  # feeds the owner agg AND the join probe
+    ).transform(pin)  # feeds the owner agg AND the join probe
     first_owner = grams.groupBy("g").agg(F.min("doc_id").alias("owner"))
     per_doc = (
         grams.join(first_owner, "g")
@@ -1881,17 +1877,14 @@ def text_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = grams.select("doc_id", "pos", h.alias("h"))
     w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WSD_W - 1)
     # r15 (guide §2.4/§5): fps feeds THREE consumers (n_fp, docfreq,
-    # the shared join-back) — persist-pin it so the stride-1
-    # posexplode + md5 + winnowing-window pipeline runs once per call
-    # instead of per consumer (persist, not localCheckpoint: the
-    # columnar cache stays prunable and plan stats survive, so the
-    # shared_fp join-back keeps its broadcast — the q17/funnel lesson).
-    from pyspark import StorageLevel
-
+    # the shared join-back) — pin it so the stride-1 posexplode + md5 +
+    # winnowing-window pipeline runs once per call instead of per
+    # consumer (the columnar cache stays prunable and plan stats
+    # survive, so the shared_fp join-back keeps its broadcast).
     fps = (
         hashed.select("doc_id", F.min("h").over(w).alias("fp"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(pin)
     )
     # n_fp needs no second shuffle pass over docfreq: count per doc
     # straight off the distinct fingerprint set, then join back ONLY
@@ -2020,7 +2013,7 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # parquet scans and zero ReusedExchange (each consumer filters/
         # projects differently before its exchange). Same pattern as
         # dedup_embedding's materialized signature frame (dedup.py).
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     nfp = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
     shared = (
@@ -2032,7 +2025,7 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fa and fb are the SAME fps-x-shared join (only the output column
     # name differs) — derive both from one pinned frame so the df-cap
     # aggregate and the join run once, not twice (plan-reuse audit)
-    fj = fps.join(shared, "fp").localCheckpoint(eager=False)
+    fj = fps.join(shared, "fp").transform(pin)
     fa = fj.select("fp", F.col("doc_id").alias("doc_a"))
     fb = fj.select("fp", F.col("doc_id").alias("doc_b"))
     pairs = (
@@ -2332,7 +2325,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the chunk-hash derivation (posexplode + running-sum window +
         # collect_list md5) feeds n_chunks, shared AND dup — unpinned it
         # ran three times (plan-reuse audit r13)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     n_chunks = chunks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_chunks"))
     shared = (
@@ -2574,7 +2567,7 @@ def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("ct"),
         (F.count(F.lit(1)) + 1).cast("long").alias("cr"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     q = cnt.select(
         "tok",
         F.expr(_DSIR_LR_E6.format(lr=f"({pln('ct')} - {pln('cr')})")).alias("lr_e6"),

@@ -167,6 +167,10 @@ def register(
     name: str, oracle_sql: Optional[str], description: str = ""
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable[[SparkSession, str], DataFrame]]:
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        # imported here: the operators package imports this module
+        from ..operators.pins import owned
+
+        fn = owned(fn)  # the returned DataFrame owns the query's pins
         REGISTRY[name] = QueryDef(name=name, spark_fn=fn, oracle_sql=oracle_sql, description=description)
         return fn
 

@@ -6,7 +6,7 @@ These pin the three behaviors the r13 calibration established:
    a same-output Project on its own child under windows) is ONE
    execution — never a finding;
 2. a FAN-OUT of a Join/Window-bearing frame into divergent consumers IS
-   a finding — and pinning it with localCheckpoint clears it;
+   a finding — and pinning it clears it;
 3. identical copies that Catalyst rescues at runtime (ReusedExchange)
    are not reported.
 """
@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
 
+from duckdb_httpd_log_spark.operators import pins  # noqa: E402
 from tools.plan_reuse_audit import candidates, runtime_rescued  # noqa: E402
 
 
@@ -46,6 +47,7 @@ def test_window_chain_is_not_a_finding(spark, orders):
 
 
 def test_unpinned_join_fanout_flags_and_pin_clears(spark, orders, lineitem):
+    @pins.owned  # the returned frame owns the pin, as a registered query's does
     def build(pin: bool):
         j = (
             lineitem.select("l_orderkey", "l_quantity")
@@ -57,7 +59,7 @@ def test_unpinned_join_fanout_flags_and_pin_clears(spark, orders, lineitem):
             .agg(F.sum("l_quantity").alias("q"))
         )
         if pin:
-            j = j.localCheckpoint(eager=False)
+            j = pins.pin(j)
         hi = j.filter(F.col("q") > 100).select("o_custkey", F.col("q").alias("hi_q"))
         lo = j.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n")).select(
             F.col("o_custkey").alias("c2"), "n"
@@ -74,7 +76,7 @@ def test_unpinned_join_fanout_flags_and_pin_clears(spark, orders, lineitem):
     # its regression pin is test_fixed_registry_queries_stay_clean)
     rescued, counts = runtime_rescued(build(pin=False))
     assert rescued and counts.get("ReusedExchange", 0) >= 1
-    assert candidates(build(pin=True)) == []  # LogicalRDD hides the join
+    assert candidates(build(pin=True)) == []  # InMemoryRelation hides the join
 
 
 @pytest.mark.parametrize(

@@ -18,12 +18,17 @@ SF_DIR, and that one frame is held to every registry-wide contract.
    equals the Spark column's kind. Int widths may differ (int32 ``5``
    and int64 ``5`` canonicalize identically); int against float never.
 4. It runs: ``count()`` completes.
+5. It leaves nothing behind: once its result is dropped, the
+   CacheManager is empty (every pin went with the result) and the
+   session has no temp view the entry added.
 
-Each entry ends with ``spark.catalog.clearCache()``, so no entry reads
-a CacheManager entry that another one pinned.
+Each entry ends with ``spark.catalog.clearCache()``, so an entry that
+fails (5) does not hand its pins to the next one.
 """
 
 from __future__ import annotations
+
+import gc
 
 import duckdb
 import pytest
@@ -105,14 +110,45 @@ def _schema_violations(df, oracle_sql, duck) -> list[str]:
     return bad
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 @pytest.mark.parametrize("name", list(REGISTRY))
 def test_registry_entry(spark, duck, name):
     qd = REGISTRY[name]
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # whatever ran before this entry
+    views = _temp_views(spark)
     try:
         df = qd.spark_fn(spark, SF_DIR)
         assert df.columns, name
         bad = _schema_violations(df, qd.oracle_sql, duck)
         assert not bad, f"{name}: " + "; ".join(bad)
         assert df.count() >= 0, name
+        del df
+        gc.collect()
+        assert cache.isEmpty(), f"{name}: pins outlive the dropped result"
+        assert _temp_views(spark) <= views, f"{name}: temp views left behind"
     finally:
         spark.catalog.clearCache()
+
+
+def test_second_call_does_a_first_calls_work(spark):
+    """Each of these queries reads its pins several times. Dropping the
+    first result releases them, so a second call runs as many Spark jobs
+    as the first instead of reading the first call's leftovers."""
+    sc = spark.sparkContext
+    for name in ("events_funnel_latency", "q17_funnel", "text_winnow_dedup"):
+        jobs = []
+        for k in range(2):
+            group = f"second-call-{name}-{k}"
+            sc.setJobGroup(group, group)
+            try:
+                df = REGISTRY[name].spark_fn(spark, SF_DIR)
+                df.count()
+                del df
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert jobs[0] == jobs[1], f"{name}: {jobs[0]} jobs, then {jobs[1]}"

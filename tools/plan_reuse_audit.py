@@ -13,13 +13,13 @@ why it needs its own gate step.
 
 Two stages, because neither alone is sound:
 
-1. CANDIDATES from the ANALYZED logical plan (pre-pushdown, where the
-   fanned-out copies are still literally identical): every subtree
-   keyed by Catalyst's own ``semanticHash()``; a key seen >= 2 whose
-   subtree contains a Join / Window / Arrow-Python map is a candidate.
-   A ``localCheckpoint``-pinned frame appears as a LogicalRDD leaf, so
-   pinned frames never flag — the fix is also what turns the gate
-   green. Aggregate/Deduplicate-only duplicates are NOT candidates:
+1. CANDIDATES from the analyzed plan with cached data substituted
+   (``withCachedData``: pre-pushdown, where the fanned-out copies are
+   still literally identical): every subtree keyed by Catalyst's own
+   ``semanticHash()``; a key seen >= 2 whose subtree contains a Join /
+   Window / Arrow-Python map is a candidate. A pinned frame appears as
+   an InMemoryRelation leaf, so pinned frames never flag — the fix is
+   also what turns the gate green. Aggregate/Deduplicate-only duplicates are NOT candidates:
    the duplicate re-scans with its own (usually narrower) projection,
    frequently cheaper than materializing a pin, and identical copies
    are reliably rescued by exchange reuse anyway.
@@ -108,7 +108,7 @@ def candidates(df) -> list[dict]:
     semantically-identical Project on its own child (e.g.
     ExtractWindowExpressions), and a linear chain executes once — only
     FAN-OUT copies (neither an ancestor of the other) re-execute."""
-    plan = df._jdf.queryExecution().analyzed()
+    plan = df._jdf.queryExecution().withCachedData()
     acc: list = []
     _walk_logical(plan, acc, [0])
     by_hash: dict = {}
