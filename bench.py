@@ -313,11 +313,14 @@ _ISO_FMT = '%h %l %u %{%Y-%m-%d %H:%M:%S}t "%r" %>s %b "%{Referer}i" "%{User-Age
 #   "write"  write_httpd_log of the read frame
 #   "pair"   a line-filter pushdown pair: the SAME typed predicate
 #            timed pushed (LineFilterableFrame.filter: derived needles
-#            below the regex, file pruning) as "<key>_pushdown" and
-#            naive (plain DataFrame.filter: parse everything, then
-#            filter) as "<key>_naive"; the pair is the win. The row
-#            adds the predicate (built once the session exists) and the
-#            session confs set for the pushed side only.
+#            below the regex, the per-file range test) as
+#            "<key>_pushdown" and as a plain DataFrame.filter (no
+#            needles, no range test: parse every line of every file
+#            Spark opens) as "<key>_naive"; the pair is what the
+#            deriver adds. Spark's file index applies a log_file
+#            predicate to both sides. The row adds the predicate (built
+#            once the session exists) and the session confs set for the
+#            pushed side only.
 # Pushdown is a selectivity play, not a constant factor: a status ==
 # 500 filter (~1/6 of lines, cheap typed eval) ties with naive.
 LOG_AXES = [
@@ -358,11 +361,13 @@ LOG_AXES = [
     # regex on ~79% of lines (a 3-field format shows no win)
     ("log_scan_2m_epoch", "pair", "bench_epoch.log", {"format_str": _EPOCH_FMT},
      lambda: F.to_date("timestamp") == "2024-10-15", None),
-    # a per-server log_file predicate on a 16-file, 4M-line fleet: 15/16
-    # of the corpus is never opened. Its own corpus, not the 800k one:
-    # each pushed filter pays a fixed classify + re-plan cost (about
-    # 0.1 s, pushdown.filter_s in perfbench's dashboard trace), so the
-    # pair is measured where the scan dwarfs it
+    # a per-server log_file predicate on a 16-file, 4M-line fleet.
+    # log_file is _metadata.file_path, so Spark's file index prunes
+    # BOTH sides to 1 of the 16 files: the pair measures the pushed
+    # side's classify + re-plan overhead (about 0.1 s,
+    # pushdown.filter_s in perfbench's dashboard trace) against
+    # Spark's own pruning, on a corpus large enough that a regression
+    # in either prune would show
     ("log_scan_16files_prune", "pair", "fleet/server*.log", COMBINED,
      lambda: F.col("log_file").like("%server03%"), None),
     # one file of 16 carries the 5xx rows: after the eager column-stats

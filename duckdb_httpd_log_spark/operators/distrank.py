@@ -232,6 +232,14 @@ def _estimated_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
+def use_naive(df: DataFrame, conf_key: str) -> bool:
+    """The size-adaptive dispatch: True when ``df``'s estimated size is
+    at most the ``conf_key`` threshold (default 1 GiB). An unknown size
+    takes the scale path."""
+    thr = int(df.sparkSession.conf.get(conf_key, _DEFAULT_NAIVE_MAX))
+    return _estimated_bytes(df) <= thr
+
+
 def _naive_rank(
     df: DataFrame,
     keys: Sequence[str],
@@ -268,8 +276,7 @@ def _two_phase(
     cum_src: Optional[str],
     materialize: bool = False,
 ) -> DataFrame:
-    thr = int(spark.conf.get(NAIVE_MAX_BYTES_CONF, _DEFAULT_NAIVE_MAX))
-    if _estimated_bytes(df) <= thr:
+    if use_naive(df, NAIVE_MAX_BYTES_CONF):
         return _naive_rank(df, keys, order_cols, rn_col, n_col, cum_col, cum_src)
     if materialize:
         # EXPENSIVE-LINEAGE opt-in: the counts pass re-runs the input

@@ -33,25 +33,17 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .distrank import use_naive
+
 US_PER_DAY = 86_400_000_000
 
-# Size-adaptive dispatch, same contract as distrank's: below this
+# Size-adaptive dispatch, distrank's with its own conf key: below this
 # estimated input size the naive per-key window is the better plan
 # (slice machinery is pure overhead for a sub-GiB sort); above it the
 # sliced forms are the only plans that survive low-cardinality keys at
 # 100 TB. Unknown estimates route to the sliced path. Rehearsals and
 # plan pins force the scale path with the conf set to 0.
 NAIVE_MAX_BYTES_CONF = "spark.graft.timewin.naiveMaxBytes"
-_DEFAULT_NAIVE_MAX = str(1 << 30)
-
-
-def _use_naive(df: DataFrame) -> bool:
-    try:
-        thr = int(df.sparkSession.conf.get(NAIVE_MAX_BYTES_CONF, _DEFAULT_NAIVE_MAX))
-        size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return False
-    return size <= thr
 
 
 def with_next_us(
@@ -70,7 +62,7 @@ def with_next_us(
     same gaps attached to the later row's predecessor, so operators
     needing per-key inter-arrival gaps use this single helper.
     """
-    if _use_naive(df):
+    if use_naive(df, NAIVE_MAX_BYTES_CONF):
         w = Window.partitionBy(*keys).orderBy(us_col, tie_col)
         return df.withColumn(out_col, F.lead(us_col).over(w))
     key_cols = [F.col(k) for k in keys]
@@ -119,7 +111,7 @@ def sliced_range_frame(
     must see is either slice-local or a context copy.
     """
     assert slice_us >= lookback_us, "slice must cover the full lookback"
-    if _use_naive(df):
+    if use_naive(df, NAIVE_MAX_BYTES_CONF):
         # one all-covering slice: callers' (keys, __slice) window
         # degenerates to the plain per-key range window
         return df.withColumn("__slice", F.lit(0).cast("long")).withColumn(

@@ -7,7 +7,8 @@ Implemented with `df.observe()`: accumulator-style metrics collected on
 the executors during a normal action, zero extra passes over the data.
 Timings (time_file_io / time_regex in the reference) are Spark-UI /
 QueryExecutionListener territory rather than row metrics, so they are
-not replicated here.
+not replicated here. ``executed_plan`` lists the physical nodes a query
+runs, each cached subtree once.
 """
 
 from __future__ import annotations
@@ -40,3 +41,32 @@ def scan_metrics(logs: DataFrame) -> tuple[Observation, DataFrame]:
 
     obs = Observation("httpd_log_scan")
     return obs, logs.observe(obs, *metrics)
+
+
+def executed_plan(df: DataFrame) -> str:
+    """What executing ``df`` runs: one line per physical node, with each
+    pinned (cached) subtree listed once. ``executedPlan().toString()``
+    prints a pinned subtree under every reference to it, so counting
+    nodes there overstates what runs."""
+    jvm, lines, seen = df.sparkSession._jvm, [], set()
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if "QueryStage" in name:
+            return walk(node.plan())
+        lines.append(node.simpleString(25))
+        if name == "InMemoryTableScan":
+            rel = node.relation()
+            key = jvm.System.identityHashCode(rel.cacheBuilder())
+            if key not in seen:
+                seen.add(key)
+                walk(rel.cachedPlan())
+        for kids in (node.children(), node.subqueries()):
+            it = kids.iterator()
+            while it.hasNext():
+                walk(it.next())
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return "\n".join(lines)

@@ -31,20 +31,34 @@ Soundness per leaf:
   |v| ("0500" contains "500", "-0500" contains "500"). Literal 0 is
   skipped — the %b byte-count family maps "-" to 0 without a "0" in
   the raw line.
-- BOUNDED date/time predicates (to_date(ts) = D, ts BETWEEN a AND b,
-  to_date(ts) IN (...), and their string-coerced forms) on a plain
-  Apache-%t timestamp column: the raw text is deterministically
-  `[dd/MMM/yyyy:HH:mm:ss Z]` (reference
-  src/httpd_log_format_parser.cpp:711-765, bracketed regex :558), so
-  the bounded instant range maps to TWO groups: case-sensitive
-  ``[dd/`` day tokens (2-digit — strict dd: a 1-digit day never
-  parses) AND case-insensitive ``/mmm/yyyy:`` month needles (Spark's
-  MMM parse accepts any month case, so a fixed-case month would be
-  unsound). The range is widened by a day margin covering the line's
-  own UTC offset and the session zone, and capped at _MAX_DAY_NEEDLES
-  days; wider ranges fall back to parse-everything. Bounded
-  ``year(ts)`` predicates map to plain ``/yyyy:`` needles (digits
-  only — no case issue), +-1-year margin.
+- time predicates (``ts`` compared with a literal, BETWEEN, ``to_date(ts)
+  = D`` and ``IN``, their string-coerced forms, ``year(ts)`` ranges) on a
+  column with a ``TsLayout`` (``PushdownContext.ts_cols``). A BOUNDED
+  instant range is widened by a day margin covering the line's own UTC
+  offset and the session zone, then rendered through the layout:
+  - Apache ``%t``: the raw text is deterministically
+    `[dd/MMM/yyyy:HH:mm:ss Z]` (reference
+    src/httpd_log_format_parser.cpp:711-765, bracketed regex :558), so
+    a range of at most _MAX_DAY_NEEDLES days maps to TWO groups:
+    case-sensitive ``[dd/`` day tokens (2-digit — strict dd: a 1-digit
+    day never parses) AND case-insensitive ``/mmm/yyyy:`` month needles
+    (Spark's MMM parse accepts any month case, so a fixed-case month
+    would be unsound). Year needles are ``/yyyy:``.
+  - strftime with ``%Y``: the 4-digit year renders verbatim, so year
+    needles are the BARE digits (no layout punctuation is assumed).
+    When the format also has a contiguous date run (``%Y-%m-%d``,
+    ``%d/%b/%Y``), each in-range day renders through it verbatim: one
+    group of full-date needles, case-insensitive when it has a month
+    name.
+  - epoch (``%{sec}t``/``%{msec}t``/``%{usec}t``): the decimal epoch
+    value renders verbatim, so a bounded range pushes a digit-PREFIX
+    cover (every in-range token starts with one of <= _MAX_DAY_NEEDLES
+    prefixes; most-selective cover chosen; digit-count boundaries
+    bail). It renders no year digits.
+  A range too wide for day needles degrades to the year group (+-1 year
+  margin, at most 4 years) instead of falling back to parse-everything.
+  An ``IN`` unions its literals' groups position by position, with the
+  same cap and the same year-group retry.
 - OPEN-ABOVE ranges (``ts >= lo`` / ``year(ts) >= y`` — the "since X"
   filter) close their open end at filter time from the max
   modification time of a FRESH stat of the bind-time listing
@@ -55,17 +69,6 @@ Soundness per leaf:
   mtimes, so the streaming source takes no stat. Opt out with
   spark.graft.pushdown.mtimeBound=false for pathological corpora
   carrying future-dated lines (the one assumption this leans on).
-- bounded ranges too wide for day tokens (and mtime-closed ranges)
-  degrade to a coarser ``/yyyy:`` year-needle group instead of
-  falling back to parse-everything.
-- single strftime ``%t`` columns whose format contains ``%Y`` render
-  the 4-digit year verbatim, so bounded/mtime-closed time and year
-  predicates push BARE year-digit needles (no layout punctuation is
-  assumed) — day needles stay Apache-%t-only.
-- single epoch ``%t`` columns (``%{sec}t``/``%{msec}t``/``%{usec}t``)
-  render the decimal epoch value verbatim, so a bounded range pushes a
-  digit-PREFIX cover (every in-range token starts with one of <= 12
-  prefixes; most-selective cover chosen; digit-count boundaries bail).
 Conjunctions push every derivable conjunct and INTERSECT the time
 ranges split across their leaves; disjunctions push only if every
 branch is derivable (as an OR-of-needles group); anything else falls
@@ -92,6 +95,7 @@ motivated by its TODO-free single-pass design — the only way to beat
 from __future__ import annotations
 
 import datetime as _dt
+from collections import Counter
 from dataclasses import dataclass, field, replace
 from functools import reduce
 from typing import Callable, List, Optional, Tuple, Union
@@ -102,6 +106,7 @@ from pyspark.sql.classic.dataframe import DataFrame
 
 from . import fs as FS
 from .colstats import _disjoint, narrow, stats_for
+from .logformat import BIGINT, INTEGER, VARCHAR, ParsedFormat, TsFormat, _strftime_tokens
 
 # CNF: AND over groups, OR within a group. A needle is either a plain
 # string (case-sensitive Contains on the raw line) or ("ci", s) — a
@@ -124,19 +129,49 @@ _MONTHS = (
     "jul", "aug", "sep", "oct", "nov", "dec",
 )
 
-# widest OR-of-days group worth pushing: beyond this the byte scan's
-# selectivity (and its per-line cost) stops paying for itself
+# widest OR group of day (or epoch-prefix, or IN-union) needles worth
+# pushing: beyond this the byte scan's selectivity (and its per-line
+# cost) stops paying for itself
 _MAX_DAY_NEEDLES = 12
+
+
+@dataclass(frozen=True)
+class TsLayout:
+    """How the raw text of the ``%t`` field that sets a timestamp
+    column renders its instant. ``kind`` is one of:
+
+    - ``"apache"``: plain ``%t``, deterministically
+      ``[dd/MMM/yyyy:HH:mm:ss Z]``: day needles, ``/yyyy:`` year needles;
+    - ``"strftime"``: ``%{...}t`` whose format has a ``%Y`` token, so
+      the 4-digit year renders verbatim (bare year digits: no
+      surrounding punctuation is assumed). ``run`` is its contiguous
+      date-rendering token run (``%Y-%m-%d``, ``%d/%b/%Y``; strict
+      2-digit ``%m``/``%d``, so the zero-padded rendering is the only
+      raw text that parses), a tuple of ("lit", ch) / ("spec",
+      "Y"|"m"|"d"|"b") items, or None: each in-range day renders
+      through it verbatim, far more selective than the year digits;
+    - ``"epoch"``: ``%{sec|msec|usec}t``, the decimal epoch value in
+      units of ``unit_us`` µs: digit-PREFIX covers, no year digits.
+    """
+
+    kind: str
+    run: Optional[tuple] = None
+    unit_us: int = 1
+
+    @property
+    def year_token(self) -> Optional[str]:
+        """Template the 4-digit year renders through, or None."""
+        return {"apache": "/{}:", "strftime": "{}"}.get(self.kind)
 
 
 @dataclass
 class PushdownContext:
     """What the deriver may assume about the scan's columns.
 
-    ``ts_day_cols``: timestamp columns produced by a SINGLE plain
-    ``%t`` directive in the Apache default layout — their raw text is
-    deterministically ``[dd/MMM/yyyy:HH:mm:ss Z]``, so a bounded
-    time predicate maps to an OR-of-day substring group.
+    ``verbatim_str`` / ``verbatim_int``: columns whose typed value (or
+    its canonical digits) appears verbatim in the raw line.
+    ``ts_cols``: {column: TsLayout} for every timestamp column with a
+    known rendering; every time-needle decision reads its layout.
     ``margin_days``: slack added on each side of a derived day range.
     1 covers the log line's own UTC offset (<= +-14h) when the session
     time zone is UTC; 2 additionally covers a non-UTC session zone
@@ -145,26 +180,7 @@ class PushdownContext:
 
     verbatim_str: set = field(default_factory=set)
     verbatim_int: set = field(default_factory=set)
-    ts_day_cols: set = field(default_factory=set)
-    # single strftime-%t columns whose format contains %Y: the 4-digit
-    # year renders VERBATIM somewhere in the raw text, so bounded year
-    # sets map to bare year-digit needles (weaker than the anchored
-    # /yyyy: form — no surrounding punctuation can be assumed)
-    ts_year_cols: set = field(default_factory=set)
-    # single epoch-%t columns: name -> µs-per-rendered-unit (1e6 for
-    # %{sec}t, 1e3 for %{msec}t, 1 for %{usec}t). The raw token IS the
-    # decimal rendering of the epoch value, so a bounded range maps to
-    # a covering set of digit-PREFIX needles (every integer in the
-    # range starts with one of them)
-    ts_epoch_cols: dict = field(default_factory=dict)
-    # single strftime-%t columns whose format contains a CONTIGUOUS
-    # date-rendering token run (e.g. %Y-%m-%d or %d/%b/%Y — strict
-    # 2-digit %m/%d regexes, so the zero-padded rendering is the ONLY
-    # raw text that parses): name -> token run, a tuple of ("lit", ch)
-    # / ("spec", "Y"|"m"|"d"|"b") items. A bounded range renders each
-    # in-range day through the run VERBATIM — far more selective than
-    # the bare-year fallback (ts_year_cols) those columns also carry.
-    ts_date_cols: dict = field(default_factory=dict)
+    ts_cols: dict = field(default_factory=dict)
     margin_days: int = 2
     # Closes an OPEN-ABOVE time range (``ts >= lo``, the "since X"
     # filter): an upper-bound epoch-µs for any %t instant in the scanned
@@ -175,6 +191,87 @@ class PushdownContext:
     # Streams leave it None: future files arrive with later mtimes, so
     # no bound is sound there.
     hi_us: Optional[int] = None
+
+
+# epoch digit-prefix derivation only pays when the parse it skips is
+# expensive (r11 A/B: 9-field combined 0.84->0.67 s, 3-field no win —
+# the prefix Contains costs more than the short regex), so formats with
+# fewer capture groups skip it entirely
+EPOCH_MIN_FIELDS = 6
+
+_EPOCH_UNIT_US = {
+    TsFormat.EPOCH_SEC: 1_000_000,
+    TsFormat.EPOCH_MSEC: 1_000,
+    TsFormat.EPOCH_USEC: 1,
+}
+
+
+def _date_token_run(fmt: str) -> Optional[tuple]:
+    """Contiguous date-rendering token run of a strftime format, or None:
+    a maximal stretch of %Y/%m/%d/%b/%h specifiers and literal characters
+    that contains %Y, %d and a month token (``TsLayout.run``)."""
+    spec_map = {"%Y": "Y", "%m": "m", "%d": "d", "%b": "b", "%h": "b"}
+    run: list = []
+    for kind, tok in [*_strftime_tokens(fmt), ("end", "")]:
+        if kind == "lit" or (kind == "spec" and tok in spec_map):
+            run.append(("lit", tok) if kind == "lit" else ("spec", spec_map[tok]))
+            continue
+        specs = {t for k, t in run if k == "spec"}
+        if {"Y", "d"} <= specs and specs & {"m", "b"}:
+            return tuple(run)
+        run = []
+    return None
+
+
+def _is_base(f) -> bool:
+    """True for a %t field that sets its group's base instant."""
+    return f.timestamp_type == TsFormat.APACHE_DEFAULT or f.timestamp_type in _EPOCH_UNIT_US
+
+
+def _ts_layout(f, num_capture_groups: int) -> Optional[TsLayout]:
+    """Layout of the %t group head ``f``, or None when its rendering
+    gives no sound needle (or, for epoch, none that pays)."""
+    t = f.timestamp_type
+    if t == TsFormat.APACHE_DEFAULT:
+        return TsLayout("apache")
+    if t == TsFormat.STRFTIME:
+        # token walk, not substring: '%%Y' is a literal '%'+'Y', which
+        # renders no 4-digit year (bare-year needles would be UNSOUND)
+        if any(k == "spec" and s == "%Y" for k, s in _strftime_tokens(f.strftime_format)):
+            return TsLayout("strftime", run=_date_token_run(f.strftime_format))
+        return None
+    if t in _EPOCH_UNIT_US and num_capture_groups >= EPOCH_MIN_FIELDS:
+        return TsLayout("epoch", unit_us=_EPOCH_UNIT_US[t])
+    return None
+
+
+def pushdown_context(parsed: ParsedFormat, schema: list) -> PushdownContext:
+    """PushdownContext for a scan of ``parsed`` emitting ``schema``
+    (name, type) pairs, shared by the batch reader and the streaming
+    source: strings are regex captures emitted unchanged (excludes %X's
+    remapped close/keepalive/aborted values and log_file), ints are
+    digit tokens (try_cast). A timestamp column is its %t group's head
+    field (later fields of the group are skipped and combined into it,
+    exprs.timestamp_group_expr); it gets the head's layout unless
+    another field of the group renders the base instant (an Apache or
+    epoch field sets the value, so the head's text need not match it).
+    Strftime and fraction fields only add parts to the head's parse, so
+    the head's date or year text still renders the value's."""
+    non_verbatim = {f.column_name for f in parsed.fields if f.directive == "%X"} | {"log_file"}
+    ts_fields = [f for f in parsed.fields if f.directive == "%t"]
+    bases = Counter(f.timestamp_group_id for f in ts_fields if _is_base(f))
+    ts_cols = {}
+    for f in ts_fields:
+        if f.should_skip or bases[f.timestamp_group_id] > _is_base(f):
+            continue
+        layout = _ts_layout(f, parsed.num_capture_groups)
+        if layout is not None:
+            ts_cols[f.column_name] = layout
+    return PushdownContext(
+        verbatim_str={n for n, t in schema if t == VARCHAR and n not in non_verbatim},
+        verbatim_int={n for n, t in schema if t in (INTEGER, BIGINT)},
+        ts_cols=ts_cols,
+    )
 
 
 def _simple(e) -> str:
@@ -272,9 +369,16 @@ _CMP_OPS = {
 _FLIP = {"==": "==", ">=": "<=", "<=": ">="}
 
 
+def _bounds(op: str, flip: bool, lo, hi) -> tuple:
+    """(lo, hi) a comparison ``op`` (written attribute-first unless
+    ``flip``) against a literal spanning [lo, hi] requires; None = open."""
+    o = _FLIP[op] if flip else op
+    return (lo, hi) if o == "==" else (lo, None) if o == ">=" else (None, hi)
+
+
 def _ts_attr(e, ctx) -> Optional[Tuple[str, str]]:
     """(column name, semantic domain 'date'|'timestamp') when ``e`` is
-    a ts_day column under casts/to_date.
+    a ``ctx.ts_cols`` column under casts/to_date.
 
     A trailing cast TO STRING is skipped: Spark's type coercion turns
     ``to_date(ts) IN ('2024-10-08', ...)`` into a STRING comparison,
@@ -292,12 +396,8 @@ def _ts_attr(e, ctx) -> Optional[Tuple[str, str]]:
         except Exception:
             return None
         if s == "AttributeReference":
-            if dt == "timestamp" and (
-                cur.name() in ctx.ts_day_cols
-                or cur.name() in ctx.ts_year_cols
-                or cur.name() in ctx.ts_epoch_cols
-            ):
-                return cur.name(), domain or "timestamp"
+            if dt == "timestamp" and (name := cur.name()) in ctx.ts_cols:
+                return name, domain or "timestamp"
             return None
         if s in ("Cast", "AnsiCast", "TryCast"):
             if domain is None and dt in ("date", "timestamp"):
@@ -354,13 +454,12 @@ def _time_literal_interval(e, domain: str) -> Optional[Tuple[int, int]]:
 
 def _year_leaf(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Optional[int]]]:
     """(col, lo_year|None, hi_year|None) for a comparison node of class
-    ``cls`` and children ``kids`` on ``year(ts)`` — ``year()`` resolves
-    as Year(Cast(ts AS DATE)), and the raw %t text always carries the
-    4-digit year before the colon, so a bounded year range maps to an OR
-    group of ``/yyyy:`` needles (one per year, +-1 margin for
-    zone/offset boundary shifts)."""
+    ``cls`` and children ``kids`` on ``year(ts)`` of a column whose
+    layout renders the 4-digit year — ``year()`` resolves as
+    Year(Cast(ts AS DATE)); a bounded year range maps to the layout's
+    year group (_year_needles)."""
     op = _CMP_OPS.get(cls)
-    if op is None or not (ctx.ts_day_cols or ctx.ts_year_cols):
+    if op is None or not any(lay.year_token for lay in ctx.ts_cols.values()):
         return None
     l, r = kids
     for a, b, flip in ((l, r, False), (r, l, True)):
@@ -370,11 +469,10 @@ def _year_leaf(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Optional[in
         if _simple(au) != "Year":
             continue
         kids = _children(au)
-        if len(kids) != 1 or _attr_name(kids[0]) not in (
-            ctx.ts_day_cols | ctx.ts_year_cols
-        ):
+        name = _attr_name(kids[0]) if len(kids) == 1 else None
+        lay = ctx.ts_cols.get(name)
+        if lay is None or lay.year_token is None:
             continue
-        name = _attr_name(kids[0])
         val, dt = _literal(b)
         if val is None:
             return None
@@ -382,30 +480,29 @@ def _year_leaf(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Optional[in
             y = int(str(val))
         except (TypeError, ValueError):
             return None
-        o = _FLIP[op] if flip else op
-        if o == "==":
-            return name, y, y
-        if o == ">=":
-            return name, y, None
-        return name, None, y
+        return (name, *_bounds(op, flip, y, y))
     return None
 
 
-def _year_needles(lo: int, hi: int) -> Optional[List[Needle]]:
-    if lo > hi or hi - lo + 1 > 4:
+def _year_needles(layout: TsLayout, lo: int, hi: int) -> Optional[List[Needle]]:
+    """Year group for [lo, hi] (+-1 year of zone/offset slack, at most 4
+    years) rendered through the layout's year token: ``/yyyy:`` for
+    Apache %t, the bare digits for strftime %Y. Digits and punctuation
+    only, so a plain case-sensitive Contains; None for a layout that
+    renders no year."""
+    if layout.year_token is None or lo > hi or hi - lo + 1 > 4:
         return None
     if lo - 1 < 1000 or hi + 1 > 9998:
         return None  # 4-digit years only; don't bet on padding
-    # digits + punctuation only: a plain case-sensitive Contains
-    return [f"/{y}:" for y in range(lo - 1, hi + 2)]
+    return [layout.year_token.format(y) for y in range(lo - 1, hi + 2)]
 
 
 def _ts_leaf_interval(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Optional[int]]]:
     """(col, lo_us|None, hi_us|None) for a comparison node of class
-    ``cls`` and children ``kids`` on a ts_day / ts_year / ts_epoch
-    column; open ends are None."""
+    ``cls`` and children ``kids`` on a ``ctx.ts_cols`` column; open ends
+    are None."""
     op = _CMP_OPS.get(cls)
-    if op is None or not (ctx.ts_day_cols or ctx.ts_year_cols or ctx.ts_epoch_cols):
+    if op is None or not ctx.ts_cols:
         return None
     l, r = kids
     for a, b, flip in ((l, r, False), (r, l, True)):
@@ -414,15 +511,8 @@ def _ts_leaf_interval(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Opti
             continue
         name, domain = side
         iv = _time_literal_interval(b, domain)
-        if iv is None:
-            continue
-        lo_v, hi_v = iv
-        o = _FLIP[op] if flip else op
-        if o == "==":
-            return name, lo_v, hi_v
-        if o == ">=":
-            return name, lo_v, None
-        return name, None, hi_v
+        if iv is not None:
+            return (name, *_bounds(op, flip, *iv))
     return None
 
 
@@ -435,49 +525,32 @@ def _day_cnf(lo_us: int, hi_us: int, margin: int) -> Optional[Needles]:
     RLike group is usually a single month. Cross-product over-approx
     (day 14 of an adjacent in-set month also passes) is sound — the
     typed predicate on top removes byte-scan false positives."""
+    days = _days(lo_us, hi_us, margin)
+    if days is None:
+        return None
+    return [
+        sorted({f"[{d.day:02d}/" for d in days}),
+        sorted({("ci", f"/{_MONTHS[d.month - 1]}/{d.year}:") for d in days}),
+    ]
+
+
+def _days(lo_us: int, hi_us: int, margin: int) -> Optional[List[_dt.date]]:
+    """The calendar days of [lo_us, hi_us] widened by ``margin`` days on
+    each side, or None when the range is contradictory (fall back: the
+    plan stays exact), wider than _MAX_DAY_NEEDLES days, or outside
+    4-digit years (%t and %Y render 4 digits; don't bet on padding)."""
     if lo_us > hi_us:
-        return None  # contradictory range: fall back, plan stays exact
+        return None
     lo_day = lo_us // _US_PER_DAY - margin
     hi_day = hi_us // _US_PER_DAY + margin
     if hi_day - lo_day + 1 > _MAX_DAY_NEEDLES:
         return None
     epoch = _dt.date(1970, 1, 1)
-    days: set = set()
-    months: set = set()
     try:
-        for day in range(lo_day, hi_day + 1):
-            d = epoch + _dt.timedelta(days=day)
-            if d.year < 1000:
-                return None  # %t years are 4-digit; don't bet on padding
-            days.add(f"[{d.day:02d}/")
-            months.add(("ci", f"/{_MONTHS[d.month - 1]}/{d.year}:"))
+        days = [epoch + _dt.timedelta(days=day) for day in range(lo_day, hi_day + 1)]
     except OverflowError:
         return None
-    return [sorted(days), sorted(months)]
-
-
-def _bare_year_needles(lo: int, hi: int) -> Optional[List[Needle]]:
-    """Year needles for strftime-%Y columns: the bare 4-digit strings
-    (plain case-sensitive Contains) — no surrounding punctuation can be
-    assumed about the layout, so weaker than /yyyy: but still sound
-    (the %Y render IS those digits). Same +-1 margin and 4-year cap as
-    _year_needles."""
-    if lo > hi or hi - lo + 1 > 4:
-        return None
-    if lo - 1 < 1000 or hi + 1 > 9998:
-        return None
-    return [str(y) for y in range(lo - 1, hi + 2)]
-
-
-def _render_years(name: str, ctx: "PushdownContext", lo: int, hi: int) -> Optional[List[Needle]]:
-    if name in ctx.ts_day_cols:
-        return _year_needles(lo, hi)
-    if name in ctx.ts_year_cols:
-        return _bare_year_needles(lo, hi)
-    return None  # epoch columns carry no year digits
-
-
-_MAX_EPOCH_NEEDLES = 12
+    return days if days[0].year >= 1000 else None
 
 
 def _epoch_prefix_needles(
@@ -486,7 +559,7 @@ def _epoch_prefix_needles(
     """Digit-prefix cover of a bounded epoch range: the raw token is
     the decimal epoch value, so every in-range token starts with one of
     the returned prefixes. Picks the LONGEST prefix length whose cover
-    stays within _MAX_EPOCH_NEEDLES (longest = most selective); bails
+    stays within _MAX_DAY_NEEDLES (longest = most selective); bails
     on negative values or a digit-count boundary inside the range
     (999999999 -> 1000000000), where no fixed-length prefix set is
     sound."""
@@ -503,7 +576,7 @@ def _epoch_prefix_needles(
     for cut in range(0, d):  # cut = digits dropped from the right
         div = 10 ** cut
         n = hi_t // div - lo_t // div + 1
-        if n <= _MAX_EPOCH_NEEDLES:
+        if n <= _MAX_DAY_NEEDLES:
             if d - cut <= 4:
                 # a <=4-digit prefix matches far too much of any line
                 # (status codes, bytes, ports) to pay for the byte scan
@@ -525,44 +598,21 @@ def _date_run_needles(
     must contain D's zero-padded rendering as a substring. Month-name
     runs (%b/%h — Spark's MMM parse is case-insensitive) emit one ci
     group; all-digit runs emit plain case-sensitive Contains needles."""
-    if lo_us > hi_us:
-        return None
-    lo_day = lo_us // _US_PER_DAY - margin
-    hi_day = hi_us // _US_PER_DAY + margin
-    if hi_day - lo_day + 1 > _MAX_DAY_NEEDLES:
+    days = _days(lo_us, hi_us, margin)
+    if days is None:
         return None
     has_month_name = any(k == "spec" and t == "b" for k, t in run)
-    epoch = _dt.date(1970, 1, 1)
     out: set = set()
-    try:
-        for day in range(lo_day, hi_day + 1):
-            d = epoch + _dt.timedelta(days=day)
-            if not (1000 <= d.year <= 9999):
-                return None  # %Y is \d{4}: don't bet outside 4-digit years
-            parts = []
-            for k, t in run:
-                if k == "lit":
-                    parts.append(t)
-                elif t == "Y":
-                    parts.append(f"{d.year:04d}")
-                elif t == "m":
-                    parts.append(f"{d.month:02d}")
-                elif t == "d":
-                    parts.append(f"{d.day:02d}")
-                else:  # month abbreviation (%b/%h)
-                    parts.append(_MONTHS[d.month - 1])
-            s = "".join(parts)
-            out.add(("ci", s.lower()) if has_month_name else s)
-    except OverflowError:
-        return None
+    for d in days:
+        spec = {"Y": f"{d.year:04d}", "m": f"{d.month:02d}", "d": f"{d.day:02d}", "b": _MONTHS[d.month - 1]}
+        s = "".join(t if k == "lit" else spec[t] for k, t in run)
+        out.add(("ci", s.lower()) if has_month_name else s)
     return [sorted(out)]
 
 
-def _year_group_from_us(
-    name: str, lo_us: int, hi_us: int, ctx: "PushdownContext"
-) -> Optional[List[Needle]]:
+def _year_cnf(layout: TsLayout, lo_us: int, hi_us: int, margin: int) -> Optional[Needles]:
     """Fallback when a bounded range is too wide for day needles (or
-    the column is strftime-%Y): the year group spanning [lo, hi]
+    the layout renders no full date): the year group spanning [lo, hi]
     (+margin days each side; the renderer adds a further +-1 year of
     zone/skew slack). Much coarser than day tokens but still skips
     whole off-year files."""
@@ -570,11 +620,12 @@ def _year_group_from_us(
         return None
     epoch = _dt.date(1970, 1, 1)
     try:
-        ylo = (epoch + _dt.timedelta(days=lo_us // _US_PER_DAY - ctx.margin_days)).year
-        yhi = (epoch + _dt.timedelta(days=hi_us // _US_PER_DAY + ctx.margin_days)).year
+        ylo = (epoch + _dt.timedelta(days=lo_us // _US_PER_DAY - margin)).year
+        yhi = (epoch + _dt.timedelta(days=hi_us // _US_PER_DAY + margin)).year
     except OverflowError:
         return None
-    return _render_years(name, ctx, ylo, yhi)
+    yg = _year_needles(layout, ylo, yhi)
+    return [yg] if yg else None
 
 
 def _bounded_time_groups(
@@ -582,30 +633,50 @@ def _bounded_time_groups(
 ) -> Optional[Needles]:
     """CNF groups for a time interval on column ``name``, closing an
     open-above end from the file listing's mtime bound (ctx.hi_us)
-    when available. Apache-%t columns get day needles when the range
-    is narrow enough and /yyyy: year needles otherwise; strftime-%Y
-    columns get bare year-digit needles only (no layout assumed)."""
+    when available: an epoch layout's prefix cover; else the layout's
+    day needles (Apache day tokens, a strftime date run) when the range
+    is narrow enough, and its year group otherwise."""
     if lo_us is not None and hi_us is None:
         hi_us = ctx.hi_us
     if lo_us is None or hi_us is None:
         return None  # open-below (or unclosable) range: no sound needle
-    if name in ctx.ts_epoch_cols:
-        g = _epoch_prefix_needles(
-            lo_us, hi_us, ctx.ts_epoch_cols[name], ctx.margin_days
-        )
+    layout, margin = ctx.ts_cols[name], ctx.margin_days
+    if layout.kind == "epoch":
+        g = _epoch_prefix_needles(lo_us, hi_us, layout.unit_us, margin)
         return [g] if g else None
-    if name in ctx.ts_day_cols:
-        g = _day_cnf(lo_us, hi_us, ctx.margin_days)
-        if g:
-            return g
-    if name in ctx.ts_date_cols:
-        # strftime layout rendering a full date: day-level needles
-        # (falls through to the bare-year group when the range is wide)
-        g = _date_run_needles(ctx.ts_date_cols[name], lo_us, hi_us, ctx.margin_days)
-        if g:
-            return g
-    yg = _year_group_from_us(name, lo_us, hi_us, ctx)
-    return [yg] if yg else None
+    if layout.kind == "apache":
+        g = _day_cnf(lo_us, hi_us, margin)
+    else:
+        g = layout.run and _date_run_needles(layout.run, lo_us, hi_us, margin)
+    if g:
+        return g
+    return _year_cnf(layout, lo_us, hi_us, margin)
+
+
+def _time_in_groups(name: str, domain: str, lits: list, ctx: "PushdownContext") -> Optional[Needles]:
+    """Needles of ``to_date(ts) IN (d1, d2, ...)`` (any IN on a
+    ``ctx.ts_cols`` column): each literal's interval renders through
+    _bounded_time_groups, and the groups union position by position.
+    Sound: each position's union covers that position's group of every
+    literal, so a row satisfying any one literal passes every union (a
+    cross-product over-approximation of the OR; the typed filter on top
+    removes the extras). When a literal renders nothing, the literals
+    render different group shapes, or the first (day / prefix) union is
+    over _MAX_DAY_NEEDLES, it retries with each literal's year group."""
+    ivls = [_time_literal_interval(lit, domain) for lit in lits]
+    if not ivls or None in ivls:
+        return None
+    layout, margin = ctx.ts_cols[name], ctx.margin_days
+    for render in (
+        lambda lo, hi: _bounded_time_groups(name, lo, hi, ctx),
+        lambda lo, hi: _year_cnf(layout, lo, hi, margin),
+    ):
+        per = [render(lo, hi) for lo, hi in ivls]
+        if all(per) and len({len(g) for g in per}) == 1:
+            union = [sorted(set().union(*groups)) for groups in zip(*per)]
+            if len(union[0]) <= _MAX_DAY_NEEDLES:
+                return union
+    return None
 
 
 def _close_year_hi(ctx: "PushdownContext") -> Optional[int]:
@@ -680,12 +751,7 @@ def _int_leaf(cls, kids, ctx) -> Optional[Tuple[str, Optional[int], Optional[int
         if val is None or dt not in _INT_TYPES:
             continue
         v = int(str(val))
-        o = _FLIP[op] if flip else op
-        if o == "==":
-            return name, v, v
-        if o == ">=":
-            return name, v + strict, None
-        return name, None, v - strict
+        return (name, *_bounds(op, flip, v + strict, v - strict))
     return None
 
 
@@ -723,78 +789,7 @@ def _leaf_needles(e, cls, kids, ctx: PushdownContext) -> Optional[Needles]:
     if cls == "In":
         side = _ts_attr(kids[0], ctx)
         if side is not None:
-            # to_date(ts) IN (d1, d2, ...): union each literal's day
-            # and month-year tokens (cross-product over-approximation
-            # of the OR — sound, the typed filter removes extras)
-            name, domain = side
-            if name in ctx.ts_epoch_cols:
-                # union each literal's prefix cover into ONE OR group
-                toks: set = set()
-                for lit in kids[1:]:
-                    ivl = _time_literal_interval(lit, domain)
-                    if ivl is None:
-                        return None
-                    g = _epoch_prefix_needles(
-                        ivl[0], ivl[1], ctx.ts_epoch_cols[name], ctx.margin_days
-                    )
-                    if g is None:
-                        return None
-                    toks.update(g)
-                if not toks or len(toks) > _MAX_EPOCH_NEEDLES:
-                    return None
-                return [sorted(toks)]
-            if name in ctx.ts_date_cols:
-                # full-date-rendering strftime column: union each
-                # literal's day needles into ONE OR group, same cap as
-                # the Apache-day branch; any literal too wide for day
-                # needles falls through to the coarser bare-year union
-                toks = set()
-                for lit in kids[1:]:
-                    ivl = _time_literal_interval(lit, domain)
-                    if ivl is None:
-                        toks = None
-                        break
-                    g = _date_run_needles(
-                        ctx.ts_date_cols[name], ivl[0], ivl[1], ctx.margin_days
-                    )
-                    if g is None:
-                        toks = None
-                        break
-                    toks.update(g[0])
-                if toks and len(toks) <= _MAX_DAY_NEEDLES:
-                    return [sorted(toks)]
-                # fall through to the bare-year union below
-            if name in ctx.ts_year_cols:
-                # strftime-%Y column: union the bare-year needles,
-                # capped like the sibling day/epoch branches — a
-                # many-year IN list would otherwise push an arbitrarily
-                # wide OR-of-Contains that costs more than the parse
-                yrs: set = set()
-                for lit in kids[1:]:
-                    ivl = _time_literal_interval(lit, domain)
-                    if ivl is None:
-                        return None
-                    g = _year_group_from_us(name, ivl[0], ivl[1], ctx)
-                    if g is None:
-                        return None
-                    yrs.update(g)
-                if not yrs or len(yrs) > _MAX_DAY_NEEDLES:
-                    return None
-                return [sorted(yrs)]
-            day_toks: set = set()
-            month_toks: set = set()
-            for lit in kids[1:]:
-                ivl = _time_literal_interval(lit, domain)
-                if ivl is None:
-                    return None
-                g = _day_cnf(ivl[0], ivl[1], ctx.margin_days)
-                if g is None:
-                    return None
-                day_toks.update(g[0])
-                month_toks.update(g[1])
-            if not day_toks or len(day_toks) > _MAX_DAY_NEEDLES:
-                return None
-            return [sorted(day_toks), sorted(month_toks)]
+            return _time_in_groups(*side, kids[1:], ctx)
         name = _attr_name(kids[0])
         if name is None:
             return None
@@ -883,7 +878,7 @@ class Conjuncts:
             if lo is not None and hi is None:
                 hi = _close_year_hi(ctx)
             if lo is not None and hi is not None:
-                g = _render_years(name, ctx, lo, hi)
+                g = _year_needles(ctx.ts_cols[name], lo, hi)
                 if g:
                     groups.append(g)
         return groups or None

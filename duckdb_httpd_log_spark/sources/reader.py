@@ -56,7 +56,7 @@ from .logformat import (
     generate_schema,
     parse_format_string,
 )
-from .pushdown import LineFilterableFrame, cnf_predicate
+from .pushdown import LineFilterableFrame, cnf_predicate, pushdown_context
 
 PathLike = Union[str, Sequence[str]]
 
@@ -651,146 +651,6 @@ def read_httpd_log(
         colstats_fp=_hashlib.md5(
             f"{parsed.regex_pattern}\x00{line_filter or ''}".encode()
         ).hexdigest(),
-    )
-
-
-def _date_token_run(fmt: str):
-    """Contiguous date-rendering token run of a strftime format, or None.
-
-    A run is a maximal stretch of %Y/%m/%d/%b/%h specifiers and literal
-    characters that contains %Y, %d, and a month token — e.g. the
-    ``%Y-%m-%d`` of ``%Y-%m-%d %H:%M:%S`` or the ``%d/%b/%Y`` of an
-    ISO-ish access layout. Those specifiers parse through STRICT-width
-    regexes (\\d{4} / \\d{2} / [A-Za-z]{3}), so for a given calendar day
-    the run's rendering is the unique raw text that parses — the basis
-    of sources/pushdown.py's full-date needles. Returned as a tuple of
-    ("lit", ch) / ("spec", "Y"|"m"|"d"|"b") items."""
-    from .logformat import _strftime_tokens
-
-    spec_map = {"%Y": "Y", "%m": "m", "%d": "d", "%b": "b", "%h": "b"}
-    runs: list = []
-    cur: list = []
-    for kind, tok in _strftime_tokens(fmt):
-        if kind == "spec" and tok in spec_map:
-            cur.append(("spec", spec_map[tok]))
-        elif kind == "lit":
-            cur.append(("lit", tok))
-        else:
-            if cur:
-                runs.append(cur)
-            cur = []
-    if cur:
-        runs.append(cur)
-    for run in runs:
-        specs = {t for k, t in run if k == "spec"}
-        if "Y" in specs and "d" in specs and ("m" in specs or "b" in specs):
-            return tuple(run)
-    return None
-
-
-# epoch digit-prefix derivation only pays when the parse it skips is
-# expensive (r11 A/B: 9-field combined 0.84->0.67 s, 3-field no win —
-# the prefix Contains costs more than the short regex), so formats with
-# fewer capture groups skip it entirely
-EPOCH_MIN_FIELDS = 6
-
-
-def pushdown_context(parsed: ParsedFormat, schema: list):
-    """PushdownContext for a scan of ``parsed`` emitting ``schema``
-    (name, type) pairs — what sources/pushdown.py may assume VERBATIM
-    (shared by the batch reader and the streaming source):
-
-    - strings: regex captures emitted unchanged — excludes %X's
-      remapped close/keepalive/aborted values and log_file;
-    - ints: digit tokens (try_cast);
-    - ts_day_cols: timestamp columns whose raw text is the
-      deterministic Apache %t layout `[dd/MMM/yyyy:HH:mm:ss Z]` —
-      single plain-%t groups only (a combined epoch/strftime/frac
-      group's raw text is NOT that layout, so day needles would be
-      unsound there)."""
-    from collections import Counter as _Counter
-
-    from .logformat import BIGINT as _BI, INTEGER as _IN, VARCHAR as _VC, TsFormat
-    from .pushdown import PushdownContext
-
-    non_verbatim = {
-        f.column_name for f in parsed.fields if f.directive == "%X"
-    } | {"log_file"}
-    vstr = {n for n, t in schema if t == _VC and n not in non_verbatim}
-    vint = {n for n, t in schema if t in (_IN, _BI)}
-    _tgrp = _Counter(
-        f.timestamp_group_id
-        for f in parsed.fields
-        if f.directive == "%t" and not f.should_skip
-    )
-    ts_day = {
-        f.column_name
-        for f in parsed.fields
-        if f.directive == "%t"
-        and not f.should_skip
-        and f.timestamp_type == TsFormat.APACHE_DEFAULT
-        and _tgrp[f.timestamp_group_id] == 1
-    }
-    # single strftime-%t fields whose format contains %Y: the 4-digit
-    # year renders verbatim in the matched text (translate_strftime
-    # maps %Y -> yyyy), so bounded year sets push as bare-digit needles
-    from .logformat import _strftime_tokens
-
-    def _has_year_token(fmt: str) -> bool:
-        # token walk, not substring: '%%Y' is a literal '%'+'Y', which
-        # renders no 4-digit year (a substring test would push UNSOUND
-        # bare-year needles there)
-        return any(k == "spec" and t == "%Y" for k, t in _strftime_tokens(fmt))
-
-    ts_year = {
-        f.column_name
-        for f in parsed.fields
-        if f.directive == "%t"
-        and not f.should_skip
-        and f.timestamp_type == TsFormat.STRFTIME
-        and _has_year_token(f.strftime_format)
-        and _tgrp[f.timestamp_group_id] == 1
-    }
-    # single strftime-%t fields whose format renders a CONTIGUOUS full
-    # date (%Y-%m-%d / %d/%b/%Y style): bounded ranges push day-level
-    # full-date needles instead of degrading to bare year digits
-    ts_date = {}
-    for f in parsed.fields:
-        if (
-            f.directive == "%t"
-            and not f.should_skip
-            and f.timestamp_type == TsFormat.STRFTIME
-            and _tgrp[f.timestamp_group_id] == 1
-        ):
-            run = _date_token_run(f.strftime_format)
-            if run is not None:
-                ts_date[f.column_name] = run
-    # single epoch %t fields: the raw token is the decimal epoch value,
-    # so bounded ranges push digit-prefix needle covers — but only when
-    # the parse the needles skip is expensive enough to beat the byte
-    # scan (EPOCH_MIN_FIELDS gate)
-    _epoch_unit = {
-        TsFormat.EPOCH_SEC: 1_000_000,
-        TsFormat.EPOCH_MSEC: 1_000,
-        TsFormat.EPOCH_USEC: 1,
-    }
-    ts_epoch = {}
-    if parsed.num_capture_groups >= EPOCH_MIN_FIELDS:
-        ts_epoch = {
-            f.column_name: _epoch_unit[f.timestamp_type]
-            for f in parsed.fields
-            if f.directive == "%t"
-            and not f.should_skip
-            and f.timestamp_type in _epoch_unit
-            and _tgrp[f.timestamp_group_id] == 1
-        }
-    return PushdownContext(
-        verbatim_str=vstr,
-        verbatim_int=vint,
-        ts_day_cols=ts_day,
-        ts_year_cols=ts_year,
-        ts_epoch_cols=ts_epoch,
-        ts_date_cols=ts_date,
     )
 
 

@@ -30,8 +30,8 @@ from ..sources.logformat import (
     generate_schema,
     parse_format_string,
 )
-from ..sources.pushdown import LineFilterableFrame
-from ..sources.reader import _apply_program, _line_keep, _program, _schema_json, pushdown_context
+from ..sources.pushdown import LineFilterableFrame, pushdown_context
+from ..sources.reader import _apply_program, _line_keep, _program, _schema_json
 
 
 def read_httpd_log_stream(

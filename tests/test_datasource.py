@@ -13,7 +13,8 @@ from .conftest import data
 
 @pytest.fixture(scope="module", autouse=True)
 def _register(spark):
-    register_datasource(spark)
+    with pytest.warns(DeprecationWarning, match=r"createOrReplaceTempView.*read_httpd_log_stream"):
+        register_datasource(spark)
 
 
 def _rows(df):

@@ -146,7 +146,7 @@ def test_cross_directive_collision_suffixes():
         "x_trail_out",
         "x_out",
     }
-    assert cols[-2] == "x"or True
+    assert cols[-3] == "x"
 
 
 def test_collision_in_wins_base_name():

@@ -8,6 +8,7 @@ import re
 
 import duckdb_httpd_log_spark.operators  # noqa: F401
 from duckdb_httpd_log_spark import read_httpd_log
+from duckdb_httpd_log_spark.plans.metrics import executed_plan
 from duckdb_httpd_log_spark.plans.registry import REGISTRY
 
 from .conftest import data
@@ -17,34 +18,6 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _executed(df) -> str:
-    """What executing ``df`` runs: one line per physical node, with each
-    pinned (cached) subtree listed once. ``_plan`` prints a pinned
-    subtree under every reference to it."""
-    jvm, lines, seen = df.sparkSession._jvm, [], set()
-
-    def walk(node):
-        name = node.nodeName()
-        if name == "AdaptiveSparkPlan":
-            return walk(node.executedPlan())
-        if "QueryStage" in name:
-            return walk(node.plan())
-        lines.append(node.simpleString(25))
-        if name == "InMemoryTableScan":
-            rel = node.relation()
-            key = jvm.System.identityHashCode(rel.cacheBuilder())
-            if key not in seen:
-                seen.add(key)
-                walk(rel.cachedPlan())
-        for kids in (node.children(), node.subqueries()):
-            it = kids.iterator()
-            while it.hasNext():
-                walk(it.next())
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return "\n".join(lines)
 
 
 def test_join_agg_broadcasts_dimensions(spark):
@@ -246,7 +219,7 @@ def test_tfidf_pairs_materializes_weights_once(spark):
     # the df-capped weight table feeds norms AND both pair-join sides;
     # the pin must collapse the plan to one scan chain per derivation
     # (unpinned: 12 parquet scans / 38 aggregates)
-    plan = _executed(REGISTRY["corpus_tfidf_pairs"].spark_fn(spark, SF_DIR))
+    plan = executed_plan(REGISTRY["corpus_tfidf_pairs"].spark_fn(spark, SF_DIR))
     assert plan.count("FileScan parquet") <= 3
     assert "TakeOrderedAndProject" in plan  # top-k, not a global sort
     assert "SortMergeJoin" not in plan
@@ -257,7 +230,7 @@ def test_pq_topk_scan_and_join_shape(spark):
     # aggregate, which runs once; the exact-refine stage re-reads the
     # corpus for the two embedding sides but never sort-merges —
     # candidates and queries broadcast (unpinned: 10 parquet scans)
-    plan = _executed(REGISTRY["ann_pq_topk"].spark_fn(spark, SF_DIR))
+    plan = executed_plan(REGISTRY["ann_pq_topk"].spark_fn(spark, SF_DIR))
     assert plan.count("FileScan parquet") <= 8
     assert "SortMergeJoin" not in plan
 
@@ -304,7 +277,7 @@ def test_two_phase_rank_ops_partition_local(spark):
             "events_session_stats",
             "orders_customer_lifespan",
         ]:
-            plan = _executed(REGISTRY[name].spark_fn(spark, SF_DIR))
+            plan = executed_plan(REGISTRY[name].spark_fn(spark, SF_DIR))
             assert "pid" in plan, name
     finally:
         spark.conf.unset("spark.graft.distrank.naiveMaxBytes")
@@ -366,7 +339,7 @@ def test_r12_ops_plan_shapes(spark):
     spine (broadcast)."""
     spark.conf.set("spark.graft.distrank.naiveMaxBytes", "0")
     try:
-        plan = _executed(REGISTRY["corpus_global_shuffle"].spark_fn(spark, SF_DIR))
+        plan = executed_plan(REGISTRY["corpus_global_shuffle"].spark_fn(spark, SF_DIR))
         assert "pid" in plan
     finally:
         spark.conf.unset("spark.graft.distrank.naiveMaxBytes")
@@ -422,7 +395,7 @@ def test_r14_pca_and_eval_pins_collapse_fanout(spark):
         ("emb_pca_power_step", 3, 14),
         ("dedup_minhash_eval", 2, 18),
     ]:
-        plan = _executed(REGISTRY[name].spark_fn(spark, SF_DIR))
+        plan = executed_plan(REGISTRY[name].spark_fn(spark, SF_DIR))
         assert plan.count("Scan parquet") <= max_scans, name
         assert plan.count("Exchange") <= max_exchanges, (name, plan.count("Exchange"))
 
@@ -446,7 +419,7 @@ def test_r14_arrow_kernels_evaluate_once(spark):
         ("ann_knn_graph", 3),
         ("ann_lsh_trained_topk", 3),
     ]:
-        plan = _executed(REGISTRY[name].spark_fn(spark, SF_DIR))
+        plan = executed_plan(REGISTRY[name].spark_fn(spark, SF_DIR))
         n = plan.count("ArrowEvalPython")
         assert n <= want, f"{name}: {n} ArrowEvalPython nodes (want <= {want})"
 
@@ -487,7 +460,7 @@ def test_r15_fanout_pins_collapse_scans(spark):
         ("text_dsir_weights", 2, 12),
         ("text_heaps_law", 2, 18),
     ]:
-        plan = _executed(REGISTRY[name].spark_fn(spark, SF_DIR))
+        plan = executed_plan(REGISTRY[name].spark_fn(spark, SF_DIR))
         n_scans = plan.count("FileScan parquet")
         assert n_scans <= max_scans, f"{name}: {n_scans} parquet scans"
         n_ex = plan.count("Exchange")
@@ -503,6 +476,6 @@ def test_r15_funnel_latency_uses_cache_substitution(spark):
     # cascade runs once: one events scan per pinned stage. Unpinned, the
     # latency query runs 8 scans / 15 Exchanges and q17 6 / 11.
     for name, max_exchanges in [("events_funnel_latency", 12), ("q17_funnel", 8)]:
-        plan = _executed(REGISTRY[name].spark_fn(spark, SF_DIR))
+        plan = executed_plan(REGISTRY[name].spark_fn(spark, SF_DIR))
         assert plan.count("FileScan parquet") <= 3, name
         assert plan.count("Exchange") <= max_exchanges, (name, plan.count("Exchange"))

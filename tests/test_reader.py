@@ -87,9 +87,7 @@ def test_status_original_final(spark):
     df = read_httpd_log(
         spark,
         data("directives", "original_final.log"),
-        format_str='%h %l %u %t "%r" %s %>s %b'.replace("%s %>s", "%>s %b")  # guard no-op
-        if False
-        else '%h %l %u %t "%r" %>s %b',
+        format_str='%h %l %u %t "%r" %>s %b',
     )
     assert df.count() == 3
 

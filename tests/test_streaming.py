@@ -819,10 +819,10 @@ def test_stream_year_and_epoch_needles_no_mtime(spark, tmp_path, monkeypatch):
     )
     # r12: epoch derivation is cost-gated; lift the gate for this cheap
     # 3-field fixture so the streaming derivation itself is exercised
-    from duckdb_httpd_log_spark.sources import reader
+    from duckdb_httpd_log_spark.sources import pushdown
 
     with monkeypatch.context() as m:
-        m.setattr(reader, "EPOCH_MIN_FIELDS", 0)
+        m.setattr(pushdown, "EPOCH_MIN_FIELDS", 0)
         es = read_httpd_log_stream(spark, str(edir), format_str="%h %{sec}t %>s")
         eb = es.filter(
             F.col("timestamp").between("2024-10-01 00:00:00", "2024-10-01 23:59:59")

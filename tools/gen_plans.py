@@ -208,7 +208,8 @@ NODES = [
 HEADER = """# PLANS — physical-plan evidence at sf0.01 (`local[8]`, AQE on)
 
 Generated by `python tools/gen_plans.py` (re-run after plan-affecting
-changes). Node counts from `queryExecution().executedPlan()`; these are
+changes). Node counts from `plans.metrics.executed_plan`: the physical
+nodes that run, each pinned (cached) subtree counted once; these are
 the shapes `tests/test_plans.py` pins as regression contracts.
 """
 
@@ -278,6 +279,7 @@ NOTES = {
 
 def main() -> None:
     from duckdb_httpd_log_spark import get_spark
+    from duckdb_httpd_log_spark.plans.metrics import executed_plan
     from duckdb_httpd_log_spark.plans.registry import REGISTRY
     import duckdb_httpd_log_spark.operators  # noqa: F401
 
@@ -292,7 +294,7 @@ def main() -> None:
         qd = REGISTRY[name]
         df = qd.spark_fn(spark, sf_dir)
         df.count()  # run so AQE finalizes the adaptive plan
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(df)
         out.append(f"## {name}\n\n{qd.description}\n")
         out.extend(summarize(plan, _formatted_plan(df)))
         if name in NOTES:
