@@ -9,38 +9,14 @@ Public API:
     read_httpd_log(spark, path, format_type=, format_str=, conf=, raw=)
     read_httpd_conf(spark, path)
     get_spark() — tuned local session helper
-    register_datasource(spark) — deprecated: enable spark.read.format("httpd_log")
+    register_log_view(spark, name, path, ...) — the SQL surface: a temp
+        view over read_httpd_log
 """
-
-import warnings
 
 from .session import get_spark, register_tables
 from .sources.conf import read_httpd_conf
 from .sources.reader import read_httpd_log
 from .sources.writer import write_httpd_log
-
-
-def register_datasource(spark) -> None:
-    """Register the `httpd_log` Python Data Source on this session, making
-    logs readable via ``spark.read.format("httpd_log").load(path)``.
-
-    Deprecated: it parses every line in Python. For SQL use
-    ``read_httpd_log(...).createOrReplaceTempView(name)`` (or
-    ``register_log_view``), whose log_file predicates Spark's file index
-    prunes; for streams use ``read_httpd_log_stream``."""
-    warnings.warn(
-        'format("httpd_log") is deprecated: use '
-        "read_httpd_log(...).createOrReplaceTempView(...) for SQL and "
-        "read_httpd_log_stream(...) for streams",
-        DeprecationWarning,
-        stacklevel=2,
-    )
-    from .sources.datasource import HttpdLogDataSource
-
-    # the reader implements pushFilters(); Spark refuses such sources
-    # unless python filter pushdown is switched on
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(HttpdLogDataSource)
 
 
 def register_log_view(spark, name: str, path, **kwargs) -> None:
@@ -58,7 +34,6 @@ __all__ = [
     "write_httpd_log",
     "read_httpd_conf",
     "get_spark",
-    "register_datasource",
     "register_log_view",
     "register_tables",
 ]

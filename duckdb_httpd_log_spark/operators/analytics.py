@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.portable import dlit, pexp, pln, pln_ratio, pln_stages, stage_subselects, with_stages
-from ..plans.registry import fround, register, table
+from ..plans.registry import decode_embedding, fround, register, table
 from .distrank import with_grouped_rank
 from .events import funnel_firsts
 from .pins import pin
@@ -849,12 +849,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(PQANN_CODES)
         .withColumn("rn", F.row_number().over(Window.orderBy("mk", "vec_id")))
     )
-    rawvals = emb.select("vec_id", F.posexplode("embedding").alias("pos", "xf")).select(
-        "vec_id",
-        (F.col("pos") / PQANN_SUBDIM).cast("int").alias("sub"),
-        "pos",
-        F.col("xf").cast("double").alias("x0"),
-    )
+    rawvals = decode_embedding(emb, "vec_id", subdim=PQANN_SUBDIM)
     nrm = rawvals.groupBy("vec_id").agg(
         F.greatest(F.sqrt(F.sum(F.col("x0") * F.col("x0"))), F.lit(1e-300)).alias("nv")
     )
@@ -2021,9 +2016,7 @@ EMB_DIM_TOP = 10
 )
 def emb_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    raw = emb.select(F.posexplode("embedding").alias("pos", "xf")).select(
-        "pos", F.col("xf").cast("double").alias("x0")
-    )
+    raw = decode_embedding(emb)
     m = raw.agg(F.greatest(F.max(F.abs("x0")), F.lit(1e-300)).alias("m0"))
     vals = raw.crossJoin(F.broadcast(m)).select(
         "pos", (F.col("x0") / F.col("m0")).alias("x")
@@ -2854,9 +2847,7 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    raw = emb.select("label", F.posexplode("embedding").alias("pos", "xf")).select(
-        "label", "pos", F.col("xf").cast("double").alias("x0")
-    )
+    raw = decode_embedding(emb, "label")
     m = raw.agg(F.greatest(F.max(F.abs("x0")), F.lit(1e-300)).alias("m0"))
     vals = raw.crossJoin(F.broadcast(m)).select(
         "label", "pos", (F.col("x0") / F.col("m0")).alias("x")

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.portable import LN2, pln, pln_stages, stage_subselects, with_stages
-from ..plans.registry import fround, REGISTRY, register, share_expr, share_sql, table
+from ..plans.registry import decode_embedding, fround, REGISTRY, register, share_expr, share_sql, table
 from .pins import pin
 
 # Portable-ln snippets (plans/portable.py) spliced verbatim into both
@@ -897,9 +897,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    raw = emb.select("vec_id", F.posexplode("embedding").alias("pos", "xf")).select(
-        "vec_id", "pos", F.col("xf").cast("double").alias("x0")
-    )
+    raw = decode_embedding(emb, "vec_id")
     # r14: m (1 row) is read by vals, w and the final select; u (DIM
     # rows) by the matvec result, mu and the final select — unpinned,
     # Catalyst re-derives each subtree per reference (the
@@ -1348,9 +1346,7 @@ OUTLIER_FACTOR = 1.5
 )
 def emb_outlier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    raw = emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "xf")
-    ).select("vec_id", "label", "pos", F.col("xf").cast("double").alias("x0"))
+    raw = decode_embedding(emb, "vec_id", "label")
     # magnitude normalization (exact max aggregate) so the quantized
     # distance terms can never overflow BIGINT at any input scale; the
     # reported mean_dist un-scales by m0, and both the assignment and
@@ -1722,12 +1718,7 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = seeds4.withColumn(
         "rn", F.row_number().over(Window.orderBy("mk", "vec_id"))
     )
-    rawvals = emb.select("vec_id", F.posexplode("embedding").alias("pos", "xf")).select(
-        "vec_id",
-        (F.col("pos") / PQ_SUBDIM).cast("int").alias("sub"),
-        "pos",
-        F.col("xf").cast("double").alias("x0"),
-    )
+    rawvals = decode_embedding(emb, "vec_id", subdim=PQ_SUBDIM)
     # magnitude normalization (exact max aggregate): bounded quantized
     # distance terms at any input scale; assignment is scale-invariant
     # and mean_dist2 un-scales by m0^2 (see emb_pca_power_step)
@@ -2196,9 +2187,7 @@ def events_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_pca_power_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    raw = emb.select("vec_id", F.posexplode("embedding").alias("pos", "xf")).select(
-        "vec_id", "pos", F.col("xf").cast("double").alias("x0")
-    )
+    raw = decode_embedding(emb, "vec_id")
     # r14 (guide §1.2/§2.4): m is a 1-row global and u1/u2 are DIM-row
     # vectors, but each is REFERENCED 2-3x downstream (normed(u) alone
     # reads u twice; the final select reads u2 + normed(u2) + m) and

@@ -80,6 +80,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def decode_embedding(emb: DataFrame, *keep: str, subdim: Optional[int] = None) -> DataFrame:
+    """One row per embedding component: ``(*keep, [sub,] pos, x0)``, its
+    0-based position ``pos`` and value ``x0`` as a double. With
+    ``subdim``, ``sub`` is the product-quantization sub-vector of the
+    component (``pos / subdim``)."""
+    sub = [] if subdim is None else [(F.col("pos") / subdim).cast("int").alias("sub")]
+    return emb.select(*keep, F.posexplode("embedding").alias("pos", "xf")).select(
+        *keep, *sub, "pos", F.col("xf").cast("double").alias("x0")
+    )
+
+
 def fround(col, scale: int = 0):
     """Engine-portable quantization: floor(x·10^scale + 0.5)/10^scale.
 

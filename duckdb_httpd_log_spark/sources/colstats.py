@@ -64,8 +64,6 @@ listing-time skip of that file.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import functions as F
 
 # (reader-config fingerprint, path) -> ((mtime, size), {col: (lo, hi)});
@@ -75,57 +73,10 @@ from pyspark.sql import functions as F
 # narrower row view (r13 ADVICE high).
 _COLSTATS: dict[tuple, tuple] = {}
 # second-touch counters for the auto policy; insert-capped at _CAP
-# (entries for rotated files persist, bounded memory)
+# (entries for rotated files persist, bounded memory). Both live in
+# this process only: a new process gathers its stats afresh.
 _TOUCH: dict[tuple, int] = {}
 _CAP = 1_000_000
-
-# --- persistent sidecar (streaming colstats, r14) ---------------------------
-# A stream only ever reads NEW files, so an in-process cache can never
-# serve its own prune: the payoff is COLD-START over a directory with
-# history (a fresh alerting query over 10k rotated files skips every
-# file whose range can't satisfy the value filter) — which crosses
-# process boundaries. Opt-in via the datasource's colstats_dir option:
-# one tiny JSON per (reader-fingerprint, file), written atomically
-# (tmp + rename), validated against a fresh (mtime, size) stat before
-# every use exactly like the in-memory entries.
-
-
-def _persist_name(fp: str, path: str) -> str:
-    import hashlib
-
-    return hashlib.md5(f"{fp}\x00{path}".encode()).hexdigest() + ".json"
-
-
-def load_persisted(dirpath: str, fp: str, path: str) -> Optional[tuple]:
-    """((mtime, size), {col: (lo, hi)}) or None — NOT freshness-checked
-    (callers compare the sig against a fresh stat, same as memory)."""
-    import json
-    import os
-
-    try:
-        with open(os.path.join(dirpath, _persist_name(fp, path))) as fh:
-            doc = json.load(fh)
-        sig = tuple(doc["sig"])
-        stats = {c: (v[0], v[1]) for c, v in doc["stats"].items()}
-        return (sig, stats)
-    except (OSError, ValueError, KeyError, TypeError):
-        return None
-
-
-def persist(dirpath: str, fp: str, path: str, sig: tuple, stats: dict) -> None:
-    import json
-    import os
-    import tempfile
-
-    try:
-        os.makedirs(dirpath, exist_ok=True)
-        doc = {"path": path, "fp": fp, "sig": list(sig), "stats": stats}
-        fd, tmp = tempfile.mkstemp(dir=dirpath, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, os.path.join(dirpath, _persist_name(fp, path)))
-    except OSError:
-        pass  # persistence is an optimization — never fail the read
 
 
 def narrow(req: dict, col: str, lo, hi) -> None:

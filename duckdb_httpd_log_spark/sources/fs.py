@@ -24,9 +24,11 @@ Scheme routing:
 from __future__ import annotations
 
 import glob as _glob
+import gzip as _gzip
+import io
 import os
 import re
-from typing import Optional, Sequence, Union
+from typing import Iterator, Optional, Sequence, Union
 from urllib.parse import urlsplit
 
 from pyspark.sql import SparkSession
@@ -139,7 +141,7 @@ _PA_SCHEME_MAP = {"s3a": "s3", "gs": "gcs"}
 def _pyarrow_fs(path: str):
     """(pyarrow FileSystem, fs-relative path, original scheme, URI
     authority) — the session-less fallback used where no JVM gateway
-    exists (Python DataSource planning, streaming python workers)."""
+    exists (Python workers, e.g. raw mode's per-file line streamer)."""
     import pyarrow.fs as pafs
 
     scheme = scheme_of(path)
@@ -230,9 +232,8 @@ def expand_remote(spark: Optional[SparkSession], pattern: str) -> list[str]:
     full URIs, mirroring the local `expand_paths` semantics: directories
     recurse, globs expand (glob hits that are directories recurse too),
     missing paths yield []. With no SparkSession in reach (Python
-    DataSource planning / streaming workers have no JVM gateway) the
-    expansion falls back to pyarrow.fs — same glob semantics either way
-    (`_glob_to_regex`)."""
+    workers have no JVM gateway) the expansion falls back to pyarrow.fs
+    — same glob semantics either way (`_glob_to_regex`)."""
     spark = _session_or_none(spark)
     if spark is None:
         return _expand_remote_pyarrow(pattern)
@@ -335,6 +336,102 @@ def read_all(spark: Optional[SparkSession], path: str) -> bytes:
         return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
         stream.close()
+
+
+_STREAM_CHUNK = 1 << 21  # 2 MiB, the reference's buffer size
+# (src/httpd_log_buffered_reader.cpp:5-57)
+
+
+def _iter_byte_lines(chunks: "Iterator[bytes]") -> Iterator[tuple[int, str]]:
+    """(1-based line_number, CR-stripped line) pairs from a byte-chunk
+    stream. Splitting on b'\\n' BEFORE decoding is safe: 0x0A never
+    appears inside a UTF-8 multi-byte sequence, so a code point split
+    across chunks always reassembles within its line. A trailing
+    newline produces no phantom final line."""
+    buf = b""
+    i = 0
+    for chunk in chunks:
+        if not chunk:
+            continue
+        buf += chunk
+        parts = buf.split(b"\n")
+        buf = parts.pop()
+        for part in parts:
+            i += 1
+            yield i, part.decode("utf-8", errors="replace").rstrip("\r")
+    if buf:
+        i += 1
+        yield i, buf.decode("utf-8", errors="replace").rstrip("\r")
+
+
+def _iter_remote_lines(fname: str) -> Iterator[tuple[int, str]]:
+    """Streamed lines via pyarrow.fs — usable on EXECUTORS (Python
+    workers have no JVM gateway, so the Hadoop FileSystem route used at
+    bind time is not available here). Memory is O(chunk), never
+    O(file): raw-mode reads of multi-GB remote logs stream through the
+    same 2 MiB buffer as local ones. gzip is inflated incrementally
+    (multi-member aware, like gzip.decompress)."""
+    import zlib
+
+    fs, rel, _, _ = _pyarrow_fs(fname)
+    with fs.open_input_stream(rel) as stream:
+        first = stream.read(2)
+
+        def raw_chunks():
+            if first:
+                yield first
+            while True:
+                c = stream.read(_STREAM_CHUNK)
+                if not c:
+                    break
+                yield c
+
+        if first == b"\x1f\x8b":
+
+            def gz_chunks():
+                d = zlib.decompressobj(wbits=31)
+                data = first
+                while True:
+                    if not data:
+                        data = stream.read(_STREAM_CHUNK)
+                        if not data:
+                            break
+                    if d.eof:  # next gzip member in a concatenated file
+                        d = zlib.decompressobj(wbits=31)
+                    out = d.decompress(data)
+                    if out:
+                        yield out
+                    data = d.unused_data
+                if not d.eof:
+                    # stream ended mid-member: match the local gzip.open
+                    # path (and gzip.decompress) instead of silently
+                    # yielding a truncated tail
+                    raise EOFError(f"truncated gzip stream: {fname}")
+
+            chunks = gz_chunks()
+        else:
+            chunks = raw_chunks()
+        yield from _iter_byte_lines(chunks)
+
+
+def iter_log_lines(fname: str) -> Iterator[tuple[int, str]]:
+    """(1-based line_number, CR-stripped line) pairs; gzip sniffed by
+    magic bytes like the reference's AUTO_DETECT compression. Paths with
+    a URI scheme stream through pyarrow.fs (file/s3/hdfs/gcs); local
+    paths stream through buffered python I/O. Either way memory is
+    bounded by the 2 MiB buffer, never file size."""
+    if has_scheme(fname):
+        yield from _iter_remote_lines(fname)
+        return
+    with open(fname, "rb") as fh:
+        magic = fh.read(2)
+    if magic == b"\x1f\x8b":
+        stream = io.TextIOWrapper(_gzip.open(fname, "rb"), encoding="utf-8", errors="replace")
+    else:
+        stream = open(fname, "r", encoding="utf-8", errors="replace")
+    with stream:
+        for i, line in enumerate(stream, start=1):
+            yield i, line.rstrip("\n").rstrip("\r")
 
 
 def file_sigs(

@@ -43,7 +43,6 @@ from pyspark.sql import types as T
 
 from . import exprs as X
 from . import fs as FS
-from .fs import expand_paths  # re-exported: bind-time path expansion lives in fs.py
 from .conf import parse_config_file
 from .logformat import (
     BOOLEAN,
@@ -569,7 +568,7 @@ def read_httpd_log(
     The fast-mode plan is built on first use, not here (a pushed-down
     filter builds only its re-planned scan), so a text-scan error
     surfaces then."""
-    files = expand_paths(path, spark)
+    files = FS.expand_paths(path, spark)
     parsed, _ftype, raw_mode = resolve_format(files, format_type, format_str, conf, raw, spark)
     if not files:
         raise ValueError("No files found for httpd log reading")
@@ -721,8 +720,7 @@ def _raw_lines_df(spark: SparkSession, files: list[str]) -> DataFrame:
 
     import pandas as pd
 
-    from .fs import has_scheme
-    from .pyconvert import iter_log_lines
+    from .fs import has_scheme, iter_log_lines
 
     # absolutize local paths so log_file matches the fast path's
     # normalized _metadata.file_path form (absolute, file: URI stripped)

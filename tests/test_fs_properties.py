@@ -143,7 +143,7 @@ def test_iter_byte_lines_chunk_boundaries():
     pairs — including a multi-byte UTF-8 code point split across
     chunks, CRLF endings, and a trailing newline producing no phantom
     line."""
-    from duckdb_httpd_log_spark.sources.pyconvert import _iter_byte_lines
+    from duckdb_httpd_log_spark.sources.fs import _iter_byte_lines
 
     text = "alpha β\r\nmiddle é line\nlast"  # no trailing newline
     data = text.encode("utf-8")
@@ -162,7 +162,7 @@ def test_iter_remote_lines_streams_multimember_gzip(tmp_path):
     semantics) with continuous line numbers."""
     import gzip
 
-    from duckdb_httpd_log_spark.sources.pyconvert import iter_log_lines
+    from duckdb_httpd_log_spark.sources.fs import iter_log_lines
 
     p = tmp_path / "multi.log.gz"
     with open(p, "wb") as fh:

@@ -541,6 +541,13 @@ def test_line_filter_prefilters_before_parse(spark):
     # (no second regexp execution, no post-parse contains)
     plan = filtered._jdf.queryExecution().executedPlan().toString()
     assert "Contains(value" in plan.replace(" ", "") or "Contains" in plan
+    # raw mode ignores it: its per-file line numbers count every line
+    errs = data("common", "with_errors.log")
+    got, want = (
+        sorted(map(tuple, read_httpd_log(spark, errs, raw=True, **kw).collect()), key=repr)
+        for kw in ({"line_filter": "no-such-needle"}, {})
+    )
+    assert got == want and len(got) == 5
 
 
 def test_raw_mode_streams_large_file_bounded_memory(tmp_path):

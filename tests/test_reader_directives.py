@@ -1,13 +1,19 @@
 """Second e2e batch: directives not covered in test_reader.py — server
 names, peer host/IP, trailers, header collisions with data, duplicate
 directives, status original/final values, %b/%B merge values, conf glob,
-and observation metrics."""
+observation metrics, and the typed value of every directive family on
+randomized formats."""
 
+from datetime import datetime, timedelta
+
+from hypothesis import given, settings
 from pyspark.sql import functions as F
 
 from duckdb_httpd_log_spark import read_httpd_conf, read_httpd_log
+from duckdb_httpd_log_spark.sources.logformat import parse_format_string
 
 from .conftest import data
+from .test_logformat_properties import _sample_value, format_strings
 
 
 def test_server_name_v_and_V(spark):
@@ -157,3 +163,81 @@ def test_observe_metrics(spark):
     assert m["total_rows"] == 5
     assert m["parse_errors"] == 2
     assert m["files_processed"] == 1
+
+
+# --- randomized typed values: every directive family's conversion -------------
+# `_sample_value` gives each directive one constant sample, so the typed
+# value read_httpd_log must produce for it is a constant too.
+_TS = datetime(2000, 10, 10, 20, 55, 36)  # 13:55:36 -0700, in session UTC
+_EXPECTED = {
+    # %t family: a base field gives the instant, a *_frac field the
+    # fraction its group adds to it
+    "%t": _TS,
+    "%{sec}t": _TS,
+    "%{msec}t": _TS + timedelta(milliseconds=123),
+    "%{usec}t": _TS + timedelta(microseconds=123456),
+    "%{msec_frac}t": timedelta(milliseconds=123),
+    "%{usec_frac}t": timedelta(microseconds=123456),
+    # durations: %D and %{us}T count µs, %{ms}T ms, %T and %{s}T seconds
+    "%D": timedelta(microseconds=1234),
+    "%{us}T": timedelta(microseconds=1234),
+    "%{ms}T": timedelta(milliseconds=1234),
+    "%T": timedelta(seconds=1234),
+    "%{s}T": timedelta(seconds=1234),
+    "%X": "keepalive",
+    "%{hextid}P": "7f9a",
+    **dict.fromkeys(
+        ["%p", "%k", "%P", "%{canonical}p", "%{local}p", "%{remote}p",
+         "%{pid}P", "%{tid}P", "%s", "%>s", "%<s", "%B", "%b", "%I", "%O",
+         "%S", "%{Content-Length}i", "%{Age}o", "%{Max-Forwards}i"],
+        1234,
+    ),
+}
+# %r's (method, path, query_string, protocol): unquoted, the sample is one
+# token, which leaves too few to decompose
+_REQUEST = {True: ("GET", "/x", "?a=1", "HTTP/1.1"), False: ("", "", None, "")}
+
+
+def _expected_row(parsed) -> list:
+    def value(f):
+        return _EXPECTED.get(parsed.original_format_str[f.raw_start:f.raw_end], "val-x")
+
+    out = []
+    for f in parsed.fields:
+        if f.should_skip:
+            continue
+        if f.directive == "%t":
+            base, frac = None, timedelta(0)
+            for i in parsed.timestamp_groups[f.timestamp_group_id].field_indices:
+                v = value(parsed.fields[i])
+                if isinstance(v, datetime):
+                    base = v
+                else:
+                    frac = v
+            out.append(None if base is None else base + frac)
+        elif f.directive == "%r":
+            skip = (f.skip_method, f.skip_path, f.skip_query_string, f.skip_protocol)
+            out.extend(v for v, s in zip(_REQUEST[f.is_quoted], skip) if not s)
+        else:
+            out.append(value(f))
+    return out
+
+
+@given(format_strings())
+@settings(max_examples=25, deadline=None, derandomize=True)
+def test_random_format_typed_values(spark, tmp_path_factory, fmt):
+    """For arbitrary directive combinations, each typed column of
+    read_httpd_log on a synthetic line equals the directive's expected
+    value (timestamp groups resolved from ``parsed.timestamp_groups``)."""
+    vals = []
+    for tok in fmt.split(" "):
+        if tok.startswith('"') and tok.endswith('"'):
+            vals.append(f'"{_sample_value(tok[1:-1])}"')
+        else:
+            v = _sample_value(tok)
+            vals.append(v if v.startswith("[") else v.replace(" ", "_"))
+    p = tmp_path_factory.mktemp("typed") / "synthetic.log"
+    p.write_text(" ".join(vals) + "\n")
+    want = _expected_row(parse_format_string(fmt))
+    rows = read_httpd_log(spark, str(p), format_str=fmt).collect()
+    assert [list(r)[: len(want)] for r in rows] == [want], fmt

@@ -14,6 +14,10 @@ from duckdb_httpd_log_spark.streaming.log_stream import (
 from .conftest import data
 
 
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
 def _run_stream(df, name):
     q = (
         df.writeStream.format("memory")
@@ -29,6 +33,12 @@ def _run_stream(df, name):
 def test_stream_parses_arriving_files(spark, tmp_path):
     logdir = tmp_path / "logs"
     logdir.mkdir()
+    # an explicit format binds on an empty directory: no rows yet
+    empty = read_httpd_log_stream(spark, str(logdir), format_type="combined")
+    assert empty.isStreaming and "user_agent" in empty.columns
+    _run_stream(empty, "stream_parse_empty")
+    assert spark.sql("SELECT * FROM stream_parse_empty").count() == 0
+
     shutil.copy(data("common", "sample.log"), logdir / "a.log")
     shutil.copy(data("common", "with_errors.log"), logdir / "b.log")
 
@@ -36,8 +46,11 @@ def test_stream_parses_arriving_files(spark, tmp_path):
     assert stream.isStreaming
     _run_stream(stream, "stream_parse")
     out = spark.sql("SELECT * FROM stream_parse")
-    # 6 valid lines in sample.log + 3 valid in with_errors.log
-    assert out.count() == 9
+    # 6 valid lines in sample.log + 3 valid in with_errors.log, the
+    # batch reader's rows
+    got = _rows(out)
+    assert got == _rows(read_httpd_log(spark, str(logdir), format_type="common"))
+    assert len(got) == 9
     assert out.filter(F.col("status") == 200).count() >= 2
     assert "timestamp" in out.columns
 
@@ -929,21 +942,32 @@ def test_stream_prune_new_matching_files_still_flow(spark, tmp_path):
 
 
 def test_stream_prune_value_parity_with_batch(spark, tmp_path):
-    # pruned stream result == batch result of the same predicate
+    # a typed filter on the stream gives the batch rows of the same
+    # predicate: a log_file one (pruned by the file index) and int ones
+    # (raw-line needles below the parse, then the row filter)
     logdir = tmp_path / "logs"
     logdir.mkdir()
     for i, host in enumerate(["1.1.1.1", "2.2.2.2", "3.3.3.3"]):
         _mklog(logdir / f"server{i}.log", host)
-    pred = F.col("log_file").endswith("1.log")
+    # (status, bytes) from (200, 100) and from (500, 900), four rows each
+    for name, st, by in (("s0", 200, 100), ("s2", 500, 900)):
+        (logdir / f"{name}.log").write_text("".join(
+            f'10.0.0.1 - u [10/Oct/2024:01:00:0{j} +0000] '
+            f'"GET /r{j} HTTP/1.1" {st + j} {by + j}\n'
+            for j in range(4)
+        ))
+    preds = {
+        "log_file": (F.col("log_file").endswith("1.log"), 3),
+        "status_bytes": ((F.col("status") >= 500) & (F.col("bytes") < 903), 3),
+        "status_in": (F.col("status").isin(200, 502), 11),
+    }
 
     stream = read_httpd_log_stream(spark, str(logdir), format_type="common")
-    _run_stream(stream.filter(pred), "prune_parity")
-    got = sorted(
-        (r.client_host, r.path) for r in spark.sql("SELECT * FROM prune_parity").collect()
-    )
     batch = read_httpd_log(spark, str(logdir) + "/*.log", format_type="common")
-    want = sorted((r.client_host, r.path) for r in batch.filter(pred).collect())
-    assert got == want and len(got) == 3
+    for name, (pred, n) in preds.items():
+        _run_stream(stream.filter(pred), f"prune_parity_{name}")
+        got = _rows(spark.sql(f"SELECT * FROM prune_parity_{name}"))
+        assert got == _rows(batch.filter(pred)) and len(got) == n, name
 
 
 def test_stream_glob_nesting_safe_with_subdirs(spark, tmp_path):
